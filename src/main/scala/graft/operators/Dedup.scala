@@ -471,12 +471,37 @@ object Dedup {
 
   /** Connected components over near-dup pairs → dedup clusters, each
     * doc labeled with its cluster's minimum id (the canonical survivor).
-    * Each round does (a) one hop of min-label propagation across the
-    * edge list, then (b) a pointer-doubling shortcut — relabel through
-    * the label's own label (`cluster ← label(cluster)`). Hop alone
-    * needs O(diameter) rounds; doubling compresses label CHAINS, but on
-    * adversarial shapes — long paths whose node ids are in random order
-    * along the path — the label forest flattens to per-region local
+    *
+    * Input: pairs (id1, id2); ids absent from any pair are their own
+    * cluster (callers usually only care about docs that appear in pairs).
+    * Output: (id, cluster) — cluster = min id reachable. Ids are never
+    * cast: integral and decimal ids work in both regimes, any other
+    * orderable type (strings, dates) in the local one only, because the
+    * loop's convergence probe sums ids as DECIMAL(38,0).
+    *
+    * Two regimes, picked by the size of the symmetrized edge list (both
+    * directions of every pair, deduplicated). Its checkpoint drain
+    * already counts the rows, so the choice costs no extra job.
+    *  - At or below [[LocalUnionFindEdges]] directed edges: the LOCAL
+    *    regime. The edge blocks are coalesced into one task that runs a
+    *    union-find ([[UnionFind]]) and emits every label: one job after
+    *    the edge cut, whatever the graph's diameter. On this input size a
+    *    distributed round is pure orchestration (jobs × stage latency:
+    *    55 jobs at busy ratio 0.06 for a 2 842-pair graph), so one task
+    *    beats any number of parallel ones.
+    *  - Above it: the distributed LOOP below, the only regime that
+    *    scales past one task's memory (the X=100 5M-node chain probe, real
+    *    corpora). It is kept for exactly that reason; on small inputs it
+    *    is never chosen.
+    * Both regimes return the same rows, columns and types, null ids
+    * included (pinned by `ClustersParitySpec`).
+    *
+    * The LOOP: each round does (a) one hop of min-label propagation
+    * across the edge list, then (b) a pointer-doubling shortcut — relabel
+    * through the label's own label (`cluster ← label(cluster)`). Hop
+    * alone needs O(diameter) rounds; doubling compresses label CHAINS,
+    * but on adversarial shapes — long paths whose node ids are in random
+    * order along the path — the label forest flattens to per-region local
     * minima (doubling becomes a no-op) and progress reverts to
     * region-merge hops, observed at ~2× the ideal log bound (17 rounds
     * on a 2 000-node near-path graph, the sf0.1 embedding-similarity
@@ -484,7 +509,8 @@ object Dedup {
     * input, not a tuning knob — a converged result is exact regardless
     * of round count (labels are monotone non-increasing with a strict-
     * decrease probe), and extra headroom costs nothing when the loop
-    * exits early — so it defaults generously.
+    * exits early — so it defaults generously. It bounds the loop only:
+    * the local regime has no rounds.
     * Each iteration is a bounded number of shuffles on id;
     * `localCheckpoint` truncates the growing lineage so round N's plan
     * doesn't replay rounds 1..N-1 (the standard Spark pattern for
@@ -492,12 +518,8 @@ object Dedup {
     * If the loop exhausts `maxIter` while labels are still changing,
     * this THROWS rather than return silently-wrong clusters.
     *
-    * Input: pairs (id1, id2); ids absent from any pair are their own
-    * cluster (callers usually only care about docs that appear in pairs).
-    * Output: (id, cluster) — cluster = min id reachable.
-    *
     * State lifecycle: every intermediate checkpoint (edges, per-round
-    * labels) is freed as soon as the round that consumed it has
+    * labels) is freed as soon as the step that consumed it has
     * materialized — only the FINAL label table's blocks survive the
     * call (they hold the result). [[clustersScoped]] hands back their
     * release; this convenience overload is for callers whose session
@@ -508,66 +530,120 @@ object Dedup {
   /** [[clusters]] with the result's storage lifecycle in the caller's
     * hands: consume `df`, then `release()`. */
   def clustersScoped(pairs: DataFrame, maxIter: Int = 64): Scoped = {
-    // localCheckpoint truncates LINEAGE but carries the origin plan's
-    // ESTIMATED stats into the checkpoint (LogicalRDD originStats).
-    // In an iterative loop that estimate COMPOUNDS: each round's join
-    // estimate is the product of its children's, the checkpoint bakes
-    // the product in, and the next round multiplies again — the BigInt
-    // sizeInBytes doubles its bit-length every round until Catalyst's
-    // stats visitor spends minutes on million-bit arithmetic and
-    // finally overflows BigInteger (observed at ~25 rounds). Cutting
-    // stats by re-wrapping the checkpointed RDD resets every round to
-    // the default estimate; cost is one row-conversion pass per use of
-    // a frame that is already materialized and loop-bounded in size.
-    // round 15: the stats-cut re-wrap goes through DatasetBridge — the
-    // public `createDataFrame(cp.rdd, schema)` form deserialized every
-    // InternalRow to an external Row and serialized it straight back on
-    // every downstream read, one full copy of the label table per use
-    // per round, pure conversion overhead at any scale.
-    // round 16: checkpoint drain and the convergence probe are ONE job —
-    // `sumOf` (when set) folds the label sum over the SAME action that
-    // materializes the checkpoint blocks, so a round costs 3 sequential
-    // actions instead of 5 (the probe was a separate job per frame; at
-    // sf-scale these gates are action-barrier-bound — JobCount r15/16).
-    def checkpointCut(df: DataFrame,
-        sumOf: Option[org.apache.spark.sql.catalyst.InternalRow => Long])
-        : (DataFrame, () => Unit, Option[BigInt]) = {
-      val rdd = df.queryExecution.toRdd.map(_.copy())
-      rdd.localCheckpoint()
-      val sum = sumOf match {
-        case Some(f) =>
-          Some(rdd.mapPartitions { it =>
-            var s = BigInt(0)
-            while (it.hasNext) s += f(it.next())
-            Iterator.single(s)
-          }.collect().sum)
-        case None => rdd.count(); None
+    val edges = edgeCut(pairs)
+    if (edges.rows <= LocalUnionFindEdges) localLabels(edges)
+    else loopLabels(edges, maxIter)
+  }
+
+  /** [[clustersScoped]] pinned to the local regime, any edge count. */
+  private[graft] def clustersLocal(pairs: DataFrame): Scoped =
+    localLabels(edgeCut(pairs))
+
+  /** [[clustersScoped]] pinned to the distributed loop, any edge count. */
+  private[graft] def clustersLoop(pairs: DataFrame, maxIter: Int = 64): Scoped =
+    loopLabels(edgeCut(pairs), maxIter)
+
+  /** Directed-edge budget of the local regime of [[clustersScoped]].
+    * Sizing: the task buffers the src ≤ dst half of the edges as two
+    * primitive arrays (2 × 8 B × 2^20 = 16 MB for integral ids), sorts
+    * their endpoints into a node array (≤ 16 MB), and keeps two int
+    * index arrays and the parent array (≤ 8 MB each) — about 60 MB
+    * retained at the budget. Measured on a 2^20-node random-id path
+    * (2^21 directed edges, Long ids, JDK 17): the kernel completes in a
+    * 88 MB heap with G1 (OOM at 80 MB) and in 80 MB with SerialGC, while
+    * draining the same input alone fits 32 MB — well inside one task's
+    * share of a 2 GB executor. A constant, not a knob: above it the loop
+    * is the right regime anyway, because the graph is then big enough for
+    * its rounds to do real parallel work. */
+  private[graft] val LocalUnionFindEdges: Long = 1L << 21
+
+  /** A checkpointed frame, its release, and what its drain measured: the
+    * row count and, when a reader was given, the label sum. */
+  private final case class Cut(df: DataFrame, release: () => Unit,
+      rows: Long, sum: Option[BigInt])
+
+  // localCheckpoint truncates LINEAGE but carries the origin plan's
+  // ESTIMATED stats into the checkpoint (LogicalRDD originStats).
+  // In an iterative loop that estimate COMPOUNDS: each round's join
+  // estimate is the product of its children's, the checkpoint bakes
+  // the product in, and the next round multiplies again — the BigInt
+  // sizeInBytes doubles its bit-length every round until Catalyst's
+  // stats visitor spends minutes on million-bit arithmetic and
+  // finally overflows BigInteger (observed at ~25 rounds). Cutting
+  // stats by re-wrapping the checkpointed RDD resets every round to
+  // the default estimate; cost is one row-conversion pass per use of
+  // a frame that is already materialized and loop-bounded in size.
+  // round 15: the stats-cut re-wrap goes through DatasetBridge — the
+  // public `createDataFrame(cp.rdd, schema)` form deserialized every
+  // InternalRow to an external Row and serialized it straight back on
+  // every downstream read, one full copy of the label table per use
+  // per round, pure conversion overhead at any scale.
+  // round 16: checkpoint drain and the convergence probe are ONE job —
+  // `sumOf` (when set) folds the label sum over the SAME action that
+  // materializes the checkpoint blocks, so a round costs 3 sequential
+  // actions instead of 5 (the probe was a separate job per frame; at
+  // sf-scale these gates are action-barrier-bound — JobCount r15/16).
+  // The same drain counts the rows, which is how the edge cut picks the
+  // regime of [[clustersScoped]] without a job of its own.
+  private def checkpointCut(df: DataFrame,
+      sumOf: Option[org.apache.spark.sql.catalyst.InternalRow => Long]): Cut = {
+    val rdd = df.queryExecution.toRdd.map(_.copy())
+    rdd.localCheckpoint()
+    val (rows, sum) = rdd.mapPartitions { it =>
+      var n = 0L
+      var s = BigInt(0)
+      sumOf match {
+        case Some(f) => while (it.hasNext) { s += f(it.next()); n += 1 }
+        case None    => while (it.hasNext) { it.next(); n += 1 }
       }
-      (org.apache.spark.sql.graftbridge.DatasetBridge.fromInternalRows(
-        df.sparkSession, rdd, df.schema),
-        () => { rdd.unpersist(blocking = false); () }, sum)
-    }
-    // undirected edge list, both directions, symmetrized via ONE
-    // Generate, not a self-union: the union form reads `pairs` twice as
-    // two differently-projected plan branches, and when the caller
-    // hands an un-materialized pair pipeline the whole upstream runs
-    // twice unless exchange reuse happens to fire (round 15 —
-    // explode(array(fwd, swapped)) evaluates it once).
-    // The DECLARED-layout form ([[partitionedCheckpointCut]], used by
-    // pageRank where 6 fixed rounds amortize its setup: −21% at the
-    // alternating X=100 A/B) was ALSO tried here and REJECTED with
-    // data: clusters converges in ONE round on duplicate-cluster
-    // corpora (star-shaped, SCALE.md round-10), so the setup's extra
-    // materialization + re-layout exchange never pays — alternating
-    // X=100 A/B measured 233.7 vs 190.1 s min (+23%). A plain
-    // checkpoint keeps setup minimal; the SHUFFLE_HASH hop below still
-    // removes the per-round edge SORT (the round-12 LPA lesson).
-    var (edges, releaseEdges, _) = checkpointCut(
-      pairs.select(explode(array(
-          struct(col("id1").as("src"), col("id2").as("dst")),
-          struct(col("id2").as("src"), col("id1").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .distinct(), None)
+      Iterator.single((n, s))
+    }.collect().foldLeft((0L, BigInt(0))) { case ((n, s), (m, t)) => (n + m, s + t) }
+    Cut(org.apache.spark.sql.graftbridge.DatasetBridge.fromInternalRows(
+      df.sparkSession, rdd, df.schema),
+      () => { rdd.unpersist(blocking = false); () }, rows, sumOf.map(_ => sum))
+  }
+
+  /** The undirected edge list, both directions, deduplicated and
+    * checkpointed: the input of both regimes. Symmetrized via ONE
+    * Generate, not a self-union: the union form reads `pairs` twice as
+    * two differently-projected plan branches, and when the caller hands
+    * an un-materialized pair pipeline the whole upstream runs twice
+    * unless exchange reuse happens to fire (round 15 —
+    * explode(array(fwd, swapped)) evaluates it once). A plain checkpoint,
+    * not a declared layout: the local regime never joins on it, and the
+    * loop declares one only once it has proven long (round 2, below). */
+  private def edgeCut(pairs: DataFrame): Cut = checkpointCut(
+    pairs.select(explode(array(
+        struct(col("id1").as("src"), col("id2").as("dst")),
+        struct(col("id2").as("src"), col("id1").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct(), None)
+
+  /** The local regime: one task unions the whole edge list. The edge
+    * blocks are already materialized, so the coalesce only moves them
+    * into one task; the label checkpoint is the regime's single job. */
+  private def localLabels(edges: Cut): Scoped = {
+    val idType = edges.df.schema("src").dataType
+    // the loop's result schema: both columns nullable (its final union
+    // takes ids from a min aggregate's output)
+    val schema = StructType(Seq(StructField("id", idType),
+      StructField("cluster", idType)))
+    val labeled = edges.df.queryExecution.toRdd.coalesce(1)
+      .mapPartitions(UnionFind.labels(_, idType))
+    val labels =
+      try checkpointCut(org.apache.spark.sql.graftbridge.DatasetBridge
+        .fromInternalRows(edges.df.sparkSession, labeled, schema), None)
+      finally edges.release()
+    if (sys.env.contains("GRAFT_VERIFY_DEBUG"))
+      System.err.println(s"[graft] clusters: local union-find over ${edges.rows} edges")
+    Scoped(labels.df, labels.release)
+  }
+
+  /** The distributed regime: small-star / doubling label rounds over the
+    * edge list until the label sum stops moving. */
+  private def loopLabels(cut: Cut, maxIter: Int): Scoped = {
+    var edges = cut.df
+    var releaseEdges = cut.release
     // init = hop 0 fused: label(v) = min(v, min neighbor) — one agg
     // instead of a full identity-labeled first round
     val labelsInit = edges.groupBy(col("src").as("id"))
@@ -593,8 +669,10 @@ object Dedup {
       val d = df.agg(sum(col(df.columns(1)).cast(DecimalType(38, 0)))).head()
       if (d.isNullAt(0)) BigInt(0) else BigInt(d.getDecimal(0).toBigInteger)
     }
-    var (labels, releaseLabels, sum0) = checkpointCut(labelsInit, clusterReader)
-    var prevSum = sum0.getOrElse(genericSum(labels))
+    val init = checkpointCut(labelsInit, clusterReader)
+    var labels = init.df
+    var releaseLabels = init.release
+    var prevSum = init.sum.getOrElse(genericSum(labels))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -647,7 +725,7 @@ object Dedup {
       // checkpoint before the self-join: materializes the hop once (both
       // join sides read it) and sidesteps Catalyst's Union-constraint
       // attribute-rewrite bug on self-joined union plans
-      val (hopped0, releaseHopped0, _) = checkpointCut(
+      val hopped0 = checkpointCut(
         labels.unionAll(viaNeighbors)
           .groupBy("id").agg(min("cluster").as("cluster")), None)
       // (b) small-star: centers (pre-hop labels) adopt the min of what
@@ -663,35 +741,35 @@ object Dedup {
       // double}_{before,after}.txt; rows in SCALE.md round 16.
       val viaMembers = labels.where(col("id") =!= col("cluster"))
         .select(col("id").as("mid"), col("cluster").as("center"))
-        .join(hopped0.withColumnRenamed("id", "mid"), "mid")
+        .join(hopped0.df.withColumnRenamed("id", "mid"), "mid")
         .select(col("center").as("id"), col("cluster"))
-      val (hopped, releaseHopped, hopSum0) = checkpointCut(
-        hopped0.unionAll(viaMembers)
+      val hopped = checkpointCut(
+        hopped0.df.unionAll(viaMembers)
           .groupBy("id").agg(min("cluster").as("cluster")), clusterReader)
-      releaseHopped0()
+      hopped0.release()
       // the round's reads of the previous labels are done
       releaseLabels()
-      val hopSum = hopSum0.getOrElse(genericSum(hopped))
+      val hopSum = hopped.sum.getOrElse(genericSum(hopped.df))
       if (hopSum == prevSum) {
         // the hop moved nothing → fixpoint; skip the doubling join
-        labels = hopped
-        releaseLabels = releaseHopped
+        labels = hopped.df
+        releaseLabels = hopped.release
         converged = true
       } else {
         // (c) pointer doubling: follow the label one more step. Labels
         // only ever shrink (cluster ≤ id and label(c) ≤ c), so the
         // shortcut label is min(cluster, label(cluster)) = label(cluster).
         // deliberately SMJ — see the small-star join's rejection note
-        val (next, releaseNext, nextSum0) = checkpointCut(
-          hopped.alias("a")
-            .join(hopped.select(col("id").as("cluster"), col("cluster").as("c2")).alias("b"),
+        val next = checkpointCut(
+          hopped.df.alias("a")
+            .join(hopped.df.select(col("id").as("cluster"), col("cluster").as("c2")).alias("b"),
               Seq("cluster"), "left")
             .select(col("id"), coalesce(col("c2"), col("cluster")).as("cluster")),
           clusterReader)
-        releaseHopped() // doubling result materialized → hop is dead
-        prevSum = nextSum0.getOrElse(genericSum(next))
-        labels = next
-        releaseLabels = releaseNext
+        hopped.release() // doubling result materialized → hop is dead
+        prevSum = next.sum.getOrElse(genericSum(next.df))
+        labels = next.df
+        releaseLabels = next.release
       }
       iter += 1
     }
@@ -702,7 +780,8 @@ object Dedup {
         s"clusters() did not converge in $maxIter rounds — raise maxIter")
     }
     if (sys.env.contains("GRAFT_VERIFY_DEBUG"))
-      System.err.println(s"[graft] clusters: converged after $iter rounds")
+      System.err.println(
+        s"[graft] clusters: converged after $iter rounds over ${cut.rows} edges")
     Scoped(labels, releaseLabels)
   }
 

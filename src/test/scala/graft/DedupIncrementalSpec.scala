@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, DocChunker}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental dedup equivalence, simhash recall vs ground truth, and
@@ -65,17 +66,25 @@ class DedupIncrementalSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
       n = 3, threshold = 0.4)
-    val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val scoped = Dedup.clustersScoped(pairs)
-    assert(scoped.df.count() > 0, "test premise: clusters must be non-empty")
-    // intermediates (edges, per-round labels) are already freed inside
-    // the call; only the final label table's own blocks may remain
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
-    assert(during.size <= 1,
-      s"clusters left ${during.size} block sets resident (intermediates leaked)")
-    scoped.release()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
-    assert(leaked.isEmpty, s"clusters leaked storage blocks after release: $leaked")
+    // each regime, and the dispatching entry point: the local regime's
+    // coalesced edge read and label checkpoint follow the same rule as
+    // the loop's per-round checkpoints
+    for ((path, run) <- Seq[(String, () => Dedup.Scoped)](
+        "dispatch" -> (() => Dedup.clustersScoped(pairs)),
+        "local" -> (() => Dedup.clustersLocal(pairs)),
+        "loop" -> (() => Dedup.clustersLoop(pairs)))) {
+      val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val scoped = run()
+      assert(scoped.df.count() > 0, "test premise: clusters must be non-empty")
+      // intermediates (edges, per-round labels) are already freed inside
+      // the call; only the final label table's own blocks may remain
+      val during = spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
+      assert(during.size <= 1,
+        s"$path: clusters left ${during.size} block sets resident (intermediates leaked)")
+      scoped.release()
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
+      assert(leaked.isEmpty, s"$path: clusters leaked storage blocks after release: $leaked")
+    }
   }
 
   test("clusters converges on a long random-id path (the adversarial shape)") {
@@ -92,10 +101,13 @@ class DedupIncrementalSpec extends SparkTestBase {
       val (a, b) = (perm(i).toLong, perm(i + 1).toLong)
       (math.min(a, b), math.max(a, b))
     }.toDF("id1", "id2")
-    val labels = Dedup.clusters(pairs).collect()
-    assert(labels.length === n)
-    assert(labels.forall(_.getLong(1) === 0L),
-      "single path component must collapse to the global min id")
+    for (run <- Seq[DataFrame => DataFrame](Dedup.clusters(_),
+        Dedup.clustersLocal(_).df, Dedup.clustersLoop(_).df)) {
+      val labels = run(pairs).collect()
+      assert(labels.length === n)
+      assert(labels.forall(_.getLong(1) === 0L),
+        "single path component must collapse to the global min id")
+    }
   }
 
   test("clusters handles non-Long integral ids (the convergence probe " +
@@ -107,10 +119,16 @@ class DedupIncrementalSpec extends SparkTestBase {
     val pairs = Seq((5, 2), (2, 3), (10, 11)).toDF("id1", "id2")
     assert(pairs.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.IntegerType))
-    val got = Dedup.clusters(pairs).collect()
-      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
-      .toSet
-    assert(got == Set((5L, 2L), (2L, 2L), (3L, 2L), (10L, 10L), (11L, 10L)))
+    for (run <- Seq[DataFrame => DataFrame](Dedup.clusters(_),
+        Dedup.clustersLocal(_).df, Dedup.clustersLoop(_).df)) {
+      val labeled = run(pairs)
+      assert(labeled.schema.fields.forall(_.dataType ==
+        org.apache.spark.sql.types.IntegerType))
+      val got = labeled.collect()
+        .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+        .toSet
+      assert(got == Set((5L, 2L), (2L, 2L), (3L, 2L), (10L, 10L), (11L, 10L)))
+    }
   }
 
   test("incremental store update is a blind append (re-run equivalence)") {
