@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{ChunkSpec, DumpManifest, TableConfig, TableManifest}
+import graft.core.{DumpManifest, TableConfig, TableManifest}
 import graft.functions.{Checksum, Masquerade}
 import graft.operators.ChunkPlanner
 import graft.sources.{CsvDump, LoadDataWriter, RowFormat, SqlInsertWriter}
@@ -135,6 +135,12 @@ object Dump {
     * emitter, the database schema-create text, and the manifest. */
   def quoteOf(cfg: Config): String = if (cfg.ansiQuotes) "\"" else "`"
 
+  /** Text of the database schema-create file (write_schema_create),
+    * identifiers quoted per [[quoteOf]]. */
+  def databaseCreate(cfg: Config): String =
+    sources.SchemaObjects.fileHeader() +
+      s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ ${quoteOf(cfg)}${cfg.db}${quoteOf(cfg)};\n"
+
   /** File-stem resolution, the reference's determine_filename /
     * get_ref_table (mydumper_common.c:66-90): a table names its own
     * files iff the name is filename-safe (`^[\w\- ]+$` — letters,
@@ -204,39 +210,43 @@ object Dump {
     val chunkCol = df.schema.fields.headOption.map(_.name)
     val pk = cfg.primaryKeys.getOrElse(table, Nil)
     val orderCol = pk.headOption.orElse(chunkCol)
-    // rows-per-chunk sizing (--rows): chunk count = estimate / rows,
-    // clamped to [1, 4096]; the estimate is a sampling probe, not a
-    // full scan. Schema-only dumps skip the probe with everything else.
-    // per-table `rows` override beats the global --rows (per-attribute
-    // coalesce, mydumper_table.c:415-417); the START step sizes the
-    // static plan — Spark has no mid-dump re-step, ChunkPlanner's
-    // retarget/converge carries the adaptive [min,max] clamps on the
-    // JDBC-extract side
-    val effectiveRows = conf.rows.map(_.start).orElse(cfg.rowsPerChunk)
-    val sizedChunks = effectiveRows match {
-      case Some(r) if r > 0 && !noData =>
-        val est = math.max(ChunkPlanner.rowEstimate(df, sampleFraction = 0.05), 1L)
-        math.max(1, math.min(4096, math.ceil(est.toDouble / r).toInt))
-      case _ => cfg.targetChunks
+    // rows-per-chunk sizing (--rows): chunk count = rows / rowsPerChunk,
+    // clamped to [1, 4096]. The per-table `rows` override beats the
+    // global --rows (per-attribute coalesce, mydumper_table.c:415-417);
+    // the START step sizes the static plan — Spark has no mid-dump
+    // re-step, ChunkPlanner's retarget/converge carries the adaptive
+    // [min,max] clamps on the JDBC-extract side
+    val rowsPerChunk = conf.rows.map(_.start).orElse(cfg.rowsPerChunk).filter(_ > 0)
+    val intRange = ChunkPlanner.choose(
+      rowEstimate = -1L, // planner probes below instead of catalog stats
+      pkType = chunkCol.map(_ => df.schema.fields.head.dataType.typeName),
+      partitions = Nil) == ChunkPlanner.Strategy.IntRange
+    // ONE probe scan before the write: exact row count (sizes --rows),
+    // checksum and chunk-column min/max in one aggregate — the reference
+    // gets these from metadata (EXPLAIN, MIN/MAX on an index), so a file
+    // source pays one scan, not three. The checksum stays an exactly-once
+    // aggregate, never an `observe` on the write (its map stage can
+    // retry). coalesce: bit_xor over zero rows is NULL, and an empty
+    // slice must checksum as 0. A schema-only dump probes nothing.
+    val probe =
+      if (noData || (rowsPerChunk.isEmpty && !cfg.checksum && !intRange)) None
+      else {
+        val c = if (intRange) col(chunkCol.get) else lit(null).cast("long")
+        Some(df.agg(count(lit(1)),
+          if (cfg.checksum) coalesce(Checksum.tableChecksum(df), lit(0L)) else lit(0L),
+          min(c).cast("long"), max(c).cast("long")).head())
+      }
+    val sizedChunks = rowsPerChunk.zip(probe).fold(cfg.targetChunks) { case (r, p) =>
+      math.max(1, math.min(4096, math.ceil(math.max(p.getLong(0), 1L).toDouble / r).toInt))
     }
     // --max-threads-per-table analog: the reference caps how many worker
     // threads dump one table (mydumper_arguments.c); here the same knob
     // caps the table's write parallelism (chunk count)
     val targetChunks = conf.numThreads.filter(_ > 0)
       .map(n => math.min(sizedChunks, n)).getOrElse(sizedChunks)
-    val strategy = ChunkPlanner.choose(
-      rowEstimate = -1L, // planner probes below instead of catalog stats
-      pkType = chunkCol.map(_ => df.schema.fields.head.dataType.typeName),
-      partitions = Nil)
-    // a schema-only dump must not pay the planner's min/max probe (an
-    // eager aggregation job per table) for a chunk plan it never uses
-    val chunks: Seq[ChunkPlanner.Chunk] =
-      if (noData) Nil
-      else strategy match {
-        case ChunkPlanner.Strategy.IntRange =>
-          ChunkPlanner.planInteger(df, chunkCol.get, targetChunks)
-        case _ => Nil
-      }
+    // the chunk plan's size (min/max NULL = no keyed rows = no chunks)
+    val chunks = probe.filter(p => intRange && !p.isNullAt(2)).fold(0)(p =>
+      ChunkPlanner.planInteger(chunkCol.get, Some((p.getLong(2), p.getLong(3))), targetChunks).size)
     val partitioned =
       if (cfg.orderByPrimary && orderCol.isDefined) {
         // range-split on the LEADING key (file boundaries), but sort
@@ -261,20 +271,6 @@ object Dump {
         if (scanParts < targetChunks) df.repartition(targetChunks) else df
       }
 
-    // checksum and write are independent full passes — run them as
-    // concurrent Spark jobs so they overlap on the executors instead of
-    // serializing two scans (the fair scheduler interleaves their tasks)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val checksumF =
-      if (cfg.checksum && !noData)
-        // coalesce: bit_xor over ZERO rows aggregates to NULL, and an
-        // empty table (or an all-excluding WHERE) must checksum as 0,
-        // not crash the dump
-        Future(df.agg(coalesce(Checksum.tableChecksum(df), lit(0L)))
-          .head().getLong(0))
-      else Future.successful(0L)
     val rows = if (noData) 0L else cfg.format match {
       case SqlFormat =>
         SqlInsertWriter.write(partitioned, dbStem, stem, cfg.outDir,
@@ -433,11 +429,9 @@ object Dump {
     // mydumper_N-schema-create.sql, specific_32 / mydumper_common.c)
     if (dbStem != cfg.db && !noSchemas)
       writeSchemaObject(cfg.outDir, dbStem, SchemaKind.Database,
-        sources.SchemaObjects.fileHeader() +
-          s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ ${quoteOf(cfg)}${cfg.db}${quoteOf(cfg)};\n",
-        ifAbsent = true)
-    TableResult(table, rows, Await.result(checksumF, Duration.Inf),
-      if (noData) 0 else math.max(chunks.size, 1), stem = stem,
+        databaseCreate(cfg), ifAbsent = true)
+    TableResult(table, rows, probe.fold(0L)(_.getLong(1)),
+      if (noData) 0 else math.max(chunks, 1), stem = stem,
       // lake layouts read back in a different shape than they dumped
       // (partitionBy appends partition columns; JSON inference
       // alphabetizes and widens) — record the dump-time schema so the
@@ -547,6 +541,19 @@ object Dump {
       else None
     }
 
+  /** `xs.map(f)` on a pool of `threads` threads, results in input order;
+    * the first failure in input order is rethrown once all calls end. */
+  private[graft] def parMap[A, B](xs: Seq[A], threads: Int)(f: A => B): Seq[B] =
+    if (threads <= 1) xs.map(f)
+    else {
+      import java.util.concurrent.{Callable, ExecutionException, Executors}
+      import scala.jdk.CollectionConverters._
+      val pool = Executors.newFixedThreadPool(threads)
+      try pool.invokeAll(xs.map(x => (() => f(x)): Callable[B]).asJava).asScala.toSeq
+        .map(r => try r.get() catch { case e: ExecutionException => throw e.getCause })
+      finally pool.shutdown()
+    }
+
   /** Dump a set of tables; transactional/non-transactional phase split
     * (T4) honored by ordering. Returns the manifest.
     *
@@ -554,12 +561,12 @@ object Dump {
     * the reference's worker-thread pool, where one slow/large table must
     * not serialize the whole dump behind it (mydumper's -t threads pull
     * table jobs off a shared queue). Each table is still one set of
-    * distributed Spark jobs; concurrency here just keeps the scheduler
-    * fed, and Spark's fair/FIFO scheduling interleaves their tasks.
-    * Manifest order stays the input order regardless of completion
-    * order. Default 1 preserves strictly-sequential behavior (byte-level
-    * determinism of interleaved driver-side writes like shared stems is
-    * the caller's concern above 1). */
+    * distributed Spark jobs; concurrency here keeps the scheduler fed
+    * while one table's driver waits on its probe or write. The output
+    * does not depend on `tableThreads`: the manifest keeps the input
+    * order, every surrogate stem is claimed up front in the sequential
+    * dump order, and each table writes only its own files (the shared
+    * database schema-create is written once, before the pool starts). */
   def run(spark: SparkSession, tables: Seq[(String, DataFrame, Boolean)],
       cfg: Config, tableThreads: Int = 1): DumpManifest = {
     val start = java.time.Instant.now().toString
@@ -572,34 +579,31 @@ object Dump {
     // dumpTable keeps its surrogate-name pair for standalone callers.
     if (!cfg.noSchemas)
       writeSchemaObject(cfg.outDir, cfg.stems.stem(cfg.db), SchemaKind.Database,
-        sources.SchemaObjects.fileHeader() +
-          s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ ${quoteOf(cfg)}${cfg.db}${quoteOf(cfg)};\n")
+        databaseCreate(cfg))
     val (trx, nonTrx) = tables.partition(_._3)
+    // StemRegistry numbers surrogates in first-call order; dumpTable asks
+    // for the table's stem, then the database's
+    (nonTrx ++ trx).foreach { case (name, _, _) =>
+      cfg.stems.stem(name); cfg.stems.stem(cfg.db) }
     def phase(ts: Seq[(String, DataFrame, Boolean)]): Seq[TableResult] =
-      if (tableThreads <= 1) ts.map { case (name, df, _) => dumpTable(df, name, cfg) }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(
-          java.util.concurrent.Executors.newFixedThreadPool(tableThreads))
-        try Await.result(
-          Future.sequence(ts.map { case (name, df, _) =>
-            Future(dumpTable(df, name, cfg))
-          }), Duration.Inf)
-        finally ec.asInstanceOf[scala.concurrent.ExecutionContextExecutorService]
-          .shutdown()
-      }
+      parMap(ts, tableThreads) { case (name, df, _) => dumpTable(df, name, cfg) }
     val results = phase(nonTrx) ++ phase(trx)
+    writeManifest(cfg, start, results)
+  }
+
+  /** Build the run's manifest and persist it as the dump dir's `metadata`
+    * file (reference mydumper_start_dump.c:1161-1182) so the dump is
+    * self-describing. */
+  def writeManifest(cfg: Config, startedAt: String,
+      results: Seq[TableResult]): DumpManifest = {
     val manifest = DumpManifest(
-      startedAt = start,
+      startedAt = startedAt,
       finishedAt = java.time.Instant.now().toString,
       quoteChar = quoteOf(cfg),
       tables = results.map(r =>
         TableManifest(r.table, r.rows, Some(r.checksum.toString),
           filename = Some(r.stem).filter(_ != r.table),
           sparkSchema = r.schemaJson)))
-    // persist as the dump dir's `metadata` file (reference
-    // mydumper_start_dump.c:1161-1182) so the dump is self-describing
     sources.Manifest.write(cfg.outDir, manifest)
     manifest
   }

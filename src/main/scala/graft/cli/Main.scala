@@ -20,6 +20,7 @@ import org.apache.spark.sql.SparkSession
   *     [--format sql|LOAD_DATA|CSV|csv|parquet|orc|jsonl] [--compress]
   *     [--rows N|min:start:max] [--rows-hard ...] [--regex R]
   *     [--tables-list a,b] [--where COND] [--threads N] [--exec "cmd FILENAME"]
+  *     [--table-threads N]   (tables dumped at once; default: --threads)
   *     [--exec-per-thread "cmd"] [--exec-per-thread-extension .sql.zst]
   *     [--fields-terminated-by S] [--fields-enclosed-by C]
   *     [--fields-escaped-by C] [--lines-starting-by S]
@@ -52,6 +53,9 @@ import org.apache.spark.sql.SparkSession
   *     [-O/--omit-from-file F] [--purge-mode FAIL|NONE|DROP|TRUNCATE|DELETE]
   */
 object Main {
+
+  /** --threads default, as in the reference (common_options.c:41). */
+  private val DefaultThreads = 4
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
@@ -94,7 +98,7 @@ object Main {
     }
     val multi = parseFlagsMulti(cfgArgs ++ args.tail, cmd)
     val opts = multi.map { case (k, vs) => k -> vs.last }
-    val threads = opts.getOrElse("threads", "4")
+    val threads = opts.getOrElse("threads", DefaultThreads.toString)
     // embeddable: when a host (test, notebook) already owns a session,
     // reuse it and leave its lifecycle alone
     val hosted = SparkSession.getActiveSession
@@ -501,7 +505,12 @@ object Main {
         linesTerminatedBy = o.get("lines-terminated-by"),
         statementTerminatedBy = o.get("statement-terminated-by")),
       includeHeader = o.contains("include-header"))
-    val tables = all.map(t => (t, Tables.t(spark, src, t), true))
+    // --table-threads N: tables dumped at once, default --threads (the
+    // reference's -t workers pull table jobs off one queue)
+    val tableThreads = o.get("table-threads").orElse(o.get("threads"))
+      .fold(DefaultThreads)(_.toInt)
+    // each parquet source costs one schema-inference job: same pool
+    val tables = Dump.parMap(all, tableThreads)(t => (t, Tables.t(spark, src, t), true))
     def oneDump(dir: String): Unit = {
       // --updated-since skips land in the dump dir's not_updated_tables
       // file, one db.table per line (the reference's nufile,
@@ -530,11 +539,11 @@ object Main {
           // (mydumper_stream.c: metadata/schema files precede data), so
           // a follow-mode restore has its CREATE DATABASE phase before
           // any table arrives; batch dumps get this from Dump.run
+          val startedAt = java.time.Instant.now().toString
           val dbStem = cfg.stems.stem(cfg.db)
           if (!cfg.noSchemas) {
             Dump.writeSchemaObject(dir, dbStem, Dump.SchemaKind.Database,
-              graft.sources.SchemaObjects.fileHeader() +
-                s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ `${cfg.db}`;\n")
+              Dump.databaseCreate(cfg))
             LandingStream.announceFile(evDir, "dbschema", dbStem,
               s"$dbStem-schema-create.sql")
           }
@@ -567,24 +576,8 @@ object Main {
           // can stop its ProcessingTime stream (the reference's analog
           // is the producer closing the stream pipe, mydumper_stream.c)
           LandingStream.announceFile(evDir, "done", "-", results.size.toString)
-          val m = graft.core.DumpManifest(
-            startedAt = java.time.Instant.now().toString,
-            finishedAt = java.time.Instant.now().toString,
-            quoteChar = Dump.quoteOf(cfg),
-            tables = results.map(r => graft.core.TableManifest(
-              r.table, r.rows, Some(r.checksum.toString),
-              filename = Some(r.stem).filter(_ != r.table),
-              // record the dump-time schema exactly as Dump.run does —
-              // without it a stream/daemon lake dump's partitioned or
-              // jsonl restore cannot conform-and-verify (ok=None)
-              sparkSchema = r.schemaJson)))
-          graft.sources.Manifest.write(dir, m)
-          m
-        case None => Dump.run(spark, tables, cfg.copy(outDir = dir),
-          // --table-threads N (engine spelling of the reference's
-          // worker-pool concurrency across tables): dump tables
-          // concurrently within each phase
-          tableThreads = o.get("table-threads").map(_.toInt).getOrElse(1))
+          Dump.writeManifest(cfg.copy(outDir = dir), startedAt, results)
+        case None => Dump.run(spark, tables, cfg.copy(outDir = dir), tableThreads)
       }
       if (!o.contains("stream"))
         manifest.tables.foreach(t =>

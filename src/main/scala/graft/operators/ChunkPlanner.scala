@@ -128,18 +128,12 @@ object ChunkPlanner {
     }
   }
 
-  /** Probe min/max of a DECIMAL(20,0) (unsigned-bigint) key exactly. */
-  def decimalBounds(df: DataFrame, column: String): (BigInt, BigInt) = {
-    val r = df.agg(min(col(column)), max(col(column))).head()
-    (BigInt(r.getDecimal(0).toBigInteger), BigInt(r.getDecimal(1).toBigInteger))
-  }
-
-  /** A3 — cheap cardinality estimate (the reference parses EXPLAIN's
-    * `rows` column, mydumper_chunks.c:259-288): Catalyst plan statistics
-    * when the source provides a row count (CBO / file metadata), else a
-    * sampled count scaled up — one lightweight job over `sampleFraction`
-    * of the data, never a full count. Feeds [[choose]]'s rows-vs-step
-    * decision. */
+  /** A3 — cardinality estimate (the reference parses EXPLAIN's `rows`
+    * column, mydumper_chunks.c:259-288): Catalyst plan statistics when
+    * the source provides a row count (CBO / file metadata), else a
+    * Bernoulli-sampled count scaled up. A sample still reads every row
+    * of a file source, so it costs a full scan — no cheaper than an
+    * exact count fused into an aggregate the caller runs anyway. */
   def rowEstimate(df: DataFrame, sampleFraction: Double = 0.01): Long = {
     val fromStats = df.queryExecution.optimizedPlan.stats.rowCount
     fromStats.map(_.toLong).getOrElse {
@@ -212,7 +206,12 @@ object ChunkPlanner {
     * replacement of adaptive 2 s/SELECT resizing, C3: we target
     * `chunks ≈ 4× parallelism` and let AQE coalesce). */
   def planInteger(df: DataFrame, column: String, targetChunks: Int): Seq[Chunk] =
-    intBoundsOpt(df, column) match {
+    planInteger(column, intBoundsOpt(df, column), targetChunks)
+
+  /** [[planInteger]] from bounds the caller already probed. */
+  def planInteger(column: String, bounds: Option[(Long, Long)],
+      targetChunks: Int): Seq[Chunk] =
+    bounds match {
       case Some((lo, hi)) =>
         val span = math.max(hi - lo + 1, 1L)
         val step = math.max(span / math.max(targetChunks, 1), 1L)

@@ -774,6 +774,28 @@ class CliStreamSpec extends SparkTestBase {
     }
     assert(e2.getMessage.contains("FRESH events dir"), e2.getMessage)
   }
+
+  test("streamed dump honors ANSI_QUOTES and stamps its start before the first table") {
+    val cnf = java.nio.file.Files.createTempFile("graft_sansi_", ".cnf")
+    java.nio.file.Files.writeString(cnf,
+      "[mydumper_session_variables]\nsql_mode='ANSI_QUOTES'\n")
+    val out = java.nio.file.Files.createTempDirectory("graft_cli_sa_").toString
+    val ev = java.nio.file.Files.createTempDirectory("graft_cli_saev_").toString
+    Main.main(Array("dump", s"--defaults-file=$cnf", "--source-dir", sf,
+      "-o", out, "--tables-list", "region,nation", "--stream", ev))
+    val create = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(out, "graft-schema-create.sql"))
+    assert(create.contains("CREATE DATABASE /*!32312 IF NOT EXISTS*/ \"graft\";"), create)
+    assert(!create.contains("`"), s"backticks in ANSI schema-create: $create")
+    // event names lead with the announce time in epoch millis; the
+    // schema-create is announced before any table is dumped
+    val firstEventMs = new java.io.File(ev).list().filter(_.startsWith("ev_"))
+      .map(_.split("_")(1).toLong).min
+    val m = graft.sources.Manifest.read(out).get
+    assert(m.quoteChar === "\"")
+    assert(java.time.Instant.parse(m.startedAt).toEpochMilli <= firstEventMs,
+      s"startedAt ${m.startedAt} is after the first announce at $firstEventMs ms")
+  }
 }
 
 /** --clear must EMPTY the output dir like the reference's clear_dumpdir —
@@ -818,22 +840,37 @@ class CliLoadFlagsSpec extends SparkTestBase {
 /** Concurrent per-table dump: --table-threads must change throughput
   * shape only — identical artifacts and manifest as the sequential path. */
 class CliTableThreadsSpec extends SparkTestBase {
+  private val tables = Seq("--tables-list", "region,nation,supplier")
+
+  /** Every artifact but the run-stamped `metadata`, name -> bytes. */
+  private def files(dir: String): Map[String, Seq[Byte]] =
+    Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
+      .filter(f => f.isFile && f.getName != "metadata")
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+      .toMap
+
+  private def dump(extra: String*): String = {
+    val out = java.nio.file.Files.createTempDirectory("graft_tt_").toString
+    Main.main((Seq("dump", "--source-dir", sf, "-o", out) ++ tables ++ extra).toArray)
+    out
+  }
+
+  private def assertSameDump(a: String, b: String): Unit = {
+    val (fa, fb) = (files(a), files(b))
+    assert(fa.keySet === fb.keySet, "artifact sets must match")
+    assert(fa.keys.exists(_.endsWith("-schema.sql")) &&
+      fa.keys.exists(n => Load.classify(n) == Load.Data), fa.keySet)
+    fa.keys.foreach(n => assert(fa(n) === fb(n), s"bytes of $n differ"))
+    val (ma, mb) = (graft.sources.Manifest.read(a).get, graft.sources.Manifest.read(b).get)
+    assert(mb.tables === ma.tables, "manifest entries/order must match")
+  }
+
   test("--table-threads 3 produces the same artifacts as sequential") {
-    def names(dir: String): Set[String] =
-      Option(new java.io.File(dir).listFiles).map(_.map(_.getName).toSet)
-        .getOrElse(Set.empty)
-    val seq = java.nio.file.Files.createTempDirectory("graft_tt_seq_").toString
-    val par = java.nio.file.Files.createTempDirectory("graft_tt_par_").toString
-    Main.main(Array("dump", "--source-dir", sf, "-o", seq,
-      "--tables-list", "region,nation,supplier"))
-    Main.main(Array("dump", "--source-dir", sf, "-o", par,
-      "--tables-list", "region,nation,supplier", "--table-threads", "3"))
-    assert(names(par) === names(seq), "artifact sets must match")
-    val mSeq = graft.sources.Manifest.read(seq).get
-    val mPar = graft.sources.Manifest.read(par).get
-    assert(mPar.tables.map(t => (t.table, t.rows, t.dataChecksum))
-      === mSeq.tables.map(t => (t.table, t.rows, t.dataChecksum)),
-      "manifest rows/checksums/order must match")
+    assertSameDump(dump("--table-threads", "1"), dump("--table-threads", "3"))
+  }
+
+  test("without --table-threads (concurrent at --threads) matches --table-threads 1") {
+    assertSameDump(dump("--table-threads", "1"), dump())
   }
 }
 
