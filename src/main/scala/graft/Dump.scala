@@ -6,6 +6,7 @@ import graft.operators.ChunkPlanner
 import graft.sources.{CsvDump, LoadDataWriter, RowFormat, SqlInsertWriter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The dump pipeline (SURVEY §3.1 re-shaped for Spark): per table —
   * project (P1/P2) → filter (P3) → chunk-plan (C1-C5) → mask (F1-F10) →
@@ -221,20 +222,15 @@ object Dump {
       rowEstimate = -1L, // planner probes below instead of catalog stats
       pkType = chunkCol.map(_ => df.schema.fields.head.dataType.typeName),
       partitions = Nil) == ChunkPlanner.Strategy.IntRange
-    // ONE probe scan before the write: exact row count (sizes --rows),
-    // checksum and chunk-column min/max in one aggregate — the reference
-    // gets these from metadata (EXPLAIN, MIN/MAX on an index), so a file
-    // source pays one scan, not three. The checksum stays an exactly-once
-    // aggregate, never an `observe` on the write (its map stage can
-    // retry). coalesce: bit_xor over zero rows is NULL, and an empty
-    // slice must checksum as 0. A schema-only dump probes nothing.
+    // ONE probe scan before the write, only when the plan needs it: the
+    // exact row count sizes --rows chunks, an integer chunk column's
+    // min/max the chunk plan (the reference reads both from metadata:
+    // EXPLAIN, MIN/MAX on an index). The checksum rides the write below.
     val probe =
-      if (noData || (rowsPerChunk.isEmpty && !cfg.checksum && !intRange)) None
+      if (noData || (rowsPerChunk.isEmpty && !intRange)) None
       else {
         val c = if (intRange) col(chunkCol.get) else lit(null).cast("long")
-        Some(df.agg(count(lit(1)),
-          if (cfg.checksum) coalesce(Checksum.tableChecksum(df), lit(0L)) else lit(0L),
-          min(c).cast("long"), max(c).cast("long")).head())
+        Some(df.agg(count(lit(1)), min(c).cast("long"), max(c).cast("long")).head())
       }
     val sizedChunks = rowsPerChunk.zip(probe).fold(cfg.targetChunks) { case (r, p) =>
       math.max(1, math.min(4096, math.ceil(math.max(p.getLong(0), 1L).toDouble / r).toInt))
@@ -245,8 +241,8 @@ object Dump {
     val targetChunks = conf.numThreads.filter(_ > 0)
       .map(n => math.min(sizedChunks, n)).getOrElse(sizedChunks)
     // the chunk plan's size (min/max NULL = no keyed rows = no chunks)
-    val chunks = probe.filter(p => intRange && !p.isNullAt(2)).fold(0)(p =>
-      ChunkPlanner.planInteger(chunkCol.get, Some((p.getLong(2), p.getLong(3))), targetChunks).size)
+    val chunks = probe.filter(p => intRange && !p.isNullAt(1)).fold(0)(p =>
+      ChunkPlanner.planInteger(chunkCol.get, Some((p.getLong(1), p.getLong(2))), targetChunks).size)
     val partitioned =
       if (cfg.orderByPrimary && orderCol.isDefined) {
         // range-split on the LEADING key (file boundaries), but sort
@@ -271,9 +267,29 @@ object Dump {
         if (scanParts < targetChunks) df.repartition(targetChunks) else df
       }
 
-    val rows = if (noData) 0L else cfg.format match {
+    // The checksum rides the write and equals coalesce(tableChecksum(df),
+    // 0) bit for bit: text writers XOR a trailing per-row CRC32 column
+    // they never render, lake writers aggregate it in the Observation
+    // that counts their rows. Exactly once: both sit after any exchange,
+    // in the write job's result stage, where Spark applies a task's
+    // accumulator update once per partition. Before an exchange they
+    // would sit in a map stage, whose retried tasks apply updates again.
+    val perTask = df.sparkSession.sparkContext
+      .collectionAccumulator[Long](s"checksum_dumped_${cfg.db}.$stem")
+    def xor: Long = perTask.value.asScala.foldLeft(0L)(_ ^ _)
+    val (checksummed, checksumInto) =
+      if (!cfg.checksum) (partitioned, None)
+      else (partitioned.select(col("*"), Checksum.rowChecksum(partitioned)), Some(perTask))
+    def observed(write: DataFrame => Unit): (Long, Long) = {
+      val obs = new org.apache.spark.sql.Observation()
+      val cs = Checksum.rowsAndChecksumCols(partitioned, cfg.checksum)
+      write(partitioned.observe(obs, cs.head, cs.tail: _*))
+      val m = obs.get
+      (m("rows").asInstanceOf[Long], m("checksum").asInstanceOf[Long])
+    }
+    val (rows, checksum) = if (noData) (0L, 0L) else cfg.format match {
       case SqlFormat =>
-        SqlInsertWriter.write(partitioned, dbStem, stem, cfg.outDir,
+        (SqlInsertWriter.write(checksummed, dbStem, stem, cfg.outDir,
           SqlInsertWriter.Options(statementSize = cfg.statementSize,
             compress = cfg.compress, compressCodec = cfg.compressCodec,
             execFilter = cfg.execFilter,
@@ -287,20 +303,20 @@ object Dump {
                 charset = Some(cfg.setNamesCharset), skipTz = cfg.skipTzUtc))
             else None,
             format = RowFormat.resolve(RowFormat.SqlKind, cfg.rowFormatKnobs,
-              ansiQuotes = cfg.ansiQuotes)))
+              ansiQuotes = cfg.ansiQuotes), checksum = checksumInto)), xor)
       case LoadDataFormat(csvVariant) =>
         val fmt = RowFormat.resolve(
           if (csvVariant) RowFormat.CsvKind else RowFormat.LoadDataKind,
           cfg.rowFormatKnobs)
         val fileLog = df.sparkSession.sparkContext
           .collectionAccumulator[String](s"files_dumped_${cfg.db}.$stem")
-        val n = LoadDataWriter.write(partitioned, dbStem, stem, cfg.outDir,
+        val written = LoadDataWriter.write(checksummed, dbStem, stem, cfg.outDir,
           LoadDataWriter.Options(format = fmt, header = cfg.includeHeader,
             hexBlob = cfg.hexBlob, statementSize = cfg.statementSize,
             compress = cfg.compress, compressCodec = cfg.compressCodec,
             execFilter = cfg.execFilter,
             fileSizeBytes = cfg.fileSizeBytes,
-            fileLog = Some(fileLog)))
+            fileLog = Some(fileLog), checksum = checksumInto))
         // one companion .sql per data chunk: SET-NAMES header + the
         // LOAD DATA statement naming the chunk's BASENAME
         // (write_load_data_statement, mydumper_write.c:616-625)
@@ -317,7 +333,6 @@ object Dump {
           fieldsEscapedBy = fmt.escapeChar.toString,
           header = cfg.includeHeader,
           linesStartingBy = Some(fmt.linesStartingBy))
-        import scala.jdk.CollectionConverters._
         fileLog.value.asScala.toSeq.distinct.foreach { dataFile =>
           val stmtName = dataFile.replaceFirst("\\.dat(\\.[a-z0-9]+)?$", ".sql")
           val text = (if (cfg.sqlFileHeaders)
@@ -331,39 +346,26 @@ object Dump {
             java.nio.file.Paths.get(cfg.outDir, stmtName),
             text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
-        n
+        (written, xor)
       case CsvFormat =>
-        // Observation rides the write job — row count without a second scan
-        val obs = new org.apache.spark.sql.Observation()
-        CsvDump.write(partitioned.observe(obs, count(lit(1)).as("rows")),
-          s"${cfg.outDir}/$dbStem.$stem",
-          CsvDump.Options(compress = cfg.compress, codec = cfg.compressCodec))
-        obs.get("rows").asInstanceOf[Long]
+        observed(d => CsvDump.write(d, s"${cfg.outDir}/$dbStem.$stem",
+          CsvDump.Options(compress = cfg.compress, codec = cfg.compressCodec)))
       case ParquetFormat =>
-        val obs = new org.apache.spark.sql.Observation()
-        partitioned.observe(obs, count(lit(1)).as("rows"))
-          .write.mode("overwrite")
+        observed(_.write.mode("overwrite")
           .partitionBy(cfg.partitionBy: _*)
-          .parquet(s"${cfg.outDir}/$dbStem.$stem")
-        obs.get("rows").asInstanceOf[Long]
+          .parquet(s"${cfg.outDir}/$dbStem.$stem"))
       case OrcFormat =>
-        val obs = new org.apache.spark.sql.Observation()
-        partitioned.observe(obs, count(lit(1)).as("rows"))
-          .write.mode("overwrite")
+        observed(_.write.mode("overwrite")
           .partitionBy(cfg.partitionBy: _*)
-          .orc(s"${cfg.outDir}/$dbStem.$stem")
-        obs.get("rows").asInstanceOf[Long]
+          .orc(s"${cfg.outDir}/$dbStem.$stem"))
       case JsonlFormat =>
-        val obs = new org.apache.spark.sql.Observation()
-        partitioned.observe(obs, count(lit(1)).as("rows"))
-          .write.mode("overwrite")
+        observed(_.write.mode("overwrite")
           .partitionBy(cfg.partitionBy: _*)
           // jsonl is an engine extension (no reference analog), and
           // Spark's zstd text codec needs native Hadoop libs — the lake
           // format stays on gzip regardless of --compress's codec
           .option("compression", if (cfg.compress) "gzip" else "none")
-          .json(s"${cfg.outDir}/$dbStem.$stem")
-        obs.get("rows").asInstanceOf[Long]
+          .json(s"${cfg.outDir}/$dbStem.$stem"))
       case ClickHouseFormat =>
         // companion loader script: one INSERT..FROM INFILE per chunk
         // file (write_clickhouse_statement pairs one statement per data
@@ -374,16 +376,15 @@ object Dump {
         // into the same dir and returns nothing on non-local filesystems.
         val fileLog = df.sparkSession.sparkContext
           .collectionAccumulator[String](s"files_dumped_${cfg.db}.$stem")
-        val n = SqlInsertWriter.write(partitioned, dbStem, stem, cfg.outDir,
+        val written = SqlInsertWriter.write(checksummed, dbStem, stem, cfg.outDir,
           SqlInsertWriter.Options(statementSize = cfg.statementSize,
-            compress = cfg.compress, fileLog = Some(fileLog)))
-        import scala.jdk.CollectionConverters._
+            compress = cfg.compress, fileLog = Some(fileLog), checksum = checksumInto))
         val dataFiles = fileLog.value.asScala.toSeq.distinct.sorted
         java.nio.file.Files.write(
           java.nio.file.Paths.get(cfg.outDir, s"$dbStem.$stem-load.sql"),
           sources.ClickHouse.loaderScript(cfg.db, table, dataFiles)
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        n
+        (written, xor)
     }
     // --build-empty-files: the reference keeps the opened (header-only)
     // file for a zero-row table instead of deleting it
@@ -430,7 +431,7 @@ object Dump {
     if (dbStem != cfg.db && !noSchemas)
       writeSchemaObject(cfg.outDir, dbStem, SchemaKind.Database,
         databaseCreate(cfg), ifAbsent = true)
-    TableResult(table, rows, probe.fold(0L)(_.getLong(1)),
+    TableResult(table, rows, checksum,
       if (noData) 0 else math.max(chunks, 1), stem = stem,
       // lake layouts read back in a different shape than they dumped
       // (partitionBy appends partition columns; JSON inference
@@ -547,7 +548,6 @@ object Dump {
     if (threads <= 1) xs.map(f)
     else {
       import java.util.concurrent.{Callable, ExecutionException, Executors}
-      import scala.jdk.CollectionConverters._
       val pool = Executors.newFixedThreadPool(threads)
       try pool.invokeAll(xs.map(x => (() => f(x)): Callable[B]).asJava).asScala.toSeq
         .map(r => try r.get() catch { case e: ExecutionException => throw e.getCause })

@@ -1,15 +1,15 @@
 package graft
 
-import graft.core.DumpManifest
 import graft.functions.Checksum
 import graft.load.DependencyScheduler
 import graft.load.DependencyScheduler.TablePlan
 import graft.sources.{CsvDump, LoadDataReader, LoadDataStatement, LoadDataWriter, SqlInsertReader}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, row_number}
 import org.apache.spark.sql.types.StructType
 
-import scala.concurrent.ExecutionContext
+import scala.concurrent.{Await, ExecutionContext, TimeoutException}
+import scala.concurrent.duration._
 
 /** The load pipeline (SURVEY §3.2): discovery → file-type routing (S11)
   * → dependency-ordered restore (L1) → checksum verification (L5).
@@ -264,12 +264,8 @@ object Load {
     * parser would silently yield an empty schema. Codecs match the dump
     * side (JVM gzip; zstd-jni, already on the Spark classpath). */
   def readSmallText(p: java.nio.file.Path): String = {
-    val raw = new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(p))
-    val in: java.io.InputStream = p.getFileName.toString match {
-      case n if n.endsWith(".gz")  => new java.util.zip.GZIPInputStream(raw)
-      case n if n.endsWith(".zst") => new com.github.luben.zstd.ZstdInputStream(raw)
-      case _                       => raw
-    }
+    val in = SqlInsertReader.decoded(p.getFileName.toString,
+      new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(p)))
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
   }
@@ -293,12 +289,19 @@ object Load {
   }
 
   /** Restore dumped tables through the dependency scheduler, verifying
-    * checksums against the manifest per [[ChecksumMode]]. `writeTarget`
-    * is the restore sink (lake write / JDBC batch write). `decode =
-    * Some((cmd, ext))` restores exec-per-thread dumps: data files
-    * carrying `ext` stream through the inverse child command
-    * ([[graft.sources.SqlInsertReader.readFiltered]]) instead of the
-    * codec-routed text reader. */
+    * checksums against the manifest per [[ChecksumMode]]. Each table is
+    * one pass, one task per chunk file; its row count and CRC32-XOR are
+    * observed on the restore's own write, so verification happens AFTER
+    * the write, as in myloader. `decode = Some((cmd, ext))` restores
+    * exec-per-thread dumps: data files carrying `ext` stream through the
+    * inverse child command ([[graft.sources.SqlInsertReader.readFiltered]]).
+    *
+    * `writeTarget` is the restore sink, e.g. `df.write.parquet(...)`.
+    * Contract: it runs exactly ONE action, which writes the frame it is
+    * given with no exchange (repartition, global sort, join) before the
+    * write. That keeps the observation in the write's result stage,
+    * where Spark applies a task's update once (a retried map-stage task
+    * would apply it again). One that runs no action fails the restore. */
   def run(spark: SparkSession, dumpDir: String, sources: Seq[TableSource],
       checksumMode: ChecksumMode = ChecksumWarn,
       decode: Option[(Seq[String], String)] = None)(
@@ -362,23 +365,29 @@ object Load {
               } else SqlInsertReader.read(spark, dumpDir, src.schema,
                 glob = globOr(s"${src.table}.*.sql*", ".sql"))
           }
-          // skip mode never computes the verification scan — at scale
-          // that's a whole extra pass over the data
-          val (rows, ok) = checksumMode match {
-            case ChecksumSkip => (df.count(), None)
-            case _ =>
-              val (r, cs) = rowsAndChecksum(df)
-              val matches = src.expectedChecksum.map(_ == cs)
-              if (matches.contains(false)) {
-                val msg = s"checksum mismatch for ${src.table}: " +
-                  s"expected ${src.expectedChecksum.get}, got $cs"
-                if (checksumMode == ChecksumFail)
-                  throw new IllegalStateException(msg)
-                else System.err.println(s"[graft] WARN $msg")
-              }
-              (r, matches)
+          // rows and checksum ride the write (skip mode observes rows
+          // only): a mismatch surfaces after it, as in myloader.c:684-715
+          val obs = new Observation()
+          val verify = checksumMode != ChecksumSkip
+          val cs = Checksum.rowsAndChecksumCols(df, verify)
+          writeTarget(src.table, df.observe(obs, cs.head, cs.tail: _*))
+          val m = try Await.result(obs.future, 2.minutes) catch {
+            case _: TimeoutException => throw new IllegalStateException(
+              s"restore of ${src.table}: writeTarget ran no action over its frame")
           }
-          writeTarget(src.table, df)
+          val rows = m.getAs[Long]("rows")
+          val ok = if (!verify) None else {
+            val got = m.getAs[Long]("checksum")
+            val matches = src.expectedChecksum.map(_ == got)
+            if (matches.contains(false)) {
+              val msg = s"checksum mismatch for ${src.table}: " +
+                s"expected ${src.expectedChecksum.get}, got $got"
+              if (checksumMode == ChecksumFail)
+                throw new IllegalStateException(msg)
+              else System.err.println(s"[graft] WARN $msg")
+            }
+            matches
+          }
           results.put(src.table, Result(src.table, rows, ok))
         }))
     }
@@ -386,17 +395,6 @@ object Load {
     sources.map(s => results.get(s.table))
   }
 
-  private def rowsAndChecksum(df: DataFrame): (Long, Long) = {
-    val r = df.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      Checksum.tableChecksum(df)).head()
-    // zero-row table: the checksum agg yields NULL; the dump side
-    // records 0 for it (schema-only / --no-data dumps)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  /** Verify a manifest against restored tables (L5 standalone form). */
   /** Row-level merge of an incremental dump into a base snapshot (the
     * row-granularity analog of the loader's table-level overwrite modes;
     * pairs with an `--updated-since`-filtered dump): latest version per
@@ -416,13 +414,4 @@ object Load {
       .where(col("__rn") === 1)
       .drop("__rn", "__is_delta")
   }
-
-  def verifyChecksums(manifest: DumpManifest,
-      restored: Map[String, DataFrame]): Map[String, Boolean] =
-    manifest.tables.flatMap { t =>
-      restored.get(t.table).map { df =>
-        val cs = df.agg(Checksum.tableChecksum(df)).head().getLong(0)
-        t.table -> t.dataChecksum.contains(cs.toString)
-      }
-    }.toMap
 }

@@ -23,13 +23,6 @@ final case class TableMeta(
     estimatedRows: Long = -1L,
     isTransactional: Boolean = true) {
   def qualified: String = s"$database.$table"
-  /** Filename-safe name (reference sanitizes dots/specials,
-    * mydumper_database.c). */
-  def fileStem: String = s"$database.$table"
-  /** Projection list excluding generated columns, in ordinal order
-    * (mydumper_table.c:262-294). */
-  def selectableColumns: Seq[String] =
-    columns.filterNot(_.isGenerated).sortBy(_.ordinal).map(_.name)
 }
 
 /** Per-table configuration (reference per-table conf,

@@ -32,9 +32,28 @@ object Checksum {
     concat_ws("\u001f", cols.map(c => coalesce(c.cast(StringType), lit("\u0000"))): _*)
 
   /** CRC32-XOR digest of the given columns — the engine's `CHECKSUM TABLE`. */
-  def tableChecksum(df: DataFrame, cols: Seq[String] = Nil): Column = {
+  def tableChecksum(df: DataFrame, cols: Seq[String] = Nil): Column =
+    bitXorAgg(rowChecksum(df, cols))
+
+  /** The per-row CRC32 term [[tableChecksum]] XORs: a writer that XORs
+    * this column over every row it writes gets the same digest bit for
+    * bit (0 for no rows, where the aggregate is NULL). */
+  def rowChecksum(df: DataFrame, cols: Seq[String] = Nil): Column = {
     val use = if (cols.nonEmpty) cols else df.columns.toSeq
-    bitXorAgg(crc32(rowText(use.map(df.col)).cast(BinaryType)))
+    crc32(rowText(use.map(df.col)).cast(BinaryType))
+  }
+
+  /** `rows` and `checksum` aggregates over every column of `df`; the
+    * checksum is 0, not NULL, for zero rows (what a dump records for an
+    * empty table), and the literal 0 with `checksum` off. */
+  def rowsAndChecksumCols(df: DataFrame, checksum: Boolean = true): Seq[Column] = Seq(
+    count(lit(1)).as("rows"),
+    (if (checksum) coalesce(tableChecksum(df), lit(0L)) else lit(0L)).as("checksum"))
+
+  /** (rows, checksum) of `df` in one aggregate, null-safe for zero rows. */
+  def rowsAndChecksum(df: DataFrame): (Long, Long) = {
+    val r = df.select(rowsAndChecksumCols(df): _*).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** bit_xor aggregate over longs (Spark SQL `bit_xor` exposed to the
@@ -61,9 +80,7 @@ object Checksum {
     * md5 replays it bit-for-bit — DuckDB gates it as q_checksum_md5,
     * which CRC32 can't offer there. Use on integer/string columns;
     * float/timestamp → string rendering differs across engines. */
-  def portableRowText(cols: Seq[Column]): Column =
-    concat_ws("\u001f",
-      cols.map(c => coalesce(c.cast(StringType), lit("\u0000"))): _*)
+  def portableRowText(cols: Seq[Column]): Column = rowText(cols)
 
   def portableChecksum(df: DataFrame, cols: Seq[String]): Column =
     bitXorAgg(

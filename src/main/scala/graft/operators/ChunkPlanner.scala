@@ -128,20 +128,6 @@ object ChunkPlanner {
     }
   }
 
-  /** A3 — cardinality estimate (the reference parses EXPLAIN's `rows`
-    * column, mydumper_chunks.c:259-288): Catalyst plan statistics when
-    * the source provides a row count (CBO / file metadata), else a
-    * Bernoulli-sampled count scaled up. A sample still reads every row
-    * of a file source, so it costs a full scan — no cheaper than an
-    * exact count fused into an aggregate the caller runs anyway. */
-  def rowEstimate(df: DataFrame, sampleFraction: Double = 0.01): Long = {
-    val fromStats = df.queryExecution.optimizedPlan.stats.rowCount
-    fromStats.map(_.toLong).getOrElse {
-      math.round(df.sample(withReplacement = false, sampleFraction, seed = 42L)
-        .count() / sampleFraction)
-    }
-  }
-
   /** Probe min/max (A1 — one agg job, map-side combine). None = the
     * table (or its filtered slice) has no rows — min/max aggregate to
     * NULL, and a chunk plan over an empty range is the caller's no-op,

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -43,12 +46,14 @@ object LoadDataWriter {
       compress: Boolean = false,
       compressCodec: String = "gzip",
       execFilter: Option[ExecFilter] = None,
-      fileLog: Option[org.apache.spark.util.CollectionAccumulator[String]] = None)
+      fileLog: Option[org.apache.spark.util.CollectionAccumulator[String]] = None,
+      // as SqlInsertWriter.Options.checksum
+      checksum: Option[org.apache.spark.util.CollectionAccumulator[Long]] = None)
 
   /** Dump `df` as `.dat` files under `outDir`; returns the row count. */
   def write(df: DataFrame, db: String, table: String, outDir: String,
       opts: Options = Options()): Long = {
-    val schema = df.schema
+    val schema = StructType(df.schema.dropRight(opts.checksum.size)) // minus the checksum term
     val conf = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val counts = df.sparkSession.sparkContext
@@ -66,7 +71,7 @@ object LoadDataWriter {
         try {
           written = SqlInsertWriter.packRows(rows, render, render.length,
             opts.format, header = "", headerBytes = 0L, delimBytes = 0L,
-            opts.statementSize, w, nullText = "\\N")
+            opts.statementSize, w, nullText = "\\N", checksum = opts.checksum)
           w.close()
         } catch {
           case e: Throwable => w.abort(); throw e
@@ -112,7 +117,7 @@ object LoadDataWriter {
       // isolated before it joins the row (the reference's
       // buffers.column, write.c:735)
       val col = new java.lang.StringBuilder(64)
-      def enclosed(fill: org.apache.spark.sql.catalyst.InternalRow => String)
+      def enclosed(fill: InternalRow => String)
           : SqlInsertWriter.FieldRenderer = (sb, row) => {
         col.setLength(0)
         SqlInsertWriter.escapeInto(col, fill(row))
@@ -174,7 +179,8 @@ object LoadDataWriter {
   * fields on the field terminator, honor optional enclosure, and decode
   * `escape char + c` with MySQL's read map (`\0 \b \n \r \t \Z` decode,
   * `\N` alone is NULL, anything else is the char itself). One parse
-  * task per file (`wholetext`), like [[SqlInsertReader]]. */
+  * task per file, like [[SqlInsertReader]]; a record whose field count
+  * is not the schema's column count stops the read. */
 object LoadDataReader {
 
   def read(spark: SparkSession, dir: String, schema: StructType,
@@ -186,8 +192,8 @@ object LoadDataReader {
         .stripSuffix(fmt.linesTerminatedBy))
     else None
     val hexBlob = opts.hexBlob
-    val rdd = SqlInsertReader.wholeTextFiles(spark, s"$dir/$glob")
-      .flatMap { text =>
+    val rows = SqlInsertReader.wholeTextFiles(spark, s"$dir/$glob")
+      .flatMap { case (file, text) =>
         val records = splitRecords(text, fmt.linesTerminatedBy)
         val body = headerLine match {
           case Some(h) => records.dropWhile(_ == h)
@@ -201,10 +207,21 @@ object LoadDataReader {
             val at = rec.indexOf(fmt.linesStartingBy)
             if (at < 0) None else Some(rec.substring(at + fmt.linesStartingBy.length))
           }
-        started.iterator
-          .map(rec => coerce(parseRecord(rec, fmt), schema, hexBlob))
+        val convert = schema.fields.map(f => SqlInsertReader.fromText(f.dataType))
+        started.iterator.map { rec =>
+          val vals = parseRecord(rec, fmt)
+          if (vals.length != schema.length) throw new IllegalStateException(
+            s"$file: a record has ${vals.length} fields, the schema has ${schema.length} columns")
+          new GenericInternalRow(Array.tabulate[Any](vals.length)(i => vals(i) match {
+            case None => SqlInsertReader.nullFor(file, schema(i))
+            case Some(t) if schema(i).dataType == BinaryType =>
+              if (hexBlob) SqlInsertReader.hexToBytes(t, 0, t.length)
+              else t.getBytes(StandardCharsets.ISO_8859_1)
+            case Some(t) => convert(i)(t)
+          })): InternalRow
+        }
       }
-    spark.createDataFrame(rdd, schema)
+    DatasetBridge.fromInternalRows(spark, rows, schema)
   }
 
   /** Split on the line terminator. EOF directly after the final
@@ -273,40 +290,6 @@ object LoadDataReader {
     }
     out.toArray
   }
-
-  private def coerce(vals: Array[Option[String]], schema: StructType,
-      hexBlob: Boolean): Row = {
-    val out = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      out(i) = vals(i) match {
-        case None => null
-        case Some(text) => schema(i).dataType match {
-          case _: ByteType    => text.toByte
-          case _: ShortType   => text.toShort
-          case _: IntegerType => text.toInt
-          case _: LongType    => text.toLong
-          case _: FloatType   => text.toFloat
-          case _: DoubleType  => text.toDouble
-          case _: DecimalType => new java.math.BigDecimal(text)
-          case _: BooleanType => text == "1" || text.equalsIgnoreCase("true")
-          case _: BinaryType  =>
-            if (hexBlob) hexToBytes(text)
-            else text.getBytes(StandardCharsets.ISO_8859_1)
-          case _: TimestampType    => java.sql.Timestamp.valueOf(text)
-          case _: TimestampNTZType => java.sql.Timestamp.valueOf(text).toLocalDateTime
-          case _: DateType         => java.sql.Date.valueOf(text)
-          case _ => text
-        }
-      }
-      i += 1
-    }
-    Row.fromSeq(out.toIndexedSeq)
-  }
-
-  private def hexToBytes(h: String): Array[Byte] =
-    Array.tabulate(h.length / 2)(k =>
-      Integer.parseInt(h.substring(2 * k, 2 * k + 2), 16).toByte)
 }
 
 /** Parser for the per-chunk companion `.sql` statement the dump side

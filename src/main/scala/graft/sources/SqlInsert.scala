@@ -1,13 +1,17 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 
-import java.io.{BufferedOutputStream, OutputStream}
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
@@ -76,6 +80,9 @@ object SqlInsertWriter {
       // up stale files from earlier runs and returns nothing on
       // non-local filesystems
       fileLog: Option[org.apache.spark.util.CollectionAccumulator[String]] = None,
+      // when set, `df`'s LAST column is Checksum.rowChecksum's per-row
+      // term, never rendered: every task adds the XOR of its rows' terms
+      checksum: Option[CollectionAccumulator[Long]] = None,
       // the --fields-terminated-by knob family, resolved through the
       // reference's per-format default matrix ([[RowFormat.resolve]],
       // mydumper_write.c:252-281): rows render as
@@ -102,7 +109,7 @@ object SqlInsertWriter {
     * per-value type dispatch in the row loop. */
   def write(df: DataFrame, db: String, table: String, outDir: String,
       opts: Options = Options()): Long = {
-    val schema = df.schema
+    val schema = StructType(df.schema.dropRight(opts.checksum.size)) // minus the checksum term
     val conf = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val counts = df.sparkSession.sparkContext.longAccumulator(s"rows_dumped_$db.$table")
@@ -121,7 +128,7 @@ object SqlInsertWriter {
           opts.fileHeader, opts.fileLog, opts.compressCodec)
         try {
           written = packRows(rows, render, n, fmt, header, headerBytes,
-            delimBytes, opts.statementSize, w)
+            delimBytes, opts.statementSize, w, checksum = opts.checksum)
           w.close() // SUCCESS path: commit (rename temp → final name)
         } catch {
           case e: Throwable =>
@@ -142,14 +149,21 @@ object SqlInsertWriter {
     * own oversized statement (:956-963); lengths are UTF-8 BYTES. For
     * LOAD-DATA shapes `statementHeader` is empty and the terminator /
     * row delimiter resolve to "" — the same loop degrades to plain
-    * buffered row streaming, like the reference's shared code path. */
+    * buffered row streaming, like the reference's shared code path.
+    * With `checksum`, column `n` of each row is its checksum term, and
+    * the XOR of the terms is added once. Writers call this from a
+    * result-stage task, whose accumulator update Spark applies once per
+    * partition however many attempts ran, so no partition is XOR-ed
+    * twice. */
   private[sources] def packRows(
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      rows: Iterator[InternalRow],
       render: Array[FieldRenderer], n: Int, fmt: RowFormat.Resolved,
       header: String, headerBytes: Long, delimBytes: Long,
       statementSize: Int, w: PartitionWriter,
-      nullText: String = "NULL"): Long = {
+      nullText: String = "NULL",
+      checksum: Option[CollectionAccumulator[Long]] = None): Long = {
     var written = 0L
+    var xor = 0L
     val sb = new java.lang.StringBuilder(statementSize + 4096)
     val rowSb = new java.lang.StringBuilder(256)
     var stmtBytes = 0L
@@ -166,6 +180,7 @@ object SqlInsertWriter {
         i += 1
       }
       rowSb.append(fmt.linesTerminatedBy)
+      if (checksum.isDefined) xor ^= r.getLong(n)
       var rowBytes = RowFormat.utf8Length(rowSb)
       if (stmtBytes + rowBytes + 1 > statementSize) {
         if (rowsInStmt == 0) { // oversized single row, ships alone
@@ -187,11 +202,12 @@ object SqlInsertWriter {
     // a trailing header-only buffer (last row shipped oversized)
     // is discarded, like the reference's num_rows_st>0 gate (:1016)
     if (rowsInStmt > 0) { sb.append(fmt.statementTerminatedBy); w.emit(sb.toString) }
+    checksum.foreach(_.add(xor))
     written
   }
 
   private[sources] type FieldRenderer =
-    (java.lang.StringBuilder, org.apache.spark.sql.catalyst.InternalRow) => Unit
+    (java.lang.StringBuilder, InternalRow) => Unit
 
   /** One renderer closure per column, dispatched on type exactly once.
     *
@@ -428,38 +444,58 @@ object SqlInsertWriter {
 
 /** Loader side (myloader analog, SURVEY §2.1 S12 input half): parse
   * SQL-INSERT dump files back into a DataFrame of the given schema.
-  * Files are read whole (statements contain escaped newlines), tuples
-  * tokenized by a quote-aware scanner, values coerced by column type.
-  * Distributed: `wholetext` read → one parse task per file.
+  * One parse task per file: the files are listed on the driver, each
+  * task reads its file whole (statements contain escaped newlines) and
+  * walks it once with [[Scanner]], which emits Catalyst rows directly.
   */
 object SqlInsertReader {
 
-  /** Whole-file text with extension-routed decompression, one string per
-    * file: gzip via the JVM, zstd via zstd-jni — NOT Hadoop's
-    * ZStandardCodec, which needs native libhadoop+libzstd and silently
-    * absent on plain-JVM clusters (the same decode matrix the DDL parse
-    * side uses, Load.scala). Plain files pass through as UTF-8. */
-  private[graft] def wholeTextFiles(spark: SparkSession,
-      glob: String): org.apache.spark.rdd.RDD[String] =
-    spark.sparkContext.binaryFiles(glob).map { case (name, pds) =>
-      val raw = pds.open()
-      val in: java.io.InputStream =
-        if (name.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw)
-        else if (name.endsWith(".zst")) new com.github.luben.zstd.ZstdInputStream(raw)
-        else raw
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
+  /** Files matching `glob`, listed on the driver through the Hadoop FS,
+    * sorted. `.`/`_` names are skipped as FileInputFormat does (a
+    * writer's `.name.tmp`, `_SUCCESS`); no match is an error. */
+  private[graft] def listFiles(spark: SparkSession, glob: String): Seq[String] = {
+    val p = new Path(glob)
+    val files = Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
+      .getOrElse(Array.empty[FileStatus]).filter(_.isFile).map(_.getPath)
+      .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    if (files.isEmpty) throw new java.io.FileNotFoundException(s"no data files match $glob")
+    files.map(_.toString).sorted.toSeq
+  }
+
+  /** Extension-routed decompression: gzip via the JVM, zstd via
+    * zstd-jni — NOT Hadoop's ZStandardCodec, which needs native
+    * libhadoop+libzstd and silently absent on plain-JVM clusters. */
+  private[graft] def decoded(name: String, raw: InputStream): InputStream =
+    if (name.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw)
+    else if (name.endsWith(".zst")) new com.github.luben.zstd.ZstdInputStream(raw)
+    else raw
+
+  /** (path, whole-file UTF-8 text) per file of `glob`, one task each:
+    * every task opens its own file through the Hadoop FS and `bytes`
+    * reads it (and closes it) — by default decoded by extension. */
+  private[graft] def wholeTextFiles(spark: SparkSession, glob: String,
+      bytes: (String, InputStream) => Array[Byte] = (name, raw) => {
+        val in = decoded(name, raw)
+        try in.readAllBytes() finally in.close()
+      }): RDD[(String, String)] = {
+    val files = listFiles(spark, glob)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.parallelize(files, files.size).map { name =>
+      val p = new Path(name)
+      (name, new String(bytes(name, p.getFileSystem(conf.value).open(p)), StandardCharsets.UTF_8))
     }
+  }
 
   /** `glob` selects which dump files to load — default all SQL dumps in
     * the dir; pass `"db.table.*.sql*"` for one table's files. */
   def read(spark: SparkSession, dir: String, schema: StructType,
-      glob: String = "*.sql*"): DataFrame = {
-    val rdd = wholeTextFiles(spark, s"$dir/$glob")
-      .flatMap(f => parseStatements(f).flatten)
-      .map(t => coerce(tupleToRow(t), schema))
-    spark.createDataFrame(rdd, schema)
-  }
+      glob: String = "*.sql*"): DataFrame =
+    parse(spark, wholeTextFiles(spark, s"$dir/$glob"), schema)
+
+  private def parse(spark: SparkSession, files: RDD[(String, String)],
+      schema: StructType): DataFrame =
+    DatasetBridge.fromInternalRows(spark,
+      files.flatMap { case (name, text) => new Scanner(text, name, schema) }, schema)
 
   /** Read dump files produced with an exec-per-thread filter
     * ([[ExecFilter]]): each file's bytes stream through the INVERSE
@@ -472,131 +508,171 @@ object SqlInsertReader {
   def readFiltered(spark: SparkSession, dir: String, schema: StructType,
       decodeCmd: Seq[String], glob: String = "*.sql*"): DataFrame = {
     require(decodeCmd.nonEmpty, "empty decode command")
-    val rdd = spark.sparkContext.binaryFiles(s"$dir/$glob")
-      .flatMap { case (path, pds) =>
-        val proc = new ProcessBuilder(decodeCmd: _*).start()
-        // an INPUT-side failure must fail the task, not just close
-        // stdin: a truncation-tolerant child (cat, frame-per-block
-        // codecs) exits 0 on a partial stream, which would silently
-        // drop every row after the read error. Only a child-side pipe
-        // break (child exited early) may defer to the exit code.
-        @volatile var feedError: Throwable = null
-        val feeder = new Thread(() => {
+    parse(spark, wholeTextFiles(spark, s"$dir/$glob", (path, in) => {
+      val proc = new ProcessBuilder(decodeCmd: _*).start()
+      // an INPUT-side failure must fail the task, not just close
+      // stdin: a truncation-tolerant child (cat, frame-per-block
+      // codecs) exits 0 on a partial stream, which would silently
+      // drop every row after the read error. Only a child-side pipe
+      // break (child exited early) may defer to the exit code.
+      @volatile var feedError: Throwable = null
+      val feeder = new Thread(() => {
+        try {
           try {
-            val in = pds.open()
-            try {
-              val os = proc.getOutputStream
-              val buf = new Array[Byte](1 << 16)
-              var n = in.read(buf)
-              while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = in.read(buf) }
-              os.close()
-            } finally in.close()
-          } catch {
-            case t: Throwable =>
-              feedError = t
-              proc.destroyForcibly() // unblock readAllBytes/waitFor
-          }
-        }, "graft-decode-feeder")
-        feeder.setDaemon(true)
-        feeder.start()
-        val text = new String(proc.getInputStream.readAllBytes(),
-          StandardCharsets.UTF_8)
-        val exit = proc.waitFor()
-        feeder.join()
-        val feedMsg = Option(feedError).flatMap(t => Option(t.getMessage)).getOrElse("")
-        if (feedError != null && !feedMsg.contains("Broken pipe") &&
-            !feedMsg.contains("Stream closed"))
-          throw new java.io.IOException(s"decode input read failed for $path", feedError)
-        if (exit != 0)
-          throw new java.io.IOException(
-            s"decode filter '${decodeCmd.mkString(" ")}' exited $exit for $path")
-        parseStatements(text).flatten
-      }
-      .map(t => coerce(tupleToRow(t), schema))
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Extract the VALUES tuples of every INSERT statement in a file.
-    * Returns tuple bodies (content between the outer parens). */
-  def parseStatements(sql: String): Seq[Seq[String]] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    var i = 0
-    while (i < sql.length) {
-      val v = sql.indexOf("VALUES", i)
-      if (v < 0) { i = sql.length }
-      else {
-        var j = v + "VALUES".length
-        val tuples = scala.collection.mutable.ArrayBuffer.empty[String]
-        var done = false
-        while (!done && j < sql.length) {
-          sql.charAt(j) match {
-            case '(' =>
-              val (tuple, next) = scanTuple(sql, j)
-              tuples += tuple; j = next
-            case ';' => done = true; j += 1
-            case c if c == ',' || Character.isWhitespace(c) => j += 1
-            case _ => done = true
-          }
+            val os = proc.getOutputStream
+            val buf = new Array[Byte](1 << 16)
+            var n = in.read(buf)
+            while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = in.read(buf) }
+            os.close()
+          } finally in.close()
+        } catch {
+          case t: Throwable =>
+            feedError = t
+            proc.destroyForcibly() // unblock readAllBytes/waitFor
         }
-        out += tuples.toSeq
-        i = j
-      }
-    }
-    out.toSeq
+      }, "graft-decode-feeder")
+      feeder.setDaemon(true)
+      feeder.start()
+      val text = proc.getInputStream.readAllBytes()
+      val exit = proc.waitFor()
+      feeder.join()
+      val feedMsg = Option(feedError).flatMap(t => Option(t.getMessage)).getOrElse("")
+      if (feedError != null && !feedMsg.contains("Broken pipe") &&
+          !feedMsg.contains("Stream closed"))
+        throw new java.io.IOException(s"decode input read failed for $path", feedError)
+      if (exit != 0)
+        throw new java.io.IOException(
+          s"decode filter '${decodeCmd.mkString(" ")}' exited $exit for $path")
+      text
+    }), schema)
   }
 
-  /** Scan one parenthesized tuple starting at `start` (the '('); returns
-    * (inner text, index after ')'). Quote- and escape-aware; both `'`
-    * and `"` open a literal (the writer encloses with whichever char
-    * detect_quote_character picked — `"` under backtick identifier
-    * quoting, `'` under ANSI_QUOTES), closed by the same char. */
-  private def scanTuple(sql: String, start: Int): (String, Int) = {
-    var j = start + 1
-    var depth = 1
-    var quoteCh: Char = 0
-    val sb = new java.lang.StringBuilder(64)
-    while (j < sql.length && depth > 0) {
-      val c = sql.charAt(j)
-      if (quoteCh != 0) {
-        if (c == '\\' && j + 1 < sql.length) { sb.append(c).append(sql.charAt(j + 1)); j += 2 }
-        else { if (c == quoteCh) quoteCh = 0; sb.append(c); j += 1 }
-      } else c match {
-        case '\'' | '"' => quoteCh = c; sb.append(c); j += 1
-        case '(' => depth += 1; sb.append(c); j += 1
-        case ')' => depth -= 1; if (depth > 0) sb.append(c); j += 1
-        case _ => sb.append(c); j += 1
+  /** One pass over a dump file's text: every VALUES tuple becomes one
+    * Catalyst row of `schema`; values split on `,` and are trimmed.
+    * Quote- and escape-aware: `'` and `"` both open a literal (the
+    * writer's enclosure is detect_quote_character's pick), closed by the
+    * same char. A tuple of the wrong arity stops the read. */
+  private final class Scanner(sql: String, file: String, schema: StructType)
+      extends Iterator[InternalRow] {
+    private val n = schema.length
+    private val convert = schema.fields.map(f => fromText(f.dataType))
+    private var pos = 0
+    private var inValues = false
+    // values seen in the current tuple, and spans of the first n
+    private var k = 0
+    private val spans = new Array[Int](2 * n)
+
+    /** Moves `pos` to the next tuple's `(`; false at the end of the file. */
+    def hasNext: Boolean = {
+      var found = false
+      while (!found && pos < sql.length) {
+        if (!inValues) {
+          val v = sql.indexOf("VALUES", pos)
+          if (v < 0) pos = sql.length
+          else { pos = v + "VALUES".length; inValues = true }
+        }
+        while (!found && inValues && pos < sql.length) {
+          val c = sql.charAt(pos)
+          if (c == '(') found = true
+          else if (c == ';') { inValues = false; pos += 1 }
+          else if (c == ',' || Character.isWhitespace(c)) pos += 1
+          else inValues = false
+        }
+      }
+      found
+    }
+
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException(file)
+      k = 0
+      var j = pos + 1
+      var start = j
+      var depth = 1
+      var q: Char = 0
+      while (j < sql.length && depth > 0) {
+        val c = sql.charAt(j)
+        if (q != 0) {
+          if (c == '\\' && j + 1 < sql.length) j += 1
+          else if (c == q) q = 0
+        } else if (c == '\'' || c == '"') q = c
+        else if (c == '(') depth += 1
+        else if (c == ')') { depth -= 1; if (depth == 0) span(start, j) }
+        else if (c == ',') { span(start, j); start = j + 1 }
+        j += 1
+      }
+      if (depth > 0) span(start, sql.length) // unterminated last tuple
+      pos = j
+      if (k != n) throw new IllegalStateException(
+        s"$file: a VALUES tuple has $k values, the schema has $n columns")
+      new GenericInternalRow(Array.tabulate[Any](n)(i => value(i, spans(2 * i), spans(2 * i + 1))))
+    }
+
+    private def span(from: Int, until: Int): Unit = {
+      if (k < n) { spans(2 * k) = from; spans(2 * k + 1) = until }
+      k += 1
+    }
+
+    /** Column `i`'s value from the text `sql[from, until)`, trimmed. */
+    private def value(i: Int, from: Int, until: Int): Any = {
+      var s = from; var e = until
+      while (s < e && sql.charAt(s) <= ' ') s += 1
+      while (e > s && sql.charAt(e - 1) <= ' ') e -= 1
+      val f = schema.fields(i)
+      if (e - s == 4 && sql.startsWith("NULL", s)) nullFor(file, f)
+      else {
+        val q = if (e > s) sql.charAt(s) else ' '
+        val quoted = (q == '\'' || q == '"') && e - s >= 2 && sql.charAt(e - 1) == q
+        def text = if (quoted) unescape(sql, s + 1, e - 1) else sql.substring(s, e)
+        if (f.dataType != BinaryType) convert(i)(text)
+        else if (sql.startsWith("0x", s)) hexToBytes(sql, s + 2, e)
+        else if (sql.startsWith("_binary ", s) && e - s >= 10 &&
+            (sql.charAt(s + 8) == '\'' || sql.charAt(s + 8) == '"') &&
+            sql.charAt(e - 1) == sql.charAt(s + 8))
+          // inverse of escapeBinaryInto: chars are bytes 0-255;
+          // enclosure is whichever quote char the writer used
+          unescape(sql, s + 9, e - 1).getBytes(StandardCharsets.ISO_8859_1)
+        else text.getBytes(StandardCharsets.UTF_8)
       }
     }
-    (sb.toString, j)
   }
 
-  /** Split a tuple body into raw value tokens (quote-aware, both quote
-    * chars). */
-  def tupleToRow(tuple: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var j = 0
-    var quoteCh: Char = 0
-    val sb = new java.lang.StringBuilder(32)
-    while (j < tuple.length) {
-      val c = tuple.charAt(j)
-      if (quoteCh != 0) {
-        if (c == '\\' && j + 1 < tuple.length) { sb.append(c).append(tuple.charAt(j + 1)); j += 2 }
-        else { if (c == quoteCh) quoteCh = 0; sb.append(c); j += 1 }
-      } else if (c == '\'' || c == '"') { quoteCh = c; sb.append(c); j += 1 }
-      else if (c == ',') { out += sb.toString.trim; sb.setLength(0); j += 1 }
-      else { sb.append(c); j += 1 }
+  /** Text → Catalyst value for a non-binary column: the external value
+    * (`BigDecimal`, `Timestamp.valueOf`, ...) through CatalystTypeConverters,
+    * so decimal, ANSI and timestamp results match `createDataFrame`. */
+  private[sources] def fromText(dt: DataType): String => Any = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val parse: String => Any = dt match {
+      case ByteType         => _.toByte
+      case ShortType        => _.toShort
+      case IntegerType      => _.toInt
+      case LongType         => _.toLong
+      case FloatType        => _.toFloat
+      case DoubleType       => _.toDouble
+      case _: DecimalType   => new java.math.BigDecimal(_)
+      case BooleanType      => t => t == "1" || t.equalsIgnoreCase("true")
+      case TimestampType    => java.sql.Timestamp.valueOf(_)
+      case TimestampNTZType => java.sql.Timestamp.valueOf(_).toLocalDateTime
+      case DateType         => java.sql.Date.valueOf(_)
+      case _                => identity
     }
-    out += sb.toString.trim
-    out.toArray
+    t => toCatalyst(parse(t))
   }
+
+  /** NULL for `f`, or a named error when `f` is NOT NULL (a Catalyst
+    * row must never carry a null in a non-nullable slot). */
+  private[sources] def nullFor(file: String, f: StructField): Null =
+    if (f.nullable) null
+    else throw new IllegalStateException(s"$file: NULL in NOT NULL column ${f.name}")
 
   /** Unescape a quoted SQL string literal body. */
-  def unescape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
+  def unescape(s: String): String = unescape(s, 0, s.length)
+
+  private def unescape(s: String, from: Int, until: Int): String = {
+    val sb = new java.lang.StringBuilder(until - from)
+    var i = from
+    while (i < until) {
       val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
+      if (c == '\\' && i + 1 < until) {
         s.charAt(i + 1) match {
           case '0' => sb.append('\u0000')
           case 'n' => sb.append('\n')
@@ -610,50 +686,8 @@ object SqlInsertReader {
     sb.toString
   }
 
-  private def coerce(vals: Array[String], schema: StructType): Row = {
-    val out = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val raw = vals(i)
-      out(i) =
-        if (raw == "NULL") null
-        else {
-          val q = if (raw.nonEmpty) raw.charAt(0) else ' '
-          val text =
-            if ((q == '\'' || q == '"') && raw.length >= 2 && raw.last == q)
-              unescape(raw.substring(1, raw.length - 1))
-            else raw
-          schema(i).dataType match {
-            case _: ByteType    => text.toByte
-            case _: ShortType   => text.toShort
-            case _: IntegerType => text.toInt
-            case _: LongType    => text.toLong
-            case _: FloatType   => text.toFloat
-            case _: DoubleType  => text.toDouble
-            case d: DecimalType => new java.math.BigDecimal(text)
-            case _: BooleanType => text == "1" || text.equalsIgnoreCase("true")
-            case _: BinaryType  =>
-              if (raw.startsWith("0x")) hexToBytes(raw.substring(2))
-              else if (raw.startsWith("_binary ") && raw.length >= 10 &&
-                  (raw.charAt(8) == '\'' || raw.charAt(8) == '"') &&
-                  raw.last == raw.charAt(8))
-                // inverse of escapeBinaryInto: chars are bytes 0-255;
-                // enclosure is whichever quote char the writer used
-                unescape(raw.substring(9, raw.length - 1))
-                  .getBytes(StandardCharsets.ISO_8859_1)
-              else text.getBytes(StandardCharsets.UTF_8)
-            case _: TimestampType    => java.sql.Timestamp.valueOf(text)
-            case _: TimestampNTZType => java.sql.Timestamp.valueOf(text).toLocalDateTime
-            case _: DateType         => java.sql.Date.valueOf(text)
-            case _ => text
-          }
-        }
-      i += 1
-    }
-    Row.fromSeq(out.toIndexedSeq)
-  }
-
-  private def hexToBytes(h: String): Array[Byte] =
-    Array.tabulate(h.length / 2)(k =>
-      Integer.parseInt(h.substring(2 * k, 2 * k + 2), 16).toByte)
+  /** Hex digits `s[from, until)` as bytes (an odd last digit is dropped). */
+  private[sources] def hexToBytes(s: String, from: Int, until: Int): Array[Byte] =
+    Array.tabulate((until - from) / 2)(k =>
+      Integer.parseInt(s.substring(from + 2 * k, from + 2 * k + 2), 16).toByte)
 }

@@ -1023,6 +1023,37 @@ class CliLakeModeSpec extends SparkTestBase {
     assert(e.getMessage.contains("lake-format"), e.getMessage)
   }
 
+  private def restoredLines(logfile: String): Seq[String] =
+    scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(logfile)))
+      .asScala.toSeq.filter(_.startsWith("[graft] restored"))
+
+  test("an empty parquet table restores checksum-verified") {
+    // bit_xor over zero rows is NULL; the read-back must verify as 0
+    val out = java.nio.file.Files.createTempDirectory("graft_lkme_").toString
+    Main.main(Array("dump", "--source-dir", sf, "-o", out, "--tables-list",
+      "supplier", "--where", "1=0", "--format", "parquet", "--checksum-all"))
+    val target = java.nio.file.Files.createTempDirectory("graft_lkmet_").toString
+    val lf = java.nio.file.Files.createTempFile("graft_lkme_log", ".txt").toString
+    Main.main(Array("load", "-d", out, "--target", target,
+      "--checksum", "fail", "--logfile", lf))
+    assert(restoredLines(lf) === Seq("[graft] restored graft.supplier: 0 rows, checksum ok"))
+  }
+
+  test("an empty table restored with --resume verifies its read-back") {
+    val out = java.nio.file.Files.createTempDirectory("graft_lkmer_").toString
+    Main.main(Array("dump", "--source-dir", sf, "-o", out, "--tables-list",
+      "supplier", "--where", "1=0", "--checksum-all", "-e"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(out, "resume"), "graft.supplier.00000.sql\n")
+    val target = java.nio.file.Files.createTempDirectory("graft_lkmert_").toString
+    val lf = java.nio.file.Files.createTempFile("graft_lkmer_log", ".txt").toString
+    Main.main(Array("load", "-d", out, "--target", target, "--resume",
+      "--checksum", "fail", "--logfile", lf))
+    assert(spark.read.parquet(s"$target/graft.supplier").count() === 0L)
+    assert(restoredLines(lf) === Seq("[graft] restored graft.supplier: 0 rows, checksum ok"))
+  }
+
   test("stream-mode lake dumps record the dump-time schema and verify") {
     // the stream/daemon manifest used to omit sparkSchema, so its
     // partitioned/jsonl restores fell back to unverified (ok=None)

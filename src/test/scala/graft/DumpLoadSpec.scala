@@ -56,19 +56,24 @@ class DumpLoadSpec extends SparkTestBase {
       === Tables.region(spark, sf).count())
   }
 
+  /** A restore sink that writes nowhere: verification rides the write,
+    * so the frame must still be written once. */
+  private val noopWrite: (String, org.apache.spark.sql.DataFrame) => Unit =
+    (_, df) => df.write.format("noop").mode("overwrite").save()
+
   test("checksum mismatch aborts the load (--checksum=fail)") {
     val out = Files.createTempDirectory("graft_e2e_bad_").toString
     val r = Tables.region(spark, sf)
     Dump.run(spark, Seq(("region", r, true)), Dump.Config(outDir = out, db = "tpch"))
     val badSource = Load.TableSource("tpch.region", r.schema, Some(12345L))
     val ex = intercept[Exception] {
-      Load.run(spark, out, Seq(badSource), Load.ChecksumFail) { (_, _) => () }
+      Load.run(spark, out, Seq(badSource), Load.ChecksumFail)(noopWrite)
     }
     // warn (the reference default, myloader_arguments.c:193-194) records
     // the mismatch but completes; skip doesn't verify at all
-    val warned = Load.run(spark, out, Seq(badSource)) { (_, _) => () }
+    val warned = Load.run(spark, out, Seq(badSource))(noopWrite)
     assert(warned.head.checksumOk === Some(false))
-    val skipped = Load.run(spark, out, Seq(badSource), Load.ChecksumSkip) { (_, _) => () }
+    val skipped = Load.run(spark, out, Seq(badSource), Load.ChecksumSkip)(noopWrite)
     assert(skipped.head.checksumOk === None)
     assert(skipped.head.rows > 0)
     def chain(e: Throwable): Seq[String] =

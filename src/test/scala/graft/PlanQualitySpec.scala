@@ -230,14 +230,6 @@ class PlanQualitySpec extends SparkTestBase {
       "exploded variant side must not broadcast:\n" + p.take(1500))
   }
 
-  test("row estimate stays within 25% of the true count without a full scan") {
-    val o = Tables.orders(spark, sf)
-    val actual = o.count()
-    val est = operators.ChunkPlanner.rowEstimate(o, sampleFraction = 0.1)
-    assert(math.abs(est - actual).toDouble / actual <= 0.25,
-      s"estimate $est vs actual $actual")
-  }
-
   test("no catalog query plans a cartesian product or nested-loop join") {
     // whitelisted shapes are bounded by construction: batch ANN
     // crossJoins a BROADCAST probe set (contractually small); tf-idf
