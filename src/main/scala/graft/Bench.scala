@@ -6,7 +6,18 @@ import org.apache.spark.sql.SparkSession
   * through the `noop` sink so projections/serialization are actually
   * executed (a bare count() lets Catalyst prune most of the work). A JVM
   * warmup action runs first so the first measured query doesn't pay
-  * codegen/classloading. */
+  * codegen/classloading.
+  *
+  * Each timed entry also writes one [[Counters]] JSON line to STDERR
+  * (jobs, stages, tasks, task_s, shuffle, spill, peak stage memory),
+  * taken from the pass whose wall it records; stdout stays the single
+  * JSON line. Per-query cost of a few queries, one pass:
+  * {{{
+  * SPARK_GRAFT_BENCH_FILTER='^(q_semdedup|q_dedup_clusters)$' \
+  * SPARK_GRAFT_BENCH_REPS=1 sbt "runMain graft.Bench" 2>&1 | grep '^{"query"'
+  * }}}
+  * The formatted plan of one catalog query: `runMain graft.PlanDump
+  * <dir> <query>`. */
 object Bench {
   /** Min-of-reps timing of one catalog query. A query that THROWS on any
     * rep yields Left(message) — never a number: round 6's bench recorded
@@ -121,28 +132,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // calibration BEFORE any Spark work: the cleanest read of what CPU
     // this instance is giving a single thread right now
     val calibStart = calibrate()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graftnative.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, session-build time only: the 115-gate pass holds
-      // far more generated classes than the 100-entry default cache, so
-      // every pass re-paid whole-stage codegen for the class-heavy
-      // gates (q_dedup_incremental stamped ~2x its warm floor from
-      // exactly this — SCALE.md round-10). A wide-catalog session wants
-      // the cache sized to its plan count; same recommendation applies
-      // to any deployment running a large query catalog per JVM.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // warmup: compile the shared codegen shapes once on a small slice so
     // the first measured query of each shape isn't charged ~3-5s of
     // whole-stage-codegen/JIT infrastructure (measured: q_rollup paid
@@ -227,6 +220,16 @@ object Bench {
       }
     }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(t => keep(t._1))
+    // min across passes (or the first error); the counters of the pass
+    // whose wall is recorded go to stderr. Each pass's counters are read
+    // by Counters.measure after that pass's clock stopped.
+    def best(name: String,
+        runs: Seq[(Either[String, Double], Counters)]): Either[String, Double] =
+      runs.collectFirst { case (Left(e), _) => e }.toLeft {
+        val (t, c) = runs.collect { case (Right(t), c) => (t, c) }.minBy(_._1)
+        System.err.println(c.json(name))
+        t
+      }
     // a failed query is an ERROR entry, never a timed one — a crashed
     // child or a thrown exception timed as "fast" would corrupt the
     // committed record and hide the breakage inside a passing total
@@ -241,21 +244,18 @@ object Bench {
         // runs inflated two DISJOINT query sets 3-12x), so back-to-back
         // reps can both land in one window while passes minutes apart
         // almost never do — same total work, far lower variance
-        val perPass: Seq[Map[String, Either[String, Double]]] =
+        val perPass: Seq[Map[String, (Either[String, Double], Counters)]] =
           (1 to reps).map { _ =>
             selected.map { case (n, f) =>
-              n -> timeQuery(spark, sfDir, n, f, reps = 1)
+              n -> Counters.measure(spark.sparkContext)(
+                timeQuery(spark, sfDir, n, f, reps = 1))
             }.toMap
           }
         // per-pass catalog totals make the min-across-passes record
         // auditable: the committed total must sit within ~1.15x of the
         // best single pass, or something other than noise moved
-        passTotals = perPass.map(_.values.collect { case Right(t) => t }.sum)
-        selected.map { case (n, _) =>
-          val rs = perPass.map(_(n))
-          n -> rs.collectFirst { case Left(e) => e }
-            .toLeft(rs.collect { case Right(t) => t }.min)
-        }
+        passTotals = perPass.map(_.values.collect { case (Right(t), _) => t }.sum)
+        selected.map { case (n, _) => n -> best(n, perPass.map(_(n))) }
       }
     val catalog = measured.collect { case (n, Right(t)) => n -> t }
     val catalogErrs = measured.collect { case (n, Left(_)) => n }
@@ -404,25 +404,25 @@ object Bench {
     // checkpoint each pass (pass 1's cold leg keeps the startup cost;
     // later passes measure the same produce+drain volume warm, which is
     // exactly what a floor should be).
-    val pipelinePasses: Seq[Seq[(String, Double, Option[String])]] =
+    val pipelinePasses: Seq[Seq[(Either[String, Double], Counters)]] =
       (1 to reps).map { _ =>
         pipeline.map { case (name, thunk) =>
-          val t0 = System.nanoTime()
-          val r = try { thunk(); None } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            Some(name)
+          Counters.measure(spark.sparkContext) {
+            val t0 = System.nanoTime()
+            val r = try { thunk(); None } catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              Some(name)
+            }
+            r.toLeft((System.nanoTime() - t0) / 1e9)
           }
-          (name, (System.nanoTime() - t0) / 1e9, r)
         }
       }
-    val pipelineMin: Seq[(String, Double, Option[String])] =
+    val pipelineMin: Seq[(String, Either[String, Double])] =
       pipeline.map(_._1).zipWithIndex.map { case (name, i) =>
-        val runs = pipelinePasses.map(_(i))
-        runs.collectFirst { case (_, _, Some(err)) => (name, 0.0, Some(err)) }
-          .getOrElse((name, runs.map(_._2).min, None))
+        name -> best(name, pipelinePasses.map(_(i)))
       }
-    val results = catalog ++ pipelineMin.collect { case (n, t, None) => n -> t }
-    val errors = catalogErrs ++ pipelineMin.collect { case (n, _, Some(_)) => n }
+    val results = catalog ++ pipelineMin.collect { case (n, Right(t)) => n -> t }
+    val errors = catalogErrs ++ pipelineMin.collect { case (n, Left(_)) => n }
     val sfName = new java.io.File(sfDir).getName
     // The driver captures only the LAST 2000 chars of stdout and parses
     // the JSON line from that tail, so the whole line must fit there

@@ -280,13 +280,8 @@ object Dump {
     val (checksummed, checksumInto) =
       if (!cfg.checksum) (partitioned, None)
       else (partitioned.select(col("*"), Checksum.rowChecksum(partitioned)), Some(perTask))
-    def observed(write: DataFrame => Unit): (Long, Long) = {
-      val obs = new org.apache.spark.sql.Observation()
-      val cs = Checksum.rowsAndChecksumCols(partitioned, cfg.checksum)
-      write(partitioned.observe(obs, cs.head, cs.tail: _*))
-      val m = obs.get
-      (m("rows").asInstanceOf[Long], m("checksum").asInstanceOf[Long])
-    }
+    def observed(write: DataFrame => Unit): (Long, Long) =
+      Checksum.observed(partitioned, cfg.checksum, s"dump of $stem")(write)
     val (rows, checksum) = if (noData) (0L, 0L) else cfg.format match {
       case SqlFormat =>
         (SqlInsertWriter.write(checksummed, dbStem, stem, cfg.outDir,

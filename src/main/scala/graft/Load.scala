@@ -4,12 +4,11 @@ import graft.functions.Checksum
 import graft.load.DependencyScheduler
 import graft.load.DependencyScheduler.TablePlan
 import graft.sources.{CsvDump, LoadDataReader, LoadDataStatement, LoadDataWriter, SqlInsertReader}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, row_number}
 import org.apache.spark.sql.types.StructType
 
-import scala.concurrent.{Await, ExecutionContext, TimeoutException}
-import scala.concurrent.duration._
+import scala.concurrent.ExecutionContext
 
 /** The load pipeline (SURVEY §3.2): discovery → file-type routing (S11)
   * → dependency-ordered restore (L1) → checksum verification (L5).
@@ -367,17 +366,10 @@ object Load {
           }
           // rows and checksum ride the write (skip mode observes rows
           // only): a mismatch surfaces after it, as in myloader.c:684-715
-          val obs = new Observation()
           val verify = checksumMode != ChecksumSkip
-          val cs = Checksum.rowsAndChecksumCols(df, verify)
-          writeTarget(src.table, df.observe(obs, cs.head, cs.tail: _*))
-          val m = try Await.result(obs.future, 2.minutes) catch {
-            case _: TimeoutException => throw new IllegalStateException(
-              s"restore of ${src.table}: writeTarget ran no action over its frame")
-          }
-          val rows = m.getAs[Long]("rows")
+          val (rows, got) = Checksum.observed(df, verify,
+            s"restore of ${src.table}")(writeTarget(src.table, _))
           val ok = if (!verify) None else {
-            val got = m.getAs[Long]("checksum")
             val matches = src.expectedChecksum.map(_ == got)
             if (matches.contains(false)) {
               val msg = s"checksum mismatch for ${src.table}: " +

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: writes the `.explain("formatted")` evidence for the
@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   *    size-derived hash layout: edge side scans its blocks with no
   *    Exchange and no Sort).
   *
+  * Any catalog query name dumps that query's formatted plan (as
+  * `<name>_after.txt`).
+  *
   * Usage: runMain graft.PlanDump <outDir> <name>[:before|:after] ...
   */
 object PlanDump {
@@ -30,14 +33,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.head
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new org.apache.spark.sql.graftnative.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8 cores: the committed plans/ dumps were taken at that width
+    val spark = GraftSession(cores = 8)
     val d = "/root/testdata/sf0.01"
     import spark.implicits._
 

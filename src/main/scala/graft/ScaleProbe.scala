@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,35 +17,6 @@ import org.apache.spark.sql.functions._
   * evidence". Run: `sbt "runMain graft.ScaleProbe [sfDir]"`.
   */
 object ScaleProbe {
-
-  final class MetricsListener extends SparkListener {
-    @volatile var shuffleWrite = 0L
-    @volatile var memSpill = 0L
-    @volatile var diskSpill = 0L
-    // StageInfo.taskMetrics AGGREGATES across the stage's tasks, so this
-    // peak is the summed execution memory of the heaviest STAGE (divide
-    // by task count for a per-task scale), not any single task's peak —
-    // earlier rounds printed it as "peakTaskMem", which overstated
-    // per-task pressure by the parallelism factor
-    @volatile var peakStageMem = 0L
-    // summed executorRunTime — the wall-noise-resistant comparator for
-    // alternating A/Bs (walls on this host swing ±25% across windows)
-    @volatile var taskMs = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        memSpill += m.memoryBytesSpilled
-        diskSpill += m.diskBytesSpilled
-        peakStageMem = math.max(peakStageMem, m.peakExecutionMemory)
-        taskMs += m.executorRunTime
-      }
-    }
-    def reset(): Unit = {
-      shuffleWrite = 0; memSpill = 0; diskSpill = 0; peakStageMem = 0
-      taskMs = 0
-    }
-  }
 
   /** Deterministic power-law graph for the skew probes: 5 hub nodes
     * receive half of all 200k·X edges (~20k·X raw edges EACH — ≥ 10⁵ at
@@ -67,19 +37,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new org.apache.spark.sql.graftnative.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "128") // cluster-like width
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val spark = GraftSession()
+    spark.conf.set("spark.sql.shuffle.partitions", "128") // cluster-like width
 
     // ---- X× inflation (default 10; SPARK_GRAFT_SCALE_X=100 for the
     // heavy-head probes). Keys are remapped (id*X + i) so key
@@ -124,30 +83,31 @@ object ScaleProbe {
     def run(name: String, df: => DataFrame, forbid: Seq[String] = Seq(
         "BroadcastNestedLoopJoin", "CartesianProduct")): Option[(String, Double)] = {
       if (!headRe.forall(_.findFirstIn(name).isDefined)) return None
-      listener.reset()
-      // timer starts BEFORE construction: iterative operators (dedup
-      // clustering) run their convergence actions while the DataFrame is
-      // being built, and that work belongs in the measurement
-      val t0 = System.nanoTime()
-      val d = df
-      val plan = d.queryExecution.executedPlan.toString
-      forbid.foreach { bad =>
-        require(!plan.contains(bad), s"$name plan degraded at 10x: contains $bad")
+      val (sec, c) = Counters.measure(spark.sparkContext) {
+        // timer starts BEFORE construction: iterative operators (dedup
+        // clustering) run their convergence actions while the DataFrame
+        // is being built, and that work belongs in the measurement
+        val t0 = System.nanoTime()
+        val d = df
+        val plan = d.queryExecution.executedPlan.toString
+        forbid.foreach { bad =>
+          require(!plan.contains(bad), s"$name plan degraded at 10x: contains $bad")
+        }
+        d.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
-      d.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
       // spill must stay negligible relative to shuffle (a head that
       // spills at 10x local will thrash at 100 TB cluster scale)
-      require(listener.diskSpill <= math.max(listener.shuffleWrite, 64L << 20),
-        s"$name disk spill ${listener.diskSpill} exceeds shuffle ${listener.shuffleWrite}")
+      require(c.diskSpillBytes <= math.max(c.shuffleWriteBytes, 64L << 20),
+        s"$name disk spill ${c.diskSpillBytes} exceeds shuffle ${c.shuffleWriteBytes}")
       // free any storage blocks the head materialized (checkpointed
       // operator state) so heads never contaminate each other's memory
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      println(f"$name%-18s ${sec}%7.2f s  shuffle=${listener.shuffleWrite / (1 << 20)}%5d MiB" +
-        f"  spill(mem/disk)=${listener.memSpill / (1 << 20)}%d/${listener.diskSpill / (1 << 20)}%d MiB" +
-        f"  peakStageMem=${listener.peakStageMem / (1 << 20)}%d MiB" +
-        f"  task=${listener.taskMs / 1e3}%.1fs")
+      println(f"$name%-18s ${sec}%7.2f s  shuffle=${c.shuffleWriteBytes / (1 << 20)}%5d MiB" +
+        f"  spill(mem/disk)=${c.memSpillBytes / (1 << 20)}%d/${c.diskSpillBytes / (1 << 20)}%d MiB" +
+        f"  peakStageMem=${c.peakStageMem / (1 << 20)}%d MiB" +
+        f"  task=${c.taskMs / 1e3}%.1fs")
       Some(name -> sec)
     }
 

@@ -103,16 +103,7 @@ object Main {
     // reuse it and leave its lifecycle alone
     val hosted = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$threads]"))
-      .appName(s"graft-$cmd")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(threads.toInt, sys.env.get("SPARK_MASTER"))
     try cmd match {
       case "dump" => runDump(spark, opts, multi.getOrElse("regex", Nil))
       case "load" => runLoad(spark, opts)
@@ -964,10 +955,11 @@ object Main {
             case None => graft.sources.SqlInsertReader.read(
               spark, dir, schemas.get(table), glob = path)
           }
+          // rows are counted on the append itself: one read of the file
+          val (n, _) = graft.functions.Checksum.observed(df, checksum = false,
+            s"stream restore of $path")(_.write.mode("append").parquet(s"$target/$table"))
           rows.computeIfAbsent(table,
-            _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(df.count())
-          df.write.mode("append").parquet(s"$target/$table")
+            _ => new java.util.concurrent.atomic.AtomicLong()).addAndGet(n)
         })
         case "end" =>
           finished.synchronized { finished += table -> loader.finish(table) }

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 /** Data / structure checksums (SURVEY §2.4 A4/A5).
   *
@@ -49,6 +51,24 @@ object Checksum {
   def rowsAndChecksumCols(df: DataFrame, checksum: Boolean = true): Seq[Column] = Seq(
     count(lit(1)).as("rows"),
     (if (checksum) coalesce(tableChecksum(df), lit(0L)) else lit(0L)).as("checksum"))
+
+  /** (rows, checksum) of `df`, observed on the one action `write` runs
+    * over the frame it is given (checksum 0 with `checksum` off). That
+    * action must write the given frame with no exchange before the write,
+    * so the observation sits in the result stage and counts each row
+    * once. A `write` that runs no action fails, naming `what`, after a
+    * 2-minute wait instead of hanging. */
+  def observed(df: DataFrame, checksum: Boolean, what: String)(
+      write: DataFrame => Unit): (Long, Long) = {
+    val obs = new Observation()
+    val cs = rowsAndChecksumCols(df, checksum)
+    write(df.observe(obs, cs.head, cs.tail: _*))
+    val m = try Await.result(obs.future, 2.minutes) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"$what: the write ran no action over its frame")
+    }
+    (m.getAs[Long]("rows"), m.getAs[Long]("checksum"))
+  }
 
   /** (rows, checksum) of `df` in one aggregate, null-safe for zero rows. */
   def rowsAndChecksum(df: DataFrame): (Long, Long) = {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * path): registers the engine's native expressions under SQL names so
   * `spark.sql("SELECT vec_dot(a, b) …")` works for SQL-only users.
   *
-  * Wire up with either
-  *   `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * [[graft.GraftSession]] registers it; any other session can pass
+  * `withExtensions(new GraftExtensions)` to its builder or set
   *   `--conf spark.sql.extensions=org.apache.spark.sql.graftnative.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

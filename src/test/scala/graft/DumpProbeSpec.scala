@@ -4,8 +4,6 @@ import java.nio.file.Files
 import graft.core.TableConfig
 import graft.functions.Checksum
 import graft.operators.ChunkPlanner
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{coalesce, lit}
 
 /** `Dump.dumpTable` probes each table once (row count, checksum and the
@@ -15,28 +13,15 @@ class DumpProbeSpec extends SparkTestBase {
 
   private def tmp(): String = Files.createTempDirectory("graft_probe_").toString
 
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try { val r = body; ListenerDrain(sc); (r, n.get) }
-    finally sc.removeSparkListener(listener)
-  }
-
   test("a checksummed, --rows-sized table dumps in at most 3 jobs") {
     val df = Tables.orders(spark, sf)
     assert(df.rdd.getNumPartitions === 1, "the spec needs a one-split source")
     val cfg = Dump.Config(outDir = tmp(), rowsPerChunk = Some(1000000L))
     assert(cfg.checksum)
-    val (r, jobs) = jobsOf(Dump.dumpTable(df, "orders", cfg))
+    val (r, c) = Counters.measure(spark.sparkContext)(Dump.dumpTable(df, "orders", cfg))
     assert(r.rows === df.count() && r.checksum != 0L)
     // one probe aggregate (two jobs under AQE) + the write
-    assert(jobs <= 3, s"$jobs jobs for one table")
+    assert(c.jobs <= 3, s"${c.jobs} jobs for one table")
   }
 
   test("the fused probe reports what the separate probes did") {

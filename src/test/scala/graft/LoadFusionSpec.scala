@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import graft.functions.{Checksum, Masquerade}
 import graft.sources.SqlInsertReader
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, lit}
 
@@ -15,21 +13,6 @@ import org.apache.spark.sql.functions.{coalesce, lit}
 class LoadFusionSpec extends SparkTestBase {
 
   private def tmp(): String = Files.createTempDirectory("graft_fusion_").toString
-
-  /** `body`'s result and the (jobs, tasks) it ran. */
-  private def jobsOf[T](body: => T): (T, Int, Int) = {
-    val (jobs, tasks) = (new java.util.concurrent.atomic.AtomicInteger,
-      new java.util.concurrent.atomic.AtomicInteger)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try { val r = body; ListenerDrain(sc); (r, jobs.get, tasks.get) }
-    finally sc.removeSparkListener(listener)
-  }
 
   /** What the restore verified before it fused: count and checksum. */
   private def oldRowsAndChecksum(df: DataFrame): (Long, Long) = {
@@ -59,9 +42,10 @@ class LoadFusionSpec extends SparkTestBase {
     val (expRows, expCrc) = oldRowsAndChecksum(orders)
     val target = tmp()
     val src = Load.TableSource("tpch.orders", orders.schema, Some(expCrc))
-    val (res, jobs, tasks) = jobsOf(Load.run(spark, out, Seq(src), Load.ChecksumFail) {
-      (stem, df) => df.write.mode("overwrite").parquet(s"$target/$stem") })
-    assert((jobs, tasks) === ((1, 4)))
+    val (res, c) = Counters.measure(spark.sparkContext)(
+      Load.run(spark, out, Seq(src), Load.ChecksumFail) {
+        (stem, df) => df.write.mode("overwrite").parquet(s"$target/$stem") })
+    assert((c.jobs, c.tasks) === ((1, 4)))
     assert(res === Seq(Load.Result("tpch.orders", expRows, Some(true))))
     assert(oldRowsAndChecksum(spark.read.parquet(s"$target/tpch.orders")) === ((expRows, expCrc)))
   }
@@ -119,9 +103,10 @@ class LoadFusionSpec extends SparkTestBase {
       val files = chunkFiles(out, "tpch.orders")
       assert(files.size === 4 && files.forall(_.endsWith(ext)), files)
       val src = Load.TableSource("tpch.orders", orders.schema, Some(crc))
-      val (res, jobs, tasks) = jobsOf(Load.run(spark, out, Seq(src), Load.ChecksumFail)(noopWrite))
+      val (res, c) = Counters.measure(spark.sparkContext)(
+        Load.run(spark, out, Seq(src), Load.ChecksumFail)(noopWrite))
       assert(res === Seq(Load.Result("tpch.orders", rows, Some(true))), codec)
-      assert((jobs, tasks) === ((1, 4)), codec)
+      assert((c.jobs, c.tasks) === ((1, 4)), codec)
     }
   }
 
@@ -131,10 +116,11 @@ class LoadFusionSpec extends SparkTestBase {
     val expected = listed.map(f =>
       SqlInsertReader.read(spark, out, orders.schema, glob = f).count()).sum
     val src = Load.TableSource("tpch.orders", orders.schema, None, onlyFiles = Some(listed))
-    val (res, jobs, tasks) = jobsOf(Load.run(spark, out, Seq(src), Load.ChecksumSkip)(noopWrite))
+    val (res, c) = Counters.measure(spark.sparkContext)(
+      Load.run(spark, out, Seq(src), Load.ChecksumSkip)(noopWrite))
     assert(res === Seq(Load.Result("tpch.orders", expected, None)))
     assert(expected > 0 && expected < orders.count())
-    assert((jobs, tasks) === ((1, 2)))
+    assert((c.jobs, c.tasks) === ((1, 2)))
   }
 
   test("a tuple whose value count differs from the schema fails with the file and counts") {

@@ -191,28 +191,15 @@ class PlanQualitySpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
     val pairs = operators.Dedup.minhashPairs(docs, "text", "doc_id",
       verifyJaccard = Some(0.5))
-    var maxTasks = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        maxTasks = math.max(maxTasks, sc.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      pairs.collect()
-      val p = pairs.queryExecution.executedPlan.toString
-      // the numbered repartition survives into the executed plan as a
-      // REPARTITION_BY_NUM shuffle origin
-      assert(p.contains("REPARTITION_BY_NUM"),
-        "verify lost its pinned-width repartition:\n" + p.take(1500))
-      // listener events are async; poll briefly for the last stage
-      val width = spark.sessionState.conf.numShufflePartitions
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (maxTasks < width && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(maxTasks >= width,
-        s"verify ran at $maxTasks tasks < session width $width")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, c) = Counters.measure(spark.sparkContext)(pairs.collect())
+    val p = pairs.queryExecution.executedPlan.toString
+    // the numbered repartition survives into the executed plan as a
+    // REPARTITION_BY_NUM shuffle origin
+    assert(p.contains("REPARTITION_BY_NUM"),
+      "verify lost its pinned-width repartition:\n" + p.take(1500))
+    val width = spark.sessionState.conf.numShufflePartitions
+    assert(c.maxStageTasks >= width,
+      s"verify ran at ${c.maxStageTasks} tasks < session width $width")
   }
 
   test("edit-distance join shuffle-hashes the variant key, never a " +
@@ -236,9 +223,6 @@ class PlanQualitySpec extends SparkTestBase {
     // crossJoins the ONE-ROW corpus-size aggregate (O(n·1)); exact kNN
     // is the all-pairs BASELINE by definition — its scale path is the
     // cell-equi-joined q_knn_graph, which must pass this gate.
-    // q_range_join_auto NEEDS the injected RangeJoinRewrite to de-nest;
-    // this shared session has no extensions, so it falls back to BNLJ
-    // here — ExtensionsSpec asserts the BNLJ-free plan with the rule on.
     // q_knn_recall compares the LSH graph AGAINST the exact all-pairs
     // baseline on the bounded 200-id slice — the baseline side is the
     // same whitelisted shape as q_knn_exact.
@@ -258,7 +242,7 @@ class PlanQualitySpec extends SparkTestBase {
     // q_bm25_index embeds q_bm25's one-row corpus-constants crossJoin
     // (summed from the KB-sized stats table, not the corpus)
     val whitelist = Set("q_ann_batch", "q_tfidf", "q_knn_exact",
-      "q_range_join_auto", "q_knn_recall", "q_dedup_minhash_recall",
+      "q_knn_recall", "q_dedup_minhash_recall",
       "q_dedup_simhash_recall", "q_embed_recall", "q_dedup_simhash",
       "q_lm_score", "q_bm25", "q_bm25_batch", "q_hybrid_rrf",
       "q_dsir", "q_dsir_sample", "q_lm_buckets", "q_curriculum",
