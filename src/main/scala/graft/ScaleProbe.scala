@@ -822,7 +822,7 @@ object ScaleProbe {
       }),
       // the assembly LAST MILE at X×: chunk → token-budget packing →
       // md5-sharded parquet WRITE (the trainer's files). Cost must be
-      // one hash exchange (packing) + one range exchange (the shard
+      // one hash exchange (packing) + one shard-id exchange (the shard
       // write); determinism is spec-pinned, this head prices the IO
       run("assembly_shards", {
         val chunks = operators.DocChunker.chunk(docs, "text", "doc_id",

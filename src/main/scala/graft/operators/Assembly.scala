@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
+import graft.functions.{Checksum, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -16,62 +16,71 @@ import org.apache.spark.sql.types.LongType
   * training reproducible and retries safe (AssemblyShardsSpec proves it
   * by writing twice and comparing per-shard read order).
   *
-  * Scale shape: one hash exchange into `packParallelism` packing tasks
-  * (greedy first-fit runs per partition — bin quality is per-task, which
-  * is the standard distributed-packing trade), one range exchange for
-  * the shard write. The range partitioner leads with `shard`, so the
-  * dynamic-partition writer sees its required clustering already
-  * satisfied and every shard file is written in (ord, id, chunk) order —
-  * the [[Sampling.shuffledShards]] scaladoc's trap (sorting by ord alone
+  * Scale shape: two exchanges, each straight to its final task, at
+  * most session-width tasks each, and no sampling job. Packing: a hash
+  * exchange of `packParallelism` logical buckets onto min(buckets,
+  * shuffle partitions) tasks; greedy first-fit runs per bucket (bin
+  * quality is per-bucket, the standard distributed-packing trade).
+  * Shard write: a shard-id exchange (`repartitionById` on the shard
+  * number, no range sampling) onto min(nShards, shuffle partitions)
+  * tasks, so every shard lands whole in one task and is written as ONE
+  * file. The in-task sort leads with `shard`, so the dynamic-partition
+  * writer sees its required ordering already satisfied and every shard
+  * file is written in (ord, id, chunk) order — the
+  * [[Sampling.shuffledShards]] scaladoc's trap (sorting by ord alone
   * lets the writer's unstable partition re-sort scramble file order)
-  * stays dodged here. */
+  * stays dodged here. The row count is observed on the write itself:
+  * nothing is read back. */
 object Assembly {
 
   /** Pack `chunks` into ≤`tokenBudget` bins and write them as `nShards`
-    * hive-partitioned parquet shards under `outDir` (shard=N/...). Bins
-    * stay whole inside one shard (the shard key is the BIN, so a
-    * training sequence never splits); rows inside every shard file are
-    * (ord, id, chunk) sorted. Returns the written row count. */
+    * hive-partitioned parquet shards under `outDir` (shard=N/...), one
+    * file per shard. Bins stay whole inside one shard (the shard key is
+    * the BIN, so a training sequence never splits); rows inside every
+    * shard file are (ord, id, chunk) sorted. `packParallelism` is the
+    * number of logical packing buckets, `pmod(hash(id), packParallelism)`:
+    * it fixes the bins and so the output; the packing runs in
+    * min(packParallelism, shuffle partitions) tasks. Returns the
+    * written row count. */
   def writeShards(chunks: DataFrame, textCol: String, idCol: String,
       chunkIdCol: String, tokenBudget: Int, nShards: Int, outDir: String,
       packParallelism: Int = 32): Long = {
-    require(tokenBudget > 0 && nShards > 0)
-    // deterministic packing input: fixed hash partitioning (retry- and
-    // AQE-invariant), fully-tiebroken in-partition order (n_tokens desc
-    // alone leaves equal-length chunks at the sorter's mercy)
+    require(tokenBudget > 0 && nShards > 0 && packParallelism > 0)
+    val width = chunks.sparkSession.sessionState.conf.numShufflePartitions
+    // deterministic packing input: a fixed hash bucket per doc (the
+    // partition id `repartition(packParallelism, id)` would give, so
+    // retry- and AQE-invariant), fully-tiebroken in-bucket order
+    // (n_tokens desc alone leaves equal-length chunks at the sorter's
+    // mercy)
+    val packWidth = math.min(packParallelism, width)
     val pre = chunks
       .withColumn("n_tokens",
         TextFunctions.tokenCount(col(textCol)).cast(LongType))
-      .repartition(packParallelism, col(idCol))
-      .sortWithinPartitions(col("n_tokens").desc, col(idCol), col(chunkIdCol))
-    val packed = Packing.packByTokenBudget(pre, textCol, tokenBudget,
-      sortByLength = false)
+      .withColumn("pack_bucket", pmod(hash(col(idCol)), lit(packParallelism)))
+      .repartitionById(packWidth, pmod(col("pack_bucket"), lit(packWidth)))
+      .sortWithinPartitions(col("pack_bucket"), col("n_tokens").desc,
+        col(idCol), col(chunkIdCol))
+    val packed = Packing.firstFit(pre, tokenBudget, Some("pack_bucket"))
+      .drop("pack_bucket")
     val sharded = Sampling
       .shuffledShards(packed.withColumn("bin_key", col("bin_id").cast("string")),
         "bin_key", nShards)
       .drop("bin_key")
+    val shardWidth = math.min(nShards, width)
     val out = sharded
-      .repartitionByRange(nShards, col("shard"), col("ord"),
-        col(idCol), col(chunkIdCol))
+      .repartitionById(shardWidth, pmod(col("shard"), lit(shardWidth)))
       .sortWithinPartitions(col("shard"), col("ord"), col(idCol), col(chunkIdCol))
-    out.write.mode("overwrite").partitionBy("shard").parquet(outDir)
+    val (rows, _) = Checksum.observed(out, checksum = false, "writeShards")(
+      _.write.mode("overwrite").partitionBy("shard").parquet(outDir))
     // EMPTY input leaves a partition-less directory (only _SUCCESS)
-    // whose re-read fails schema inference; detect it from a driver FS
-    // LISTING of what the write produced and overwrite with one
+    // whose re-read fails schema inference; overwrite it with one
     // zero-row UNpartitioned parquet file carrying the full schema
     // (shard as a regular int column), so readShards and any consumer
-    // see the same columns and count 0. The r14 pre-write isEmpty probe
-    // did this decision as a limit-1 job over the UPSTREAM chunk DAG —
-    // which re-ran the first stages of an expensive un-materialized
-    // pipeline (the sentence-dedup shuffle in the x_assembly_shards
-    // leg; the r15 A/B stamped it a real 1.35× regression). A listing
-    // after the write costs no job at all.
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(
-      graft.streaming.LandingStream.protocolHadoopConf())
-    val wroteData = fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
-    if (!wroteData) {
+    // see the same columns and count 0. The decision reads the count
+    // the write observed: the r14 pre-write isEmpty probe re-ran the
+    // first stages of an expensive un-materialized upstream (the r15
+    // A/B stamped it a real 1.35× regression).
+    if (rows == 0L) {
       val empty = chunks // limit(0) folds to an empty relation: no job
         .withColumn("n_tokens", lit(0L))
         .withColumn("bin_id", lit(0L))
@@ -79,9 +88,8 @@ object Assembly {
         .withColumn("shard", lit(0).cast("int"))
         .limit(0)
       empty.coalesce(1).write.mode("overwrite").parquet(outDir)
-      return 0L
     }
-    chunks.sparkSession.read.parquet(outDir).count()
+    rows
   }
 
   /** Read shards back for verification/consumption: the parquet under

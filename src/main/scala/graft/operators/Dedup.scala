@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Hashing, TextFunctions, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -229,9 +229,9 @@ object Dedup {
     * texts join back only for the candidate ids, never the corpus.
     *
     * REGIME-ADAPTIVE (one code path, the engine picks): the pair set is
-    * localCheckpointed once (it feeds the stats probe and the verify —
-    * without it each action would replay the band join), its pair count
-    * and involved-doc count read from the materialized blocks, and the
+    * localCheckpointed once (without it each consumer would replay the
+    * band join); its pair count and involved-doc count are observed on
+    * the checkpoint's own action (no job of their own), and the
     * pairs-per-doc ratio picks the branch:
     *   - few-candidate (clean corpus): per-pair UDF over the raw texts —
     *     two joins and one tokenization per pair, no per-doc build cost;
@@ -252,15 +252,19 @@ object Dedup {
     * parallelism for ~0.1 s of exchange). */
   private def verifyCandidates(cand0: DataFrame, texts: DataFrame,
       textCol: String, idCol: String, shingleSize: Int, th: Double): Scoped = {
-    val (cand, release) = checkpointTracked(cand0)
-    val width = cand.sparkSession.sessionState.conf.numShufflePartitions
-    val stats = cand.agg(count(lit(1)).as("n"),
+    // the stats ride the checkpoint's own action as an observation
+    val statsObs = new Observation()
+    val (cand, release) = checkpointTracked(cand0.observe(statsObs,
+      count(lit(1)).as("n"),
       approx_count_distinct(col("id1")).as("d1"),
-      approx_count_distinct(col("id2")).as("d2")).head()
-    val nPairs = stats.getLong(0)
+      approx_count_distinct(col("id2")).as("d2")))
+    val width = cand.sparkSession.sessionState.conf.numShufflePartitions
+    val stats = statsObs.get
+    val nPairs = stats("n").asInstanceOf[Long]
     // every pair's ids split across the two columns; the larger side's
     // distinct count lower-bounds involved docs well enough to branch
-    val docsInvolved = math.max(math.max(stats.getLong(1), stats.getLong(2)), 1L)
+    val docsInvolved = math.max(math.max(stats("d1").asInstanceOf[Long],
+      stats("d2").asInstanceOf[Long]), 1L)
     val ratioTh = cand.sparkSession.conf
       .getOption("spark.graft.verify.densePairsPerDoc")
       .map(_.toDouble).getOrElse(DenseVerifyPairsPerDoc)

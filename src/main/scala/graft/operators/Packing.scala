@@ -10,13 +10,19 @@ import org.apache.spark.sql.types._
   * reduces padding waste).
   *
   * Distributed shape: token counts come from one codegen'd map; the
-  * greedy first-fit runs per partition (`mapPartitions`), so bins never
-  * span partitions and no global state exists. That is the correct scale
-  * trade-off: cross-partition packing would serialize the corpus through
-  * one process for a few % less padding; per-partition packing is
-  * embarrassingly parallel and asymptotically as tight when partitions
-  * hold thousands of docs. Sorting within partitions by length first
-  * (optional) tightens packing further — classic first-fit-decreasing.
+  * greedy first-fit runs per BUCKET, so bins never span buckets and no
+  * global state exists. That is the correct scale trade-off:
+  * cross-bucket packing would serialize the corpus through one process
+  * for a few % less padding; per-bucket packing is embarrassingly
+  * parallel and asymptotically as tight when buckets hold thousands of
+  * docs. Sorting within buckets by length first (optional) tightens
+  * packing further — classic first-fit-decreasing.
+  *
+  * A bucket is a partition in [[packByTokenBudget]]. The kernel
+  * ([[firstFit]]) also takes an explicit bucket column, so a caller can
+  * fix the buckets (and with them the bins) independently of how many
+  * tasks run them: [[Assembly.writeShards]] packs a fixed number of
+  * hash buckets in as many tasks as the session is wide.
   *
   * Documents longer than the budget become singleton bins (callers
   * typically chunk them upstream with TextFunctions-based splitting).
@@ -34,9 +40,22 @@ object Packing {
       if (sortByLength)
         withTokens.sortWithinPartitions(col("n_tokens").desc)
       else withTokens
+    firstFit(pre, budget, bucketCol = None)
+  }
+
+  /** The greedy first-fit kernel over rows in arrival order: appends
+    * `bin_id = bucket << 40 | local`, where `local` counts the bucket's
+    * bins from 0. It reads the existing long `n_tokens` column. With
+    * `bucketCol` None the bucket is the partition id; with an int
+    * column, rows of one bucket must arrive contiguously (sort on the
+    * column first), and the open bins and the counter reset at every
+    * bucket boundary. */
+  private[operators] def firstFit(pre: DataFrame, budget: Int,
+      bucketCol: Option[String]): DataFrame = {
     val inSchema = pre.schema
     val outSchema = inSchema.add("bin_id", LongType)
     val tokIdx = inSchema.fieldIndex("n_tokens")
+    val bucketIdx = bucketCol.fold(-1)(inSchema.fieldIndex)
     pre.mapPartitions { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId().toLong
       // greedy first-fit over open bins (bounded: close bins that can't
@@ -45,7 +64,10 @@ object Packing {
       // unusable and is dropped from the open list)
       val open = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)] // (binId, used)
       var nextBin = 0L
+      var bucket = -1L
       rows.map { r =>
+        val b = if (bucketIdx < 0) pid else r.getInt(bucketIdx).toLong
+        if (b != bucket) { bucket = b; open.clear(); nextBin = 0L }
         val t = r.getLong(tokIdx)
         val fit = open.indexWhere { case (_, used) => used + t <= budget }
         val binId =
@@ -62,7 +84,7 @@ object Packing {
             if (open.length > 64) open.remove(0) // bound memory: retire oldest
             id
           }
-        Row.fromSeq(r.toSeq :+ (pid << 40 | binId))
+        Row.fromSeq(r.toSeq :+ (bucket << 40 | binId))
       }
     }(Encoders.row(outSchema))
   }

@@ -278,4 +278,47 @@ class AdaptiveVerifySpec extends SparkTestBase {
       } finally candScoped.release()
     } finally dense.release()
   }
+
+  test("both verify regimes: scoped pairs equal minhashPairs, the ratio " +
+      "conf picks the branch, and the stats run no job of their own") {
+    val corpus = dupDense.cache()
+    val key = "spark.graft.verify.densePairsPerDoc"
+    val sc = spark.sparkContext
+    try {
+      corpus.count()
+      val before = sc.getPersistentRDDs.keySet
+      for ((ratio, branch) <- Seq("1e9" -> "UDF", "0" -> "array_intersect")) {
+        spark.conf.set(key, ratio)
+        val (scoped, c) = Counters.measure(sc)(
+          Dedup.minhashPairsScoped(corpus, "text", "doc_id",
+            verifyJaccard = Some(0.5)))
+        try {
+          assert(scoped.df.queryExecution.executedPlan.toString.contains(branch),
+            s"ratio $ratio must verify with $branch")
+          val plain = Dedup.minhashPairs(corpus, "text", "doc_id",
+            verifyJaccard = Some(0.5))
+          assert(scoped.df.count() > 1000, "test premise: dup-dense corpus")
+          assert(scoped.df.exceptAll(plain).count() === 0)
+          assert(plain.exceptAll(scoped.df).count() === 0)
+          if (branch == "UDF") {
+            // the UDF branch materializes nothing but the pair set: its
+            // setup costs exactly the pair-set checkpoint's jobs
+            val ((_, release), cp) = Counters.measure(sc)(
+              Dedup.checkpointTracked(Dedup.minhashPairsScoped(corpus,
+                "text", "doc_id", verifyJaccard = None).df))
+            release()
+            assert(c.jobs === cp.jobs,
+              s"verify setup ${c.json("verify")} vs checkpoint ${cp.json("cp")}")
+          }
+        } finally {
+          scoped.release()
+          // minhashPairs leaves its pair-set blocks to the session
+          (sc.getPersistentRDDs -- before).values.foreach(_.unpersist())
+        }
+      }
+    } finally {
+      spark.conf.unset(key)
+      corpus.unpersist()
+    }
+  }
 }
