@@ -4,6 +4,7 @@ import graft.core.{DumpManifest, TableConfig, TableManifest}
 import graft.functions.{Checksum, Masquerade}
 import graft.operators.ChunkPlanner
 import graft.sources.{CsvDump, LoadDataWriter, RowFormat, SqlInsertWriter}
+import graft.streaming.LandingStream.announceFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -138,7 +139,7 @@ object Dump {
 
   /** Text of the database schema-create file (write_schema_create),
     * identifiers quoted per [[quoteOf]]. */
-  def databaseCreate(cfg: Config): String =
+  private def databaseCreate(cfg: Config): String =
     sources.SchemaObjects.fileHeader() +
       s"CREATE DATABASE /*!32312 IF NOT EXISTS*/ ${quoteOf(cfg)}${cfg.db}${quoteOf(cfg)};\n"
 
@@ -561,9 +562,19 @@ object Dump {
     * does not depend on `tableThreads`: the manifest keeps the input
     * order, every surrogate stem is claimed up front in the sequential
     * dump order, and each table writes only its own files (the shared
-    * database schema-create is written once, before the pool starts). */
+    * database schema-create is written once, before the pool starts).
+    *
+    * `events = Some(dir)` is stream mode (mydumper_stream.c: the loader
+    * starts on table 1 while table 2 is still dumping): the run announces
+    * its artifacts there as [[graft.streaming.LandingStream.announceFile]]
+    * events — `dbschema` once the schema-create is written, each table's
+    * `data` and `schema` files then its `end` the moment that table
+    * closes, and `done` with the table count after the manifest. Event
+    * names sort by announce time, so each table's events stay in order
+    * on the pool. */
   def run(spark: SparkSession, tables: Seq[(String, DataFrame, Boolean)],
-      cfg: Config, tableThreads: Int = 1): DumpManifest = {
+      cfg: Config, tableThreads: Int = 1,
+      events: Option[String] = None): DumpManifest = {
     val start = java.time.Instant.now().toString
     // every dump carries its database's CREATE: the reference writes
     // db-schema-create.sql per dumped database whenever schemas are
@@ -572,24 +583,51 @@ object Dump {
     // replays it in phase 1. Emitted once here — not per table — so a
     // tableThreads>1 run never races writers on the shared file;
     // dumpTable keeps its surrogate-name pair for standalone callers.
-    if (!cfg.noSchemas)
-      writeSchemaObject(cfg.outDir, cfg.stems.stem(cfg.db), SchemaKind.Database,
-        databaseCreate(cfg))
+    if (!cfg.noSchemas) {
+      val dbStem = cfg.stems.stem(cfg.db)
+      writeSchemaObject(cfg.outDir, dbStem, SchemaKind.Database, databaseCreate(cfg))
+      events.foreach(announceFile(_, "dbschema", dbStem, s"$dbStem${SchemaKind.Database.suffix}"))
+    }
     val (trx, nonTrx) = tables.partition(_._3)
     // StemRegistry numbers surrogates in first-call order; dumpTable asks
     // for the table's stem, then the database's
     (nonTrx ++ trx).foreach { case (name, _, _) =>
       cfg.stems.stem(name); cfg.stems.stem(cfg.db) }
     def phase(ts: Seq[(String, DataFrame, Boolean)]): Seq[TableResult] =
-      parMap(ts, tableThreads) { case (name, df, _) => dumpTable(df, name, cfg) }
+      parMap(ts, tableThreads) { case (name, df, _) =>
+        val r = dumpTable(df, name, cfg)
+        events.foreach(announceTable(_, cfg, r))
+        r
+      }
     val results = phase(nonTrx) ++ phase(trx)
-    writeManifest(cfg, start, results)
+    val manifest = writeManifest(cfg, start, results)
+    // the terminal event's table count lets a concurrent `load --stream
+    // --follow` stop once every announced `end` is in
+    events.foreach(announceFile(_, "done", "-", results.size.toString))
+    manifest
+  }
+
+  /** Announce one closed table: its data files in name order, its schema
+    * files, then `end`. Events carry the file stem (surrogate db and
+    * table stems included), which is what the files are named after. */
+  private def announceTable(events: String, cfg: Config, r: TableResult): Unit = {
+    val stem = s"${cfg.stems.stem(cfg.db)}.${r.stem}"
+    val names = Option(new java.io.File(cfg.outDir).list).getOrElse(Array.empty[String]).sorted
+    // exec-filtered dumps name their own extension: classify them as
+    // Load.discover does
+    def asData(n: String): String = cfg.execFilter.map(_.ext)
+      .filter(n.endsWith).fold(n)(e => n.dropRight(e.length) + ".sql")
+    names.filter(n => n.startsWith(s"$stem.") && Load.classify(asData(n)) == Load.Data)
+      .foreach(announceFile(events, "data", stem, _))
+    names.filter(_.startsWith(s"$stem-schema"))
+      .foreach(announceFile(events, "schema", stem, _))
+    announceFile(events, "end", stem, "-")
   }
 
   /** Build the run's manifest and persist it as the dump dir's `metadata`
     * file (reference mydumper_start_dump.c:1161-1182) so the dump is
     * self-describing. */
-  def writeManifest(cfg: Config, startedAt: String,
+  private def writeManifest(cfg: Config, startedAt: String,
       results: Seq[TableResult]): DumpManifest = {
     val manifest = DumpManifest(
       startedAt = startedAt,

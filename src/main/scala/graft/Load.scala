@@ -1,12 +1,13 @@
 package graft
 
+import graft.core.TableManifest
 import graft.functions.Checksum
 import graft.load.DependencyScheduler
 import graft.load.DependencyScheduler.TablePlan
 import graft.sources.{CsvDump, LoadDataReader, LoadDataStatement, LoadDataWriter, SqlInsertReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, row_number}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.concurrent.ExecutionContext
 
@@ -16,7 +17,10 @@ import scala.concurrent.ExecutionContext
   * The restore target is pluggable: a lake write (parquet), or a JDBC
   * sink (`df.write.jdbc`, S12 semantics) — the scheduler and verification
   * are identical. Discovery classifies files by the dump naming scheme
-  * (`db.table.NNNNN[.NNNNN].sql[.gz]`).
+  * (`db.table.NNNNN[.NNNNN].sql[.gz]`). Lake-format dumps (`--format
+  * parquet|orc|jsonl`) are sources too: a table directory read in its
+  * own format under the manifest's recorded dump-time schema, restored
+  * and verified on the same write as chunk-file tables.
   */
 object Load {
 
@@ -201,59 +205,104 @@ object Load {
       // --resume (myloader_directory.c:83-113): restrict the restore to
       // exactly these dump file NAMES — the files a crashed prior run
       // left unprocessed. None = every file matching the stem's glob.
-      onlyFiles: Option[Seq[String]] = None)
+      onlyFiles: Option[Seq[String]] = None,
+      // Spark format of a lake table directory (parquet, orc or json);
+      // None for chunk files. Set by [[sourcesFromDir]]
+      lakeFormat: Option[String] = None)
 
   final case class Result(table: String, rows: Long, checksumOk: Option[Boolean])
 
-  /** Build TableSources purely from a dump directory: schemas from the
-    * `db.table-schema.sql` files ([[graft.sources.DdlEmitter]] inverse),
-    * expected rows/checksums from the `metadata` manifest — the restore
-    * needs NOTHING but the directory, exactly the reference's contract
-    * (myloader consumes only dump files). Tables without a schema file
-    * are skipped (parquet dumps embed their schema and load directly). */
-  def sourcesFromDir(dir: String, resumeEnabled: Boolean = false): Seq[TableSource] = {
-    val manifest = graft.sources.Manifest.read(dir)
-    val checksums: Map[String, Long] = manifest
-      .map(_.tables.flatMap(t => t.dataChecksum.map(c => t.table -> c.toLong)).toMap)
-      .getOrElse(Map.empty)
-    // surrogate stem → manifest entry (filename-unsafe table names;
-    // the dump's StemRegistry recorded the mapping under `filename`)
-    val byStem: Map[String, graft.core.TableManifest] = manifest
-      .map(_.tables.flatMap(t => t.filename.map(_ -> t)).toMap)
-      .getOrElse(Map.empty)
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-    // a stem with a -schema-view.sql sibling is a VIEW: its -schema.sql
-    // is the dependency placeholder table (mydumper_jobs.c:472-556) and
-    // carries no data chunks — the view phase restores it, not the data
-    // phase (views-as-tables dumps have no sibling and DO load here)
-    val viewStems: Set[String] = files.map(_.getName)
-      .filter(n => classify(n, resumeEnabled = resumeEnabled) == SchemaView)
-      .map(_.replaceFirst("-schema-view\\.sql(\\.gz|\\.zst)?$", "")).toSet
-    files.filter(f =>
-        classify(f.getName, resumeEnabled = resumeEnabled) == Schema).toSeq
-      .filterNot(f => viewStems.contains(
-        f.getName.replaceFirst("-schema\\.sql(\\.gz|\\.zst)?$", "")))
-      .map { f =>
-        val table = f.getName.stripSuffix("-schema.sql")
-          .stripSuffix("-schema.sql.gz").stripSuffix("-schema.sql.zst")
-        val ddl = readSmallText(f.toPath)
-        // manifest entries may carry the bare table name while files use
-        // the db.table stem — accept either key; surrogate stems resolve
-        // through the manifest's filename mapping
-        val bare = table.split("\\.", 2).last
-        val surrogate = byStem.get(bare)
-        val checksum = checksums.get(table)
-          .orElse(checksums.get(bare))
-          .orElse(surrogate.flatMap(_.dataChecksum.map(_.toLong)))
-        val schema = graft.sources.DdlEmitter.toStructType(ddl)
-        // an unparseable schema file must stop the restore, not feed an
-        // empty StructType downstream (zero columns reads zero data and
-        // "succeeds")
-        if (schema.isEmpty) throw new IllegalStateException(
-          s"schema file ${f.getName} parsed to zero columns — corrupt or not DDL")
-        TableSource(table, schema, checksum,
-          realTable = surrogate.map(_.table))
-      }.sortBy(_.table)
+  /** Every table a dump directory restores, with the expected checksum
+    * its manifest records — the restore needs NOTHING but the directory,
+    * exactly the reference's contract (myloader consumes only dump
+    * files).
+    *  - Chunk-file tables take their schemas from the
+    *    `db.table-schema.sql` files ([[graft.sources.DdlEmitter]]
+    *    inverse); tables without one are skipped. `schemaOf` replaces the
+    *    schema files with a catalog keyed by bare table name, for every
+    *    stem with data chunks (`dataExt` as in [[discover]]).
+    *  - Lake tables are the directories named after a stem with no chunk
+    *    files. The format is sniffed from the leaf data files and the
+    *    schema is the manifest's recorded dump-time `sparkSchema`. */
+  def sourcesFromDir(dir: String, resumeEnabled: Boolean = false,
+      schemaOf: Option[String => StructType] = None,
+      dataExt: Option[String] = None): Seq[TableSource] = {
+    val entryOf = manifestEntry(dir)
+    def source(stem: String, schema: StructType): TableSource = {
+      val e = entryOf(stem)
+      TableSource(stem, schema, e.flatMap(_.dataChecksum).map(_.toLong),
+        realTable = e.filter(_.filename.isDefined).map(_.table))
+    }
+    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+    val lakeDirs = files.filter(d => d.isDirectory && d.getName.contains(".") &&
+      !files.exists(f => f.isFile && f.getName.startsWith(d.getName + ".")))
+    val chunked = schemaOf match {
+      case Some(schemaOfTable) => discover(dir, dataExt, resumeEnabled).keys.toSeq
+        .map(stem => source(stem, schemaOfTable(stem.split("\\.", 2).last)))
+      case None =>
+        // a stem with a -schema-view.sql sibling is a VIEW: its -schema.sql
+        // is the dependency placeholder table (mydumper_jobs.c:472-556) and
+        // carries no data chunks — the view phase restores it, not the data
+        // phase (views-as-tables dumps have no sibling and DO load here)
+        val viewStems: Set[String] = files.map(_.getName)
+          .filter(n => classify(n, resumeEnabled = resumeEnabled) == SchemaView)
+          .map(_.replaceFirst("-schema-view\\.sql(\\.gz|\\.zst)?$", "")).toSet
+        files.filter(f =>
+            classify(f.getName, resumeEnabled = resumeEnabled) == Schema).toSeq
+          .map(f => f -> f.getName.replaceFirst("-schema\\.sql(\\.gz|\\.zst)?$", ""))
+          .filterNot { case (_, stem) => viewStems.contains(stem) }
+          .map { case (f, stem) =>
+            val schema = graft.sources.DdlEmitter.toStructType(readSmallText(f.toPath))
+            // an unparseable schema file must stop the restore, not feed an
+            // empty StructType downstream (zero columns reads zero data and
+            // "succeeds")
+            if (schema.isEmpty) throw new IllegalStateException(
+              s"schema file ${f.getName} parsed to zero columns — corrupt or not DDL")
+            source(stem, schema)
+          }
+    }
+    val lake = lakeDirs.toSeq.flatMap { d =>
+      val format = lakeFormatOf(d)
+      if (format.isEmpty) System.err.println(
+        s"[graft] WARN ${d.getName} holds no parquet, orc or json data files; not restored")
+      format.map { fmt =>
+        val recorded = entryOf(d.getName).flatMap(_.sparkSchema)
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+        // JSON and partitioned layouts read back in another shape than
+        // they dumped, which only the recorded schema restores: without
+        // it (an older dump) their checksum cannot verify
+        val trusted = recorded.isDefined || (fmt != "json" &&
+          !d.listFiles.exists(k => k.isDirectory && k.getName.contains("=")))
+        val s = source(d.getName, recorded.getOrElse(new StructType()))
+        s.copy(expectedChecksum = s.expectedChecksum.filter(_ => trusted),
+          lakeFormat = Some(fmt))
+      }
+    }
+    (chunked.filterNot(s => lakeDirs.exists(_.getName == s.table)) ++ lake).sortBy(_.table)
+  }
+
+  /** The manifest entry a file stem (`db.stem`) restores against, keyed
+    * by the surrogate stem the dump recorded under `filename`
+    * (Dump.StemRegistry), else by the table name, qualified or bare. */
+  private def manifestEntry(dir: String): String => Option[TableManifest] = {
+    val byKey = graft.sources.Manifest.read(dir).map(_.tables).getOrElse(Nil)
+      .map(t => t.filename.getOrElse(t.table) -> t).toMap
+    stem => byKey.get(stem).orElse(byKey.get(stem.split("\\.", 2).last))
+  }
+
+  /** Spark format of a lake table directory, sniffed from its leaf data
+    * files: a `--partition-by` dump's top level holds only `col=value`
+    * directories, so walk into those (depth-bounded) until a data file
+    * appears. */
+  private def lakeFormatOf(d: java.io.File, depth: Int = 8): Option[String] = {
+    val kids = Option(d.listFiles).getOrElse(Array.empty[java.io.File])
+    kids.collectFirst {
+      case k if k.isFile && k.getName.matches(".*\\.json(\\.[a-z0-9]+)?$") => "json"
+      case k if k.isFile && k.getName.endsWith(".parquet") => "parquet"
+      case k if k.isFile && k.getName.endsWith(".orc") => "orc"
+    }.orElse(if (depth <= 0) None
+      else kids.filter(k => k.isDirectory && k.getName.contains("="))
+        .sortBy(_.getName).iterator.flatMap(lakeFormatOf(_, depth - 1)).nextOption())
   }
 
   /** Read a small control file (schema DDL, metadata), decompressing by
@@ -287,6 +336,77 @@ object Load {
       s"--checksum accepts: fail, warn (default), skip — got '$other'")
   }
 
+  /** The frame one table's restore writes. A lake directory reads in its
+    * own format; chunk files read one task per file through
+    * [[SqlInsertReader]], [[LoadDataReader]] or, with `decode`, the
+    * exec filter's inverse child. `src.onlyFiles` restricts the chunk
+    * files read. */
+  def read(spark: SparkSession, dumpDir: String, src: TableSource,
+      decode: Option[(Seq[String], String)] = None): DataFrame = src.lakeFormat match {
+    case Some(fmt) if src.schema.isEmpty =>
+      spark.read.format(fmt).load(s"$dumpDir/${src.table}")
+    case Some(fmt) =>
+      // the recorded dump-time schema is the read schema, so JSON's
+      // widened types, base64 binaries and dropped all-null fields come
+      // back as dumped; the select moves the partition columns, which
+      // the reader appends, back into dump order
+      spark.read.schema(src.schema).format(fmt).load(s"$dumpDir/${src.table}")
+        .select(src.schema.fieldNames.map(n => col(s"`${n.replace("`", "``")}`")): _*)
+    case None =>
+      // --resume: a file whitelist replaces the stem glob — Hadoop
+      // brace alternation reads exactly the listed chunks. Each
+      // reader keeps only ITS extension: a LOAD_DATA resume list
+      // names .dat chunks alongside their .sql companion
+      // statements, which must not reach the row reader.
+      def globOr(default: String, keepExt: String): String =
+        src.onlyFiles.map(_.filter(_.contains(keepExt))) match {
+          case Some(fs) if fs.isEmpty =>
+            throw new IllegalStateException(
+              s"--resume lists no $keepExt files for ${src.table}")
+          case Some(fs) if fs.size == 1 => fs.head
+          case Some(fs) => s"{${fs.mkString(",")}}"
+          case None => default
+        }
+      // data chunks all start with `stem.` (schema siblings use the
+      // `stem-` dash forms); a stem with ZERO chunks is a --no-data /
+      // schema-only dump — the reference CREATES those tables empty
+      // (myloader restores the DDL with no data jobs), so the lake
+      // analog is an empty frame with the dump's schema, not a
+      // zero-files glob crash
+      val stemFiles = Option(new java.io.File(dumpDir).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.getName.startsWith(s"${src.table}."))
+      if (stemFiles.isEmpty && src.onlyFiles.isEmpty) {
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          src.schema)
+      } else decode match {
+        case Some((cmd, ext)) => SqlInsertReader.readFiltered(spark,
+          dumpDir, src.schema, cmd, glob = globOr(s"${src.table}.*$ext", ext))
+        case None =>
+          // LOAD_DATA/CSV dumps restore through the .dat reader with
+          // the delimiters recovered FROM the companion statement —
+          // myloader likewise rewrites the statement it finds
+          // (myloader_process.c) instead of assuming defaults
+          val dirFiles = stemFiles
+            .filter(f => src.onlyFiles.forall(fs =>
+              fs.contains(f.getName) || f.getName.endsWith(".sql")))
+          if (dirFiles.exists(f => classify(f.getName) == LoadData)) {
+            val opts = dirFiles
+              .filter(_.getName.endsWith(".sql")).sortBy(_.getName)
+              .iterator
+              .flatMap(f => LoadDataStatement.parse(
+                java.nio.file.Files.readString(f.toPath)))
+              .nextOption()
+              .map(p => LoadDataWriter.Options(format = p.format,
+                header = p.header, hexBlob = p.hexCols.nonEmpty))
+              .getOrElse(LoadDataWriter.Options())
+            LoadDataReader.read(spark, dumpDir, src.schema, opts,
+              glob = globOr(s"${src.table}.*.dat*", ".dat"))
+          } else SqlInsertReader.read(spark, dumpDir, src.schema,
+            glob = globOr(s"${src.table}.*.sql*", ".sql"))
+      }
+  }
+
   /** Restore dumped tables through the dependency scheduler, verifying
     * checksums against the manifest per [[ChecksumMode]]. Each table is
     * one pass, one task per chunk file; its row count and CRC32-XOR are
@@ -312,58 +432,7 @@ object Load {
         name = src.table,
         createSchema = () => (), // lake targets: schema = parquet metadata
         dataJobs = Seq(() => {
-          // --resume: a file whitelist replaces the stem glob — Hadoop
-          // brace alternation reads exactly the listed chunks. Each
-          // reader keeps only ITS extension: a LOAD_DATA resume list
-          // names .dat chunks alongside their .sql companion
-          // statements, which must not reach the row reader.
-          def globOr(default: String, keepExt: String): String =
-            src.onlyFiles.map(_.filter(_.contains(keepExt))) match {
-              case Some(fs) if fs.isEmpty =>
-                throw new IllegalStateException(
-                  s"--resume lists no $keepExt files for ${src.table}")
-              case Some(fs) if fs.size == 1 => fs.head
-              case Some(fs) => s"{${fs.mkString(",")}}"
-              case None => default
-            }
-          // data chunks all start with `stem.` (schema siblings use the
-          // `stem-` dash forms); a stem with ZERO chunks is a --no-data /
-          // schema-only dump — the reference CREATES those tables empty
-          // (myloader restores the DDL with no data jobs), so the lake
-          // analog is an empty frame with the dump's schema, not a
-          // zero-files glob crash
-          val stemFiles = Option(new java.io.File(dumpDir).listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(f => f.getName.startsWith(s"${src.table}."))
-          val df = if (stemFiles.isEmpty && src.onlyFiles.isEmpty) {
-            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              src.schema)
-          } else decode match {
-            case Some((cmd, ext)) => SqlInsertReader.readFiltered(spark,
-              dumpDir, src.schema, cmd, glob = globOr(s"${src.table}.*$ext", ext))
-            case None =>
-              // LOAD_DATA/CSV dumps restore through the .dat reader with
-              // the delimiters recovered FROM the companion statement —
-              // myloader likewise rewrites the statement it finds
-              // (myloader_process.c) instead of assuming defaults
-              val dirFiles = stemFiles
-                .filter(f => src.onlyFiles.forall(fs =>
-                  fs.contains(f.getName) || f.getName.endsWith(".sql")))
-              if (dirFiles.exists(f => classify(f.getName) == LoadData)) {
-                val opts = dirFiles
-                  .filter(_.getName.endsWith(".sql")).sortBy(_.getName)
-                  .iterator
-                  .flatMap(f => LoadDataStatement.parse(
-                    java.nio.file.Files.readString(f.toPath)))
-                  .nextOption()
-                  .map(p => LoadDataWriter.Options(format = p.format,
-                    header = p.header, hexBlob = p.hexCols.nonEmpty))
-                  .getOrElse(LoadDataWriter.Options())
-                LoadDataReader.read(spark, dumpDir, src.schema, opts,
-                  glob = globOr(s"${src.table}.*.dat*", ".dat"))
-              } else SqlInsertReader.read(spark, dumpDir, src.schema,
-                glob = globOr(s"${src.table}.*.sql*", ".sql"))
-          }
+          val df = read(spark, dumpDir, src, decode)
           // rows and checksum ride the write (skip mode observes rows
           // only): a mismatch surfaces after it, as in myloader.c:684-715
           val verify = checksumMode != ChecksumSkip

@@ -230,7 +230,7 @@ object Queries {
     }.reduce(_ unionAll _)
     catalog.groupBy("tbl")
       .agg(Checksum.bitXorAgg(
-        conv(substring(md5(Checksum.portableRowText(
+        conv(substring(md5(Checksum.rowText(
           Seq(col("tbl"), col("col_name"), col("ordinal"))).cast(BinaryType)),
           1, 15), 16, 10).cast(LongType)).as("struct_checksum"))
       .orderBy("tbl")

@@ -38,7 +38,8 @@ import org.apache.spark.sql.SparkSession
   *     [-L/--logfile F]
   *     [-D/--daemon -I/--snapshot-interval MIN -X/--snapshot-count K
   *      --snapshot-iterations N]
-  *     [--stream EVENTSDIR]
+  *     [--stream EVENTSDIR]   (announce each table's files the moment it
+  *      closes; tables still dump --table-threads at once)
   *   graft.cli.Main load -d /tmp/out --target /tmp/restored [--checksum fail]
   *     [-s/--source-db DB] [-B/--database NEWDB]
   *     [--stream EVENTSDIR [--follow] [--follow-timeout SECONDS]]
@@ -516,63 +517,12 @@ object Main {
         notUpdated.foreach(t =>
           log(o, s"[graft] skipping $db.$t: not updated since window"))
       }
-      val manifest = o.get("stream") match {
-        // --stream EVENTSDIR: announce every table's artifacts the
-        // moment that table CLOSES (reference stream mode,
-        // mydumper_stream.c: the loader starts on table 1 while table 2
-        // is still dumping). Event granularity is per data file; a
-        // concurrently-running `load --stream` consumes them through
-        // the incremental StreamingLoader.
-        case Some(evDir) =>
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(evDir))
-          import graft.streaming.LandingStream
-          // the reference streams the database schema-create FIRST
-          // (mydumper_stream.c: metadata/schema files precede data), so
-          // a follow-mode restore has its CREATE DATABASE phase before
-          // any table arrives; batch dumps get this from Dump.run
-          val startedAt = java.time.Instant.now().toString
-          val dbStem = cfg.stems.stem(cfg.db)
-          if (!cfg.noSchemas) {
-            Dump.writeSchemaObject(dir, dbStem, Dump.SchemaKind.Database,
-              Dump.databaseCreate(cfg))
-            LandingStream.announceFile(evDir, "dbschema", dbStem,
-              s"$dbStem-schema-create.sql")
-          }
-          val results = tables.map { case (name, df, _) =>
-            val r = Dump.dumpTable(df, name, cfg.copy(outDir = dir))
-            // file stems use the SURROGATE db stem (dumpTable writes
-            // files under it for filename-unsafe db names); announcing
-            // the raw db name would match zero files for a dotted db
-            val stem = s"$dbStem.${r.stem}"
-            val names = Option(new java.io.File(dir).listFiles)
-              .getOrElse(Array.empty).map(_.getName)
-            // exec-filtered dumps name their own extension — classify
-            // through the same remap Load.discover uses
-            val execExt = cfg.execFilter.map(_.ext)
-            def asData(n: String): String = execExt
-              .filter(n.endsWith).map(e => n.dropRight(e.length) + ".sql")
-              .getOrElse(n)
-            names.filter(n => n.startsWith(s"$stem.") &&
-                Load.classify(asData(n)) == Load.Data)
-              .sorted.foreach(n =>
-                LandingStream.announceFile(evDir, "data", stem, n))
-            names.filter(n => n.startsWith(s"$stem-schema"))
-              .foreach(n => LandingStream.announceFile(evDir, "schema", stem, n))
-            LandingStream.announceFile(evDir, "end", stem, "-")
-            log(o, s"[graft] dumped+announced ${r.table}: ${r.rows} rows")
-            r
-          }
-          // terminal event: table count lets a CONCURRENT `load --stream
-          // --follow` know when every announced `end` has arrived and it
-          // can stop its ProcessingTime stream (the reference's analog
-          // is the producer closing the stream pipe, mydumper_stream.c)
-          LandingStream.announceFile(evDir, "done", "-", results.size.toString)
-          Dump.writeManifest(cfg.copy(outDir = dir), startedAt, results)
-        case None => Dump.run(spark, tables, cfg.copy(outDir = dir), tableThreads)
-      }
-      if (!o.contains("stream"))
-        manifest.tables.foreach(t =>
-          log(o, s"[graft] dumped ${t.table}: ${t.rows} rows, checksum ${t.dataChecksum.getOrElse("-")}"))
+      // --stream EVENTSDIR: Dump.run announces each table's artifacts
+      // the moment that table closes, for a concurrent `load --stream`
+      val manifest = Dump.run(spark, tables, cfg.copy(outDir = dir), tableThreads,
+        events = o.get("stream"))
+      manifest.tables.foreach(t =>
+        log(o, s"[graft] dumped ${t.table}: ${t.rows} rows, checksum ${t.dataChecksum.getOrElse("-")}"))
       // --exec "cmd FILENAME": reference S10 per-file hook, driver-side.
       // Table files only — the reference's exec queue receives each
       // closed WRITER file (mydumper_exec_command.c); the run's control
@@ -637,7 +587,6 @@ object Main {
     val dir = o.getOrElse("directory", sys.error("-d/--directory required"))
     val target = o.getOrElse("target", sys.error("--target required"))
     val checksumMode = Load.checksumModeOf(o.get("checksum"))
-    if (o.contains("stream")) { runStreamLoad(spark, o, dir, target); return }
     // --exec-per-thread "gzip -dc" [--exec-per-thread-extension .sql.gzx]:
     // restore dumps whose bytes were filtered through an external
     // command at dump time (myloader's flag pair)
@@ -646,6 +595,7 @@ object Main {
         o.getOrElse("exec-per-thread-extension", sys.error(
           "--exec-per-thread-extension must be set with --exec-per-thread")))
     }
+    if (o.contains("stream")) { runStreamLoad(spark, o, dir, target, decode); return }
     // --resume (myloader.c:549-557): the dump dir's `resume` file lists
     // the files a crashed prior run left unprocessed; with the flag we
     // process ONLY those (myloader_directory.c:83-113), appending to
@@ -661,54 +611,36 @@ object Main {
         Some(readListFile(rf.getPath).filter(_.length > 2)) // :107 len guard
       }
     val groups = Load.discover(dir, decode.map(_._2), resumeEnabled)
-    // schema source: sibling parquet dump or caller-provided; dev slice
-    // infers from the source dir if given
-    val srcDir = o.get("source-dir")
-    val sources = srcDir match {
-      case Some(sd) =>
-        // manifest checksums apply regardless of where the SCHEMA comes
-        // from — a --source-dir restore used to come back "unverified"
-        // because this branch dropped them
-        val expected: Map[String, Long] = graft.sources.Manifest.read(dir)
-          .map(_.tables.flatMap(t => t.dataChecksum.map(c =>
-            t.filename.getOrElse(t.table) -> c.toLong)).toMap)
-          .getOrElse(Map.empty)
-        groups.keys.toSeq.sorted.map { stem =>
-          val table = stem.split("\\.", 2).last
-          // manifest entries key by bare table name (stem recorded
-          // separately under `filename` when they differ)
-          Load.TableSource(stem, Tables.t(spark, sd, table).schema,
-            expectedChecksum = expected.get(stem).orElse(expected.get(table)))
-        }
-      case None =>
-        // directory-only restore (the documented default usage): schemas
-        // reconstruct from the dump's own db.table-schema.sql files —
-        // silently restoring ZERO tables here was a bug, so an empty
-        // result now fails loudly instead of exiting 0
-        Load.sourcesFromDir(dir, resumeEnabled)
-    }
+    // schemas come from the dump's own db.table-schema.sql files (the
+    // documented default usage) or, with --source-dir, from the source
+    // tables; lake-format tables carry theirs in the manifest
+    val sources = Load.sourcesFromDir(dir, resumeEnabled,
+      schemaOf = o.get("source-dir").map(sd => t => Tables.t(spark, sd, t).schema),
+      dataExt = decode.map(_._2))
+    // silently restoring ZERO tables here was a bug, so data without a
+    // schema fails loudly instead of exiting 0
     require(sources.nonEmpty || groups.isEmpty,
       s"dump dir $dir has data files but no schema source — " +
         "add --source-dir or ensure *-schema.sql files are present")
+    // a lake dump has no chunk files for a resume list to name —
+    // honoring the flag would silently re-restore every table in
+    // full (append mode) against the listed-files-only contract, so
+    // refuse loudly like the reference's m_critical on a bad resume
+    require(!resumeEnabled || sources.forall(_.lakeFormat.isEmpty),
+      "--resume is not applicable to lake-format (parquet/orc/jsonl) dumps" +
+        " — their restores are whole-directory, not chunk-file, units")
     // --source-db / -s (myloader_process_filename.c:155): restore only
-    // tables whose dump db matches
-    val admitted0 = o.get("source-db") match {
-      case Some(sdb) => sources.filter(_.table.split("\\.", 2).head == sdb)
-      case None => sources
-    }
-    // --omit-from-file applies to the load side too (the reference's
-    // common_filter_entries is shared by both binaries,
-    // common_options.c:221-228): skip by db.table, bare db, or bare
-    // table, at the filename level like myloader's eval_table
+    // tables whose dump db matches. --omit-from-file applies to the load
+    // side too (the reference's common_filter_entries is shared by both
+    // binaries, common_options.c:221-228): skip by db.table, bare db, or
+    // bare table, at the filename level like myloader's eval_table
     val loadSkip: Set[String] = o.get("omit-from-file").map(readListFile)
       .getOrElse(Set.empty)
-    val skipAdmits: String => Boolean = stem => {
-      val sdb = stem.split("\\.", 2).head
-      val bare = stem.split("\\.", 2).last
-      !(loadSkip.contains(sdb) || loadSkip.contains(stem) ||
-        loadSkip.contains(bare))
+    val admitted1 = sources.filter { s =>
+      val (sdb, bare) = (s.table.split("\\.", 2).head, s.table.split("\\.", 2).last)
+      o.get("source-db").forall(_ == sdb) &&
+        !(loadSkip.contains(sdb) || loadSkip.contains(s.table) || loadSkip.contains(bare))
     }
-    val admitted1 = admitted0.filter(s => skipAdmits(s.table))
     // --resume: only stems with at least one LISTED data chunk restore,
     // and each restores exactly its listed subset
     val admitted = resumeList match {
@@ -724,22 +656,6 @@ object Main {
       case Some(db) => stem => db + stem.dropWhile(_ != '.')
       case None => identity
     }
-    // a jsonl dump is self-describing DDL-wise (db.table-schema.sql
-    // rides along like every non-parquet format) but its DATA is a
-    // directory of json part files, not .sql chunks — globbing
-    // `stem.*.sql*` for it dies with PATH_NOT_FOUND. Route a source to
-    // the SQL reader only when top-level chunk files exist for its stem;
-    // a data DIRECTORY named after the stem goes to the lake fallback.
-    val topFiles = Option(new java.io.File(dir).listFiles)
-      .getOrElse(Array.empty[java.io.File])
-    val sqlRouted = admitted.filter { s =>
-      topFiles.exists(f => f.isFile && f.getName.startsWith(s.table + ".")) ||
-        !topFiles.exists(f => f.isDirectory && f.getName == s.table)
-    }
-    // resume APPENDS to the prior run's partial restore, so the in-run
-    // checksum (which only sees this run's chunks) is meaningless —
-    // verify the read-back TARGET against the manifest instead, the
-    // same shape as the reference's post-load server-side CHECKSUM
     // --purge-mode FAIL|NONE|DROP|TRUNCATE|DELETE (myloader.h:35) on the
     // lake target: DROP/TRUNCATE/DELETE all reduce to a directory
     // overwrite (the default — what --drop-table/-o selects), NONE
@@ -755,127 +671,29 @@ object Main {
         case Some(other) => throw new IllegalArgumentException(
           s"--purge-mode accepts FAIL, NONE, DROP, TRUNCATE, DELETE — got '$other'")
       }
-    val results = Load.run(spark, dir, sqlRouted,
+    val results = Load.run(spark, dir, admitted,
       if (resumeEnabled) Load.ChecksumSkip else checksumMode, decode) {
       (stem, df) =>
         df.write.mode(writeMode).parquet(s"$target/${remap(stem)}")
     }
+    // resume APPENDS to the prior run's partial restore, so the in-run
+    // checksum (which only sees this run's chunks) is meaningless —
+    // verify the read-back TARGET against the manifest instead, the
+    // same shape as the reference's post-load server-side CHECKSUM
     val postVerified: Map[String, Boolean] =
       if (!resumeEnabled || checksumMode == Load.ChecksumSkip) Map.empty
-      else {
-        val expected: Map[String, String] = graft.sources.Manifest.read(dir)
-          .map(_.tables.flatMap(t => t.dataChecksum.map(c =>
-            t.filename.getOrElse(t.table) -> c)).toMap).getOrElse(Map.empty)
-        results.flatMap { r =>
-          val bare = r.table.split("\\.", 2).last
-          expected.get(bare).orElse(expected.get(r.table)).map { c =>
-            val back = spark.read.parquet(s"$target/${remap(r.table)}")
-            val ok = graft.functions.Checksum.rowsAndChecksum(back)._2.toString == c
-            require(ok || checksumMode != Load.ChecksumFail,
-              s"resume restore of ${r.table} failed checksum verification")
-            r.table -> ok
-          }
-        }.toMap
-      }
+      else admitted.flatMap { s =>
+        s.expectedChecksum.map { c =>
+          val back = spark.read.parquet(s"$target/${remap(s.table)}")
+          val ok = graft.functions.Checksum.rowsAndChecksum(back)._2 == c
+          require(ok || checksumMode != Load.ChecksumFail,
+            s"resume restore of ${s.table} failed checksum verification")
+          s.table -> ok
+        }
+      }.toMap
     results.foreach { r =>
       val ok = postVerified.get(r.table).orElse(r.checksumOk)
       log(o, s"[graft] restored ${r.table}: ${r.rows} rows, checksum ${ok.map(if (_) "ok" else "MISMATCH").getOrElse("unverified")}")
-    }
-    // directory-shaped LAKE artifacts (parquet/jsonl dumps): no schema
-    // files exist — the data is self-describing — so the SQL router
-    // above finds nothing and the load used to exit 0 as a silent no-op.
-    // Restore them here: read by format, verify against the manifest's
-    // recorded checksum when one was dumped, write like any other table.
-    if (results.isEmpty && groups.isEmpty) {
-      val manifest = graft.sources.Manifest.read(dir)
-      def byStem(f: graft.core.TableManifest => Option[String]): Map[String, String] =
-        manifest.map(_.tables.flatMap(t => f(t).map(
-          t.filename.getOrElse(t.table) -> _)).toMap).getOrElse(Map.empty)
-      val checksums = byStem(_.dataChecksum)
-      val schemas = byStem(_.sparkSchema)
-      val lakeDirs = Option(new java.io.File(dir).listFiles)
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.contains("."))
-        .sortBy(_.getName)
-      // format sniff on LEAF data files: a --partition-by dump's top
-      // level holds only `col=value` subdirs, so walk into them (depth-
-      // bounded by partition-column count) until a data file appears
-      def leafData(f: java.io.File, depth: Int = 8): Option[String] = {
-        val kids = Option(f.listFiles).getOrElse(Array.empty)
-        kids.collectFirst {
-          case k if k.isFile && k.getName.matches(".*\\.json(\\.[a-z0-9]+)?$") => "jsonl"
-          case k if k.isFile && k.getName.endsWith(".parquet") => "parquet"
-          case k if k.isFile && k.getName.endsWith(".orc") => "orc"
-        }.orElse(if (depth <= 0) None
-          else kids.filter(k => k.isDirectory && k.getName.contains("="))
-            .sortBy(_.getName).iterator.flatMap(leafData(_, depth - 1))
-            .nextOption())
-      }
-      // a lake dump has no chunk files for a resume list to name —
-      // honoring the flag would silently re-restore every table in
-      // full (append mode) against the listed-files-only contract, so
-      // refuse loudly like the reference's m_critical on a bad resume
-      require(lakeDirs.isEmpty || !resumeEnabled,
-        "--resume is not applicable to lake-format (parquet/orc/jsonl) dumps" +
-          " — their restores are whole-directory, not chunk-file, units")
-      val restored = for {
-        d <- lakeDirs
-        stem = d.getName
-        if o.get("source-db").forall(_ == stem.split("\\.", 2).head)
-        if skipAdmits(stem)
-        kind <- leafData(d)
-      } yield {
-        val data = kind match {
-          case "jsonl" => spark.read.json(d.getPath)
-          case "orc"   => spark.read.orc(d.getPath)
-          case _       => spark.read.parquet(d.getPath)
-        }
-        // conform the read-back to the manifest's recorded dump-time
-        // schema — partitionBy appends partition columns, JSON inference
-        // alphabetizes column order and widens types — so the restored
-        // table AND its checksum match the dump shape exactly (the
-        // reference's loader never restores unverified, myloader.c:684)
-        val bare = stem.split("\\.", 2).last
-        val recorded = schemas.get(bare).orElse(schemas.get(stem)).map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        import org.apache.spark.sql.functions.{col, lit, unbase64}
-        val conformed = recorded match {
-          case Some(sc) => data.select(sc.fields.map { fld =>
-            if (!data.columns.contains(fld.name))
-              // JSON writers drop all-null fields; restore the column
-              lit(null).cast(fld.dataType).as(fld.name)
-            else if (fld.dataType == org.apache.spark.sql.types.BinaryType &&
-                data.schema(fld.name).dataType == org.apache.spark.sql.types.StringType)
-              unbase64(col(fld.name)).as(fld.name) // JSON base64-encodes binary
-            else col(fld.name).cast(fld.dataType).as(fld.name)
-          }.toSeq: _*)
-          case None => data
-        }
-        // honor --purge-mode exactly as the SQL-routed path does:
-        // FAIL refuses an existing target, NONE appends, the
-        // DROP/TRUNCATE/DELETE family (and the default) overwrite
-        conformed.write.mode(writeMode).parquet(s"$target/${remap(stem)}")
-        val (rows, checksum) = graft.functions.Checksum.rowsAndChecksum(
-          spark.read.parquet(s"$target/${remap(stem)}"))
-        // plain parquet/orc preserve dump shape even without a recorded
-        // schema (pre-extension dumps); partitioned/jsonl layouts need
-        // the manifest schema to verify
-        val shapeTrusted = recorded.isDefined ||
-          ((kind == "parquet" || kind == "orc") &&
-            !Option(d.listFiles).getOrElse(Array.empty)
-              .exists(k => k.isDirectory && k.getName.contains("=")))
-        val ok =
-          if (!shapeTrusted) None
-          else checksums.get(bare).orElse(checksums.get(stem)).map(_ == checksum.toString)
-        require(!ok.contains(false) || checksumMode != Load.ChecksumFail,
-          s"lake restore of $stem failed checksum verification")
-        log(o, s"[graft] restored $stem: $rows rows, checksum " +
-          ok.map(if (_) "ok" else "MISMATCH").getOrElse("unverified"))
-        stem
-      }
-      if (lakeDirs.nonEmpty && restored.isEmpty)
-        log(o, s"[graft] no lake artifacts admitted from $dir")
     }
   }
 
@@ -891,7 +709,7 @@ object Main {
     * ProcessingTime cadence and stops itself once the producer's
     * terminal `done` event arrives and every announced `end` is in. */
   private def runStreamLoad(spark: SparkSession, o: Map[String, String],
-      dir: String, target: String): Unit = {
+      dir: String, target: String, decode: Option[(Seq[String], String)]): Unit = {
     import scala.concurrent.ExecutionContext.Implicits.global
     val evDir = o("stream")
     // in --follow mode the loader may start BEFORE the dump created the
@@ -946,15 +764,10 @@ object Main {
           schemas.put(table, schema)
         })
         case "data" => loader.offerData(table, () => {
-          // exec-filtered events decode through the inverse child, like
-          // the batch path (myloader's flag pair applies to stream mode)
-          val df = o.get("exec-per-thread") match {
-            case Some(cmd) => graft.sources.SqlInsertReader.readFiltered(
-              spark, dir, schemas.get(table), cmd.trim.split("\\s+").toSeq,
-              glob = path)
-            case None => graft.sources.SqlInsertReader.read(
-              spark, dir, schemas.get(table), glob = path)
-          }
+          // the batch restore's reader, on exactly the announced file
+          // (exec-filtered events decode through the inverse child)
+          val df = Load.read(spark, dir, Load.TableSource(table, schemas.get(table),
+            onlyFiles = Some(Seq(path))), decode)
           // rows are counted on the append itself: one read of the file
           val (n, _) = graft.functions.Checksum.observed(df, checksum = false,
             s"stream restore of $path")(_.write.mode("append").parquet(s"$target/$table"))

@@ -100,11 +100,9 @@ object Checksum {
     * md5 replays it bit-for-bit — DuckDB gates it as q_checksum_md5,
     * which CRC32 can't offer there. Use on integer/string columns;
     * float/timestamp → string rendering differs across engines. */
-  def portableRowText(cols: Seq[Column]): Column = rowText(cols)
-
   def portableChecksum(df: DataFrame, cols: Seq[String]): Column =
     bitXorAgg(
-      conv(substring(md5(portableRowText(cols.map(df.col)).cast(BinaryType)),
+      conv(substring(md5(rowText(cols.map(df.col)).cast(BinaryType)),
         1, 15), 16, 10).cast(LongType))
 
   def portableChecksumRow(df: DataFrame, table: String,

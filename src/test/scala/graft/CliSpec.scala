@@ -662,6 +662,18 @@ class CliStreamSpec extends SparkTestBase {
     assert(events.count(_.startsWith("end\t")) === 2, events.toString)
     assert(events.exists(_.startsWith("schema\tgraft.region")))
     assert(events.count(_.startsWith("data\tgraft.nation")) >= 1)
+    // in announce order: the schema-create first, each table's data and
+    // schema before its end, and done with the table count last
+    val ordered = new java.io.File(ev).list().filter(_.startsWith("ev_")).sorted.toSeq
+      .map(n => scala.io.Source.fromFile(s"$ev/$n").mkString.stripLineEnd.split("\t").toSeq)
+    assert(ordered.head === Seq("dbschema", "graft", "graft-schema-create.sql"), ordered)
+    assert(ordered.last === Seq("done", "-", "2"), ordered)
+    for (t <- Seq("graft.region", "graft.nation")) {
+      val mine = ordered.zipWithIndex.filter(_._1(1) == t)
+      val end = mine.collect { case (Seq("end", _, _), i) => i }
+      assert(end.size === 1 && mine.forall(_._2 <= end.head), s"$t: $ordered")
+      assert(Set("data", "schema").subsetOf(mine.map(_._1.head).toSet), s"$t: $ordered")
+    }
 
     Main.main(Array("load", "-d", out, "--target", restored, "--stream", ev))
     for (t <- Seq("region", "nation")) {
@@ -872,6 +884,11 @@ class CliTableThreadsSpec extends SparkTestBase {
   test("without --table-threads (concurrent at --threads) matches --table-threads 1") {
     assertSameDump(dump("--table-threads", "1"), dump())
   }
+
+  test("dump --stream (concurrent at --threads) matches a plain --table-threads 1 dump") {
+    val ev = java.nio.file.Files.createTempDirectory("graft_tt_ev_").toString
+    assertSameDump(dump("--table-threads", "1"), dump("--stream", ev))
+  }
 }
 
 /** Parser hardening: unknown switches, explicit-disable booleans
@@ -1001,13 +1018,32 @@ class CliLakeModeSpec extends SparkTestBase {
         "--purge-mode", "FAIL"))
     }
     // NONE appends instead of overwriting
+    val lf = java.nio.file.Files.createTempFile("graft_lkmp_log", ".txt").toString
     Main.main(Array("load", "-d", out, "--target", target,
-      "--purge-mode", "NONE"))
+      "--purge-mode", "NONE", "--logfile", lf))
     assert(spark.read.parquet(s"$target/graft.region").count() === 2 * n)
+    // the append verifies the rows it restored, not the whole target
+    assert(restoredLines(lf) === Seq(s"[graft] restored graft.region: $n rows, checksum ok"))
+    Main.main(Array("load", "-d", out, "--target", target,
+      "--purge-mode", "NONE", "--checksum", "fail"))
+    assert(spark.read.parquet(s"$target/graft.region").count() === 3 * n)
     // default / DROP overwrite back to one copy
     Main.main(Array("load", "-d", out, "--target", target,
       "--purge-mode", "DROP"))
     assert(spark.read.parquet(s"$target/graft.region").count() === n)
+  }
+
+  test("a lake restore runs one job per table, like a SQL-format restore") {
+    def loadJobs(out: String): Int = {
+      val target = java.nio.file.Files.createTempDirectory("graft_lkmj_").toString
+      Counters.measure(spark.sparkContext)(Main.main(Array("load", "-d", out,
+        "--target", target, "--checksum", "fail")))._2.jobs
+    }
+    val sqlOut = java.nio.file.Files.createTempDirectory("graft_lkmjs_").toString
+    Main.main(Array("dump", "--source-dir", sf, "-o", sqlOut,
+      "--tables-list", "region,nation"))
+    assert(loadJobs(sqlOut) === 2)
+    assert(loadJobs(dumpParquet("region,nation")) === 2)
   }
 
   test("--resume is refused for lake-format dumps instead of re-restoring") {
