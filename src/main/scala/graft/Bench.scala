@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-round benchmark main: runs every catalog query against
+/** The one benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries are materialized
   * through the `noop` sink so projections/serialization are actually
   * executed (a bare count() lets Catalyst prune most of the work). A JVM
@@ -10,45 +10,269 @@ import org.apache.spark.sql.SparkSession
   *
   * Each timed entry also writes one [[Counters]] JSON line to STDERR
   * (jobs, stages, tasks, task_s, shuffle, spill, peak stage memory),
-  * taken from the pass whose wall it records; stdout stays the single
-  * JSON line. Per-query cost of a few queries, one pass:
+  * taken from the pass whose wall it records, with that 1-based `pass`;
+  * stdout stays the single JSON line. Every timed pass must also clear
+  * [[scaleCheck]]; an entry that fails it is an error, not a time.
+  * Per-query cost of a few queries, one pass:
   * {{{
   * SPARK_GRAFT_BENCH_FILTER='^(q_semdedup|q_dedup_clusters)$' \
   * SPARK_GRAFT_BENCH_REPS=1 sbt "runMain graft.Bench" 2>&1 | grep '^{"query"'
+  * }}}
+  * The [[scaleLegs]] run only under a filter that names them, e.g. all of
+  * them on the 10× tables `runMain graft.MakeScaled` builds:
+  * {{{
+  * SPARK_GRAFT_SF_DIR=target/sf1 SPARK_GRAFT_BENCH_FILTER='^scale_' \
+  * SPARK_GRAFT_BENCH_REPS=1 sbt "runMain graft.Bench"
   * }}}
   * The formatted plan of one catalog query: `runMain graft.PlanDump
   * <dir> <query>`. */
 object Bench {
   /** Min-of-reps timing of one catalog query. A query that THROWS on any
-    * rep yields Left(message) — never a number: round 6's bench recorded
-    * two fail-fast exceptions as healthy 0.05-0.15 s entries inside a
-    * passing total (the harness honesty gap the r6 verdict flagged).
-    * `sweep` frees storage blocks + cached plans between reps so no
-    * query's state contaminates the next. */
+    * rep, or fails [[scaleCheck]], yields Left(message) — never a number:
+    * round 6's bench recorded two fail-fast exceptions as healthy
+    * 0.05-0.15 s entries inside a passing total (the harness honesty gap
+    * the r6 verdict flagged). Storage blocks and cached plans are freed
+    * between reps so no query's state contaminates the next. */
   def timeQuery(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      reps: Int): Either[String, Double] = {
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      fn: (SparkSession, String) => DataFrame,
+      reps: Int): Either[String, Double] =
+    best(name, (1 to reps).map(_ => timedQuery(spark, sfDir, name, fn)))
+
+  private def timedQuery(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): (Either[String, Double], Counters) =
+    timed(spark, name) {
+      val df = fn(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      Some(df)
     }
-    val times = (1 to reps).map { _ =>
+
+  /** One timed pass of `body` with the [[Counters]] of its Spark work.
+    * The clock covers building and running the work; `body` returns the
+    * frame whose executed plan [[scaleCheck]] reads (None for legs that
+    * are not one frame). The plan is read and storage is swept after the
+    * clock stops: both are harness hygiene, not query cost. */
+  private def timed(spark: SparkSession, name: String)(
+      body: => Option[DataFrame]): (Either[String, Double], Counters) = {
+    val (r, c) = Counters.measure(spark.sparkContext) {
       val t0 = System.nanoTime()
-      val r =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-        }
-      // stop the clock BEFORE the sweep: unpersist/clearCache is harness
-      // hygiene, not query cost
-      val sec = (System.nanoTime() - t0) / 1e9
-      sweep()
-      r.toLeft(sec)
+      try {
+        val df = body
+        val sec = (System.nanoTime() - t0) / 1e9
+        Right((sec, df.map(_.queryExecution.executedPlan.toString)))
+      } catch { case e: Throwable =>
+        Left(Option(e.getMessage).getOrElse(e.getClass.getName))
+      }
     }
-    times.collectFirst { case Left(err) => Left(err) }
-      .getOrElse(Right(times.collect { case Right(s) => s }.min))
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
+    val checked = r.flatMap { case (sec, plan) => scaleCheck(name, plan, c).toLeft(sec) }
+    checked.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+    (checked, c)
+  }
+
+  /** The fastest successful pass, or the first error; the counters of the
+    * recorded pass go to stderr with its 1-based `pass`, so a minimum
+    * taken on a cold first pass is visible. */
+  private def best(name: String,
+      runs: Seq[(Either[String, Double], Counters)]): Either[String, Double] =
+    runs.collectFirst { case (Left(e), _) => e }.toLeft {
+      val ((t, c), i) = runs.zipWithIndex
+        .collect { case ((Right(t), c), i) => ((t, c), i) }.minBy(_._1._1)
+      System.err.println(c.json(name).stripSuffix("}") + s""","pass":${i + 1}}""")
+      t
+    }
+
+  /** Catalog queries whose plans carry a cross join that is bounded by
+    * construction, so [[scaleCheck]] (and PlanQualitySpec) admit their
+    * nested-loop / cartesian operator:
+    *  - batch ANN crossJoins a BROADCAST probe set (contractually small);
+    *  - tf-idf crossJoins the ONE-ROW corpus-size aggregate (O(n·1));
+    *  - exact kNN is the all-pairs BASELINE by definition — its scale path
+    *    is the cell-equi-joined q_knn_graph, which must pass; q_knn_recall
+    *    compares the LSH graph against that baseline on a bounded 200-id
+    *    slice;
+    *  - q_dedup_simhash_recall shares q_dedup_minhash_recall's bounded
+    *    500-doc brute-force ground-truth stage (the LSH path under test is
+    *    the equi-join side); q_dedup_simhash embeds the same truth stage
+    *    to emit the recovered tier;
+    *  - q_lm_score crossJoins the ONE-ROW training-token total (O(n·1));
+    *    q_lm_buckets / q_curriculum / q_lm_store embed it;
+    *  - q_bm25 crossJoins the ONE-ROW corpus-constants aggregate
+    *    (N/avgdl/df) into the matched-docs scorer, and n there is already
+    *    filtered to docs containing a query term; q_hybrid_rrf embeds the
+    *    same stage (its fusion join is a ≤50-row equi-join); q_bm25_index
+    *    sums its constants row from the KB-sized stats table;
+    *  - q_dsir / q_dsir_sample crossJoin the ONE-ROW feature totals. */
+  val boundedCrossJoins: Set[String] = Set("q_ann_batch", "q_tfidf",
+    "q_knn_exact", "q_knn_recall", "q_dedup_minhash_recall",
+    "q_dedup_simhash_recall", "q_embed_recall", "q_dedup_simhash",
+    "q_lm_score", "q_bm25", "q_bm25_batch", "q_hybrid_rrf",
+    "q_dsir", "q_dsir_sample", "q_lm_buckets", "q_curriculum",
+    "q_lm_store", "q_bm25_index")
+
+  /** The two properties every timed pass must keep at any scale, or the
+    * reason it does not:
+    *  - its executed plan has no BroadcastNestedLoopJoin or
+    *    CartesianProduct (O(n·m) at 100 TB), unless the entry is one of
+    *    the [[boundedCrossJoins]];
+    *  - its disk spill is at most max(shuffle bytes, 64 MiB): a shape
+    *    that spills beyond what it shuffles on one host thrashes on a
+    *    cluster. */
+  def scaleCheck(name: String, plan: Option[String], c: Counters): Option[String] =
+    plan.filterNot(_ => boundedCrossJoins(name))
+      .flatMap(p => Seq("BroadcastNestedLoopJoin", "CartesianProduct").find(p.contains))
+      .map(op => s"$name plans a $op")
+      .orElse(Option.when(c.diskSpillBytes > math.max(c.shuffleWriteBytes, 64L << 20))(
+        s"$name spilled ${c.diskSpillBytes} B to disk, above its " +
+          s"${c.shuffleWriteBytes} B shuffle and 64 MiB"))
+
+  /** Legs whose synthetic data no catalog table has: skewed and deep
+    * graphs, hot keys, a production-depth BPE vocabulary and a
+    * daemon-cadence store. They run only under a SPARK_GRAFT_BENCH_FILTER
+    * that matches them, so a default pass never does. Sizes derive from
+    * the sf dir's `documents` row count n (5 k at sf0.1, 50 k at
+    * `MakeScaled`'s sf1), so one leg grows with the tables; the chain is
+    * sized from [[operators.Dedup.LocalUnionFindEdges]] instead, so it
+    * runs the distributed clusters loop at every sf. */
+  private val scaleLegs: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    import org.apache.spark.sql.functions._
+    def nDocs(spark: SparkSession, sfDir: String): Long =
+      Tables.documents(spark, sfDir).count()
+    // power-law graph: 5 hubs receive half of the 40·n edges (4·n raw
+    // edges EACH), the other half lands uniformly on 10·n background
+    // nodes; hash-derived, no RNG, so reruns and engines agree
+    def skewEdges(spark: SparkSession, sfDir: String): DataFrame = {
+      val n = nDocs(spark, sfDir)
+      val hubs = 5L
+      spark.range(40 * n).select(
+        when(pmod(col("id"), lit(2)) === 0, pmod(xxhash64(col("id")), lit(hubs)))
+          .otherwise(pmod(xxhash64(col("id") + 1000000007L), lit(10 * n)) + hubs)
+          .as("src"),
+        (pmod(xxhash64(col("id") + 777L), lit(10 * n)) + lit(hubs)).as("dst"))
+    }
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      // BPE at production vocab depth: 32k merges over 10·n synthesized
+      // words, stem (3-7 chars) + suffix morphemes with zipf-ish in-row
+      // repetition, so merges stay productive to 32k+ depth. The corpus
+      // pays one distributed word count; the merge loop runs on the
+      // driver fast path.
+      "scale_bpe_train_32k" -> { (spark, sfDir) =>
+        val nWords = 10 * nDocs(spark, sfDir)
+        val word = udf { (id: Long) =>
+          val h = graft.functions.Hashing.mix64(id)
+          val stemLen = 3 + (h & 3).toInt + ((h >>> 2) & 1).toInt
+          val sb = new StringBuilder
+          var s = graft.functions.Hashing.mix64(id % (nWords / 16))
+          var i = 0
+          while (i < stemLen) {
+            sb += ('a' + ((s >>> (8 * (i % 8))) & 0x7f).toInt % 26).toChar
+            if (i % 8 == 7) s = graft.functions.Hashing.mix64(s)
+            i += 1
+          }
+          val sfx = Array("", "s", "ed", "ing", "er", "ly", "tion", "est")
+          sb ++= sfx(((h >>> 8) & 7).toInt)
+          Array.fill(1 + (16 / (1 + (id % 31))).toInt)(sb.toString).mkString(" ")
+        }
+        operators.BpeTrain.merges(
+          spark.range(nWords).select(word(col("id")).as("text")), "text", 32768)
+      },
+      // deep-graph clusters: a Hamiltonian path over hash-permuted ids
+      // (diameter = node count, the shape that replays the per-round edge
+      // exchange O(log n) times). Its 2·(nodes - 1) directed edges sit
+      // above LocalUnionFindEdges, so this prices the distributed loop.
+      "scale_dedup_clusters_chain" -> { (spark, sfDir) =>
+        val nodes = operators.Dedup.LocalUnionFindEdges / 2 + nDocs(spark, sfDir)
+        operators.Dedup.clusters(spark.range(nodes - 1).select(
+          xxhash64(col("id")).as("id1"), xxhash64(col("id") + 1L).as("id2")))
+      },
+      // curation with ONE domain holding half of all docs, every one with
+      // a unique path, so the whole slab reaches the quota stage
+      "scale_curate_hotdomain" -> { (spark, sfDir) =>
+        val domains = 3 * nDocs(spark, sfDir) / 5
+        val urled = Tables.documents(spark, sfDir).withColumn("u",
+          when(pmod(col("doc_id"), lit(2)) === 0,
+            concat(lit("https://bigblog.com/p/"), col("doc_id").cast("string")))
+            .otherwise(concat(lit("https://site"),
+              pmod(xxhash64(col("doc_id")), lit(domains)).cast("string"),
+              lit(".com/p/"), pmod(col("doc_id"), lit(20)).cast("string"))))
+        operators.Curation.curate(urled, "doc_id", "text", "u",
+          minTokens = 20, domainCap = 50)
+      },
+      "scale_label_prop_skew" -> { (spark, sfDir) =>
+        operators.Graphs.labelPropagation(skewEdges(spark, sfDir), "src", "dst",
+          iters = 4)
+      },
+      // per-group cap where 90% of 40·n rows share one group
+      "scale_reservoir_skew" -> { (spark, sfDir) =>
+        val e = spark.range(40 * nDocs(spark, sfDir)).select(
+          when(pmod(col("id"), lit(10)) < 9, lit("hot"))
+            .otherwise(concat(lit("g"), pmod(xxhash64(col("id")), lit(1000))))
+            .as("grp"),
+          col("id"))
+        operators.Sampling.topKPerGroup(e, "grp", "id", k = 100)
+      },
+      // corpus-global sentence dedup where half of all docs end in one
+      // boilerplate sentence
+      "scale_sentence_dedup_hot" -> { (spark, sfDir) =>
+        val seeded = Tables.documents(spark, sfDir).withColumn("text",
+          when(pmod(col("doc_id"), lit(2)) === 0,
+            concat(col("text"), lit(". Subscribe to our newsletter now.")))
+            .otherwise(col("text")))
+        operators.SentenceDedup.dedupSentences(seeded, "text", "doc_id")
+          .groupBy().agg(sum("n_sents"), sum("n_dup"), sum(length(col("clean_text"))))
+      },
+      // a sentence-count store after 1000 blind appends (daemon cadence):
+      // compaction must cut the visible files ≥ 50× and bring the full
+      // read under the accrued read, and 5 later appends must not undo it
+      "scale_store_compaction" -> { (spark, _) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_bench_cmp").toString + "/s"
+        val batches = 1000
+        def batch(b: Int): DataFrame = spark.range(8).select(
+          (col("id") + b.toLong * 8L).as("doc_id"),
+          concat(lit("common alpha beta. shared gamma delta. tail "),
+            ((col("id") + b) % 13).cast("string"), lit(" words.")).as("text"))
+        def append(b: Int): Unit = operators.SentenceDedup.appendCounts(
+          batch(b), "text", "doc_id", dir, f"b$b%05d")
+        def read(): (Double, Long) = {
+          val t0 = System.nanoTime()
+          operators.SentenceDedup.storedCounts(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          ((System.nanoTime() - t0) / 1e9,
+            operators.StoreCompaction.stats(spark, dir)._1)
+        }
+        operators.SentenceDedup.writeCounts(batch(0), "text", "doc_id", dir, "b00000")
+        (1 until batches).foreach(append)
+        val (readPre, filesPre) = read()
+        operators.SentenceDedup.compactCounts(spark, dir)
+        val (readPost, filesPost) = read()
+        (batches until batches + 5).foreach(append)
+        val (readAfter, filesAfter) = read()
+        System.err.println(f"[bench] scale_store_compaction: read $readPre%.2f s / " +
+          f"$filesPre files after $batches appends, $readPost%.2f s / $filesPost " +
+          f"compacted, $readAfter%.2f s / $filesAfter after 5 more appends")
+        require(filesPost * 50 <= filesPre,
+          s"compaction left $filesPost of $filesPre files")
+        require(readPost < readPre,
+          f"compacted read $readPost%.2f s not under accrued read $readPre%.2f s")
+        require(readAfter < readPre,
+          "post-compaction appends re-inflated the read cost")
+        spark.emptyDataFrame
+      },
+      // temperature sampling where one domain holds half of all docs
+      "scale_temperature_sample_hot" -> { (spark, sfDir) =>
+        val domains = nDocs(spark, sfDir) / 5
+        val domed = Tables.documents(spark, sfDir).select(col("doc_id"),
+          when(pmod(col("doc_id"), lit(2)) === 0, lit("big"))
+            .otherwise(concat(lit("d"),
+              pmod(xxhash64(col("doc_id")), lit(domains)).cast("string")))
+            .as("dom"))
+        operators.Sampling.temperatureSample(domed, "dom", "doc_id", scale = 8.0)
+          .groupBy().agg(count(lit(1)), sum("doc_id"))
+      },
+      "scale_triangles_skew" -> { (spark, sfDir) =>
+        operators.Graphs.triangleCounts(skewEdges(spark, sfDir), "src", "dst")
+      })
   }
 
   /** Fixed CPU calibration probe: a seeded 512-square double matmul,
@@ -187,76 +411,29 @@ object Bench {
     // one-shot timing in an under-provisioned JVM)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt max 1
     // SPARK_GRAFT_BENCH_FILTER: regex over query names — run only the
-    // matching subset (isolation runs while bisecting a regression).
-    // SPARK_GRAFT_BENCH_CHILD=1: run every catalog query in its own
-    // fresh child JVM (same opts/classpath) — separates in-suite state
-    // or codegen-cache contamination from real plan cost; the in-JVM
-    // min-of-reps path stays the cheap default.
+    // matching subset (isolation runs while bisecting a regression). The
+    // scale legs run only when it matches them.
     val filterRe = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
     def keep(name: String): Boolean =
       filterRe.forall(_.findFirstIn(name).isDefined)
-    val childMode = sys.env.get("SPARK_GRAFT_BENCH_CHILD").contains("1")
-    def runInChild(name: String): Option[Double] = {
-      import scala.jdk.CollectionConverters._
-      val javaBin = java.nio.file.Paths.get(
-        System.getProperty("java.home"), "bin", "java").toString
-      val jvmOpts = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-        .filterNot(_.startsWith("-agentlib"))
-      val cmd = Seq(javaBin) ++ jvmOpts ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pat = ("\"" + java.util.regex.Pattern.quote(name) + "\":([0-9.]+)").r
-      try {
-        val out = scala.sys.process.Process(cmd, None,
-          "SPARK_GRAFT_BENCH_CHILD" -> "0",
-          "SPARK_GRAFT_BENCH_FILTER" ->
-            ("^" + java.util.regex.Pattern.quote(name) + "$")).!!
-        val r = pat.findFirstMatchIn(out).map(_.group(1).toDouble)
-        if (r.isEmpty) System.err.println(s"[bench] child for $name printed no result")
-        r
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] child for $name failed: ${e.getMessage}")
-        None
+    val selected = (SparkEntry.queries.toSeq ++ (if (filterRe.isDefined) scaleLegs else Nil))
+      .sortBy(_._1).filter(t => keep(t._1))
+    // min across FULL catalog passes, not consecutive reps: this VM's
+    // noise comes in multi-second windows (two same-day full runs inflated
+    // two DISJOINT query sets 3-12x), so back-to-back reps can both land
+    // in one window while passes minutes apart almost never do — same
+    // total work, far lower variance. A failed query is an ERROR entry,
+    // never a timed one: a thrown exception timed as "fast" would corrupt
+    // the committed record and hide the breakage inside a passing total.
+    val perPass: Seq[Map[String, (Either[String, Double], Counters)]] =
+      (1 to reps).map { _ =>
+        selected.map { case (n, f) => n -> timedQuery(spark, sfDir, n, f) }.toMap
       }
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(t => keep(t._1))
-    // min across passes (or the first error); the counters of the pass
-    // whose wall is recorded go to stderr. Each pass's counters are read
-    // by Counters.measure after that pass's clock stopped.
-    def best(name: String,
-        runs: Seq[(Either[String, Double], Counters)]): Either[String, Double] =
-      runs.collectFirst { case (Left(e), _) => e }.toLeft {
-        val (t, c) = runs.collect { case (Right(t), c) => (t, c) }.minBy(_._1)
-        System.err.println(c.json(name))
-        t
-      }
-    // a failed query is an ERROR entry, never a timed one — a crashed
-    // child or a thrown exception timed as "fast" would corrupt the
-    // committed record and hide the breakage inside a passing total
-    var passTotals: Seq[Double] = Nil
-    val measured: Seq[(String, Either[String, Double])] =
-      if (childMode) selected.map { case (name, _) =>
-        name -> runInChild(name).toRight("child crashed or printed no result")
-      }
-      else {
-        // min across FULL catalog passes, not consecutive reps: this
-        // VM's noise comes in multi-second windows (two same-day full
-        // runs inflated two DISJOINT query sets 3-12x), so back-to-back
-        // reps can both land in one window while passes minutes apart
-        // almost never do — same total work, far lower variance
-        val perPass: Seq[Map[String, (Either[String, Double], Counters)]] =
-          (1 to reps).map { _ =>
-            selected.map { case (n, f) =>
-              n -> Counters.measure(spark.sparkContext)(
-                timeQuery(spark, sfDir, n, f, reps = 1))
-            }.toMap
-          }
-        // per-pass catalog totals make the min-across-passes record
-        // auditable: the committed total must sit within ~1.15x of the
-        // best single pass, or something other than noise moved
-        passTotals = perPass.map(_.values.collect { case (Right(t), _) => t }.sum)
-        selected.map { case (n, _) => n -> best(n, perPass.map(_(n))) }
-      }
+    // per-pass catalog totals make the min-across-passes record
+    // auditable: the committed total must sit within ~1.15x of the best
+    // single pass, or something other than noise moved
+    val passTotals = perPass.map(_.values.collect { case (Right(t), _) => t }.sum)
+    val measured = selected.map { case (n, _) => n -> best(n, perPass.map(_(n))) }
     val catalog = measured.collect { case (n, Right(t)) => n -> t }
     val catalogErrs = measured.collect { case (n, Left(_)) => n }
     // the reference's own workload: dump the fact table to SQL-INSERT
@@ -406,16 +583,7 @@ object Bench {
     // exactly what a floor should be).
     val pipelinePasses: Seq[Seq[(Either[String, Double], Counters)]] =
       (1 to reps).map { _ =>
-        pipeline.map { case (name, thunk) =>
-          Counters.measure(spark.sparkContext) {
-            val t0 = System.nanoTime()
-            val r = try { thunk(); None } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              Some(name)
-            }
-            r.toLeft((System.nanoTime() - t0) / 1e9)
-          }
-        }
+        pipeline.map { case (name, thunk) => timed(spark, name) { thunk(); None } }
       }
     val pipelineMin: Seq[(String, Either[String, Double])] =
       pipeline.map(_._1).zipWithIndex.map { case (name, i) =>

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * corpus' duplicate density for the dedup gates); `embeddings` perturbs
   * replica vectors by a per-rep scalar so they are near-dups of their
   * source rather than exact copies (exact copies degenerate cosine top-k
-  * to ties). Same conventions as [[ScaleProbe]].
+  * to ties). `Bench`'s scale legs size themselves from the `documents`
+  * row count, so the same legs run ten times larger here.
   *
   * Run: `sbt "runMain graft.MakeScaled [srcDir] [outDir] [X]"`.
   * Default: /root/testdata/sf0.1 → target/sf1 at X=10.

@@ -156,8 +156,6 @@ object BpeTrain {
     //  batch of 1 is the plain sequential argmax and needs no strict
     //  gap (ties included), so progress is always ≥ 1 merge/round.
     val roundBudget = 256 // collect budget; batches self-truncate below it
-    val checkpointEvery =
-      sys.props.getOrElse("graft.bpe.checkpointEvery", "1").toInt max 1
     lastDistributedRounds = 0
     while (k < numMerges && !exhausted) {
       lastDistributedRounds += 1
@@ -200,16 +198,12 @@ object BpeTrain {
         // every un-checkpointed round's replace chain re-executes
         // inside the NEXT pair count's explode, and 230k-row × multi-
         // replace string rewrites cost more than the one materialization
-        // job they save. The knob stays for re-adjudication on corpora
-        // with different vocab/string shapes.
-        val merged = vocab.select(
+        // job they save.
+        val (next, nextRelease) = checkpointTracked(vocab.select(
           batch.foldLeft(col("s")) { case (c, (l, r, _)) =>
             call_function("replace", c, lit(s" $l  $r "), lit(s" $l$r "))
-          }.as("s"), col("cnt"))
-        if (lastDistributedRounds % checkpointEvery == 0) {
-          val (next, nextRelease) = checkpointTracked(merged)
-          release(); vocab = next; release = nextRelease
-        } else vocab = merged
+          }.as("s"), col("cnt")))
+        release(); vocab = next; release = nextRelease
       }
     }
     release()
@@ -365,19 +359,6 @@ object BpeTrain {
           addPairs(w, 1L)
         }
       }
-    }
-    // instrumentation hook (ScaleProbe's bpe head sets the property):
-    // the post-GC LIVE set of the loop's structures, measured while
-    // words/pairFreq/pairWords/heap are still reachable — the G1 peak
-    // the probe also prints includes collectible churn and overstates
-    // the actual residency by an order of magnitude
-    if (sys.props.contains("graft.bpe.measureLive")) {
-      System.gc(); System.gc()
-      val rt = Runtime.getRuntime
-      val live = rt.totalMemory() - rt.freeMemory()
-      System.err.println(s"bpe mergesLocal live set = ${live >> 20} MiB " +
-        s"(${vocab.length} words, ${pairFreq.size} live pairs, " +
-        s"heap entries ${heap.size})")
     }
     learned.toSeq
   }

@@ -391,42 +391,6 @@ object Graphs {
       .groupBy("node").agg(count(lit(1)).as("tri"))
   }
 
-  /** Wedge telemetry for the degree-ordered orientation: (wedge count
-    * Σ_u C(outdeg u, 2), max oriented outdegree). The wedge count IS the
-    * triangle join's intermediate cardinality, so this is the number the
-    * O(m^1.5) claim stands or falls on — a skew probe asserts the
-    * orientation caps it even when raw hub degrees are 10⁵ (the hub's
-    * edges orient INTO it, so its OUTdegree stays small). Shares the
-    * exact orientation arithmetic with [[triangleCounts]]. */
-  def wedgeStats(edgesIn: DataFrame, srcCol: String,
-      dstCol: String): (Long, Long) = {
-    val outdeg = orientedOutDegrees(edgesIn, srcCol, dstCol)
-    val r = outdeg.agg(
-      sum(expr("od * (od - 1) DIV 2")).as("wedges"),
-      max(col("od")).as("maxod")).head()
-    (if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  private def orientedOutDegrees(edgesIn: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val und = edgesIn
-      .select(least(col(srcCol), col(dstCol)).cast(LongType).as("a"),
-        greatest(col(srcCol), col(dstCol)).cast(LongType).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val ranked = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-    val fwd = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    ranked.select(when(fwd, col("a")).otherwise(col("b")).as("u"))
-      .groupBy("u").agg(count(lit(1)).as("od"))
-  }
-
   /** The gate's edge derivation: a "handoff" graph over the events
     * stream — within each (event_type, day) stream ordered by event_id,
     * an edge from each event's user to the next event's user. Windowed

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.core.{DumpManifest, TableManifest}
 
@@ -73,10 +73,25 @@ object Manifest {
     sb.result()
   }
 
-  def write(outDir: String, m: DumpManifest): java.nio.file.Path = {
+  /** Write `m` as `outDir`'s `metadata`, atomically: the text goes to a
+    * hidden sibling temp file that is then renamed over `metadata`, so a
+    * crash leaves either the previous manifest or the new one, never a
+    * truncated file for `--resume` to parse. */
+  def write(outDir: String, m: DumpManifest): Path = write(outDir, m, _ => ())
+
+  /** [[write]] with `staged` run on the written temp file before the
+    * rename: the seam a spec uses to fail between the two. */
+  private[graft] def write(outDir: String, m: DumpManifest,
+      staged: Path => Unit): Path = {
     val p = Paths.get(outDir, FileName)
     Files.createDirectories(p.getParent)
-    Files.write(p, render(m).getBytes(StandardCharsets.UTF_8))
+    val tmp = p.resolveSibling(s".$FileName.tmp")
+    try {
+      Files.write(tmp, render(m).getBytes(StandardCharsets.UTF_8))
+      staged(tmp)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
     p
   }
 

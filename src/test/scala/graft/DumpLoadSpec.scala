@@ -329,6 +329,29 @@ class DumpLoadSpec extends SparkTestBase {
     assert(Load.classify("metadata") === Load.Metadata)
   }
 
+  test("a manifest write that fails before its rename leaves the old metadata") {
+    val dir = Files.createTempDirectory("graft_manifest_").toString
+    val old = graft.core.DumpManifest("2026-08-12T10:00:00Z", "2026-08-12T10:05:00Z",
+      tables = Seq(graft.core.TableManifest("tpch.region", 5, Some("41"))))
+    val p = sources.Manifest.write(dir, old)
+    val before = Files.readAllBytes(p)
+    val next = old.copy(tables = old.tables :+ graft.core.TableManifest("tpch.nation", 25))
+    var staged: Option[java.nio.file.Path] = None
+    val e = intercept[RuntimeException](sources.Manifest.write(dir, next, { tmp =>
+      staged = Some(tmp)
+      assert(Files.readString(tmp).contains("[tpch.nation]"))
+      throw new RuntimeException("crash after the temp file")
+    }))
+    assert(e.getMessage === "crash after the temp file")
+    assert(staged.exists(_.getParent == p.getParent), "temp file is a sibling")
+    assert(Files.readAllBytes(p).sameElements(before), "metadata changed")
+    assert(sources.Manifest.read(dir) === Some(old))
+    assert(staged.forall(t => !Files.exists(t)), "temp file left behind")
+    // and a write that completes replaces it
+    sources.Manifest.write(dir, next)
+    assert(sources.Manifest.read(dir) === Some(next))
+  }
+
   test("file-type router: reference get_file_type edge semantics") {
     // metadata family (myloader_process_filename.c:119-148): header is
     // always global; bare `metadata` is partial only in stream mode;

@@ -37,6 +37,31 @@ class HarnessHonestySpec extends SparkTestBase {
       .contains("errors"))
   }
 
+  test("bench scale check: an unbounded cross join is an error, a listed one is timed") {
+    val cross: (SparkSession, String) => DataFrame =
+      (s, _) => s.range(3).crossJoin(s.range(3).toDF("id2"))
+    // with no broadcast side the cross join plans as a CartesianProduct
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val r = Bench.timeQuery(spark, sf, "q_cross", cross, reps = 1)
+      assert(r.swap.exists(_.contains("CartesianProduct")), r)
+      assert(Bench.boundedCrossJoins("q_tfidf"))
+      assert(Bench.timeQuery(spark, sf, "q_tfidf", cross, reps = 1).isRight)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("bench scale check: disk spill above max(shuffle, 64 MiB) is an error") {
+    def c(diskSpill: Long, shuffle: Long) =
+      Counters(1, 1, 1, 0L, shuffle, 0L, diskSpill, 0L, 1)
+    val bound = 64L << 20
+    assert(Bench.scaleCheck("q", None, c(bound, 0L)).isEmpty)
+    assert(Bench.scaleCheck("q", None, c(bound + 1, 0L)).exists(_.contains("spilled")))
+    assert(Bench.scaleCheck("q", None, c(3 * bound, 3 * bound)).isEmpty)
+    assert(Bench.scaleCheck("q", None, c(3 * bound + 1, 3 * bound)).isDefined)
+  }
+
   test("verify: a throwing query leaves a readable error marker, not a gap") {
     val out = Files.createTempDirectory("graft_honesty_").toString
     assert(Verify.dumpOne(spark, sf, out, "q_boom", boom).isDefined)

@@ -218,35 +218,9 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("no catalog query plans a cartesian product or nested-loop join") {
-    // whitelisted shapes are bounded by construction: batch ANN
-    // crossJoins a BROADCAST probe set (contractually small); tf-idf
-    // crossJoins the ONE-ROW corpus-size aggregate (O(n·1)); exact kNN
-    // is the all-pairs BASELINE by definition — its scale path is the
-    // cell-equi-joined q_knn_graph, which must pass this gate.
-    // q_knn_recall compares the LSH graph AGAINST the exact all-pairs
-    // baseline on the bounded 200-id slice — the baseline side is the
-    // same whitelisted shape as q_knn_exact.
-    // q_dedup_simhash_recall shares q_dedup_minhash_recall's bounded
-    // 500-doc brute-force ground-truth stage (the LSH path under test
-    // is the equi-join side); round 6's value-gated q_dedup_simhash
-    // embeds the same bounded truth stage to emit the recovered tier
-    // q_lm_score crossJoins the ONE-ROW training-token total (O(n·1)),
-    // the same bounded shape as q_tfidf's corpus-size aggregate
-    // q_bm25 crossJoins the ONE-ROW corpus-constants aggregate
-    // (N/avgdl/df) into the matched-docs scorer — O(n·1), and n there is
-    // already filtered to docs containing a query term; q_hybrid_rrf
-    // embeds the same bm25 stage (its fusion join is a ≤50-row equi-join)
-    // q_dsir / q_dsir_sample crossJoin the ONE-ROW feature totals
-    // (O(n·1), bm25's stats idiom); q_lm_buckets / q_curriculum /
-    // q_lm_store embed q_lm_score's one-row training-total crossJoin;
-    // q_bm25_index embeds q_bm25's one-row corpus-constants crossJoin
-    // (summed from the KB-sized stats table, not the corpus)
-    val whitelist = Set("q_ann_batch", "q_tfidf", "q_knn_exact",
-      "q_knn_recall", "q_dedup_minhash_recall",
-      "q_dedup_simhash_recall", "q_embed_recall", "q_dedup_simhash",
-      "q_lm_score", "q_bm25", "q_bm25_batch", "q_hybrid_rrf",
-      "q_dsir", "q_dsir_sample", "q_lm_buckets", "q_curriculum",
-      "q_lm_store", "q_bm25_index")
+    // the listed shapes are bounded by construction (their reasons are
+    // on Bench.boundedCrossJoins, which Bench's scale check also reads)
+    val whitelist = Bench.boundedCrossJoins
     val offenders = Queries.all.keys.toSeq.sorted
       .filterNot(whitelist)
       .flatMap { name =>
