@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one benchmark main: runs every catalog query against
@@ -226,38 +227,41 @@ object Bench {
       // compaction must cut the visible files ≥ 50× and bring the full
       // read under the accrued read, and 5 later appends must not undo it
       "scale_store_compaction" -> { (spark, _) =>
-        val dir = java.nio.file.Files.createTempDirectory("graft_bench_cmp").toString + "/s"
-        val batches = 1000
-        def batch(b: Int): DataFrame = spark.range(8).select(
-          (col("id") + b.toLong * 8L).as("doc_id"),
-          concat(lit("common alpha beta. shared gamma delta. tail "),
-            ((col("id") + b) % 13).cast("string"), lit(" words.")).as("text"))
-        def append(b: Int): Unit = operators.SentenceDedup.appendCounts(
-          batch(b), "text", "doc_id", dir, f"b$b%05d")
-        def read(): (Double, Long) = {
-          val t0 = System.nanoTime()
-          operators.SentenceDedup.storedCounts(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            operators.StoreCompaction.stats(spark, dir)._1)
-        }
-        operators.SentenceDedup.writeCounts(batch(0), "text", "doc_id", dir, "b00000")
-        (1 until batches).foreach(append)
-        val (readPre, filesPre) = read()
-        operators.SentenceDedup.compactCounts(spark, dir)
-        val (readPost, filesPost) = read()
-        (batches until batches + 5).foreach(append)
-        val (readAfter, filesAfter) = read()
-        System.err.println(f"[bench] scale_store_compaction: read $readPre%.2f s / " +
-          f"$filesPre files after $batches appends, $readPost%.2f s / $filesPost " +
-          f"compacted, $readAfter%.2f s / $filesAfter after 5 more appends")
-        require(filesPost * 50 <= filesPre,
-          s"compaction left $filesPost of $filesPre files")
-        require(readPost < readPre,
-          f"compacted read $readPost%.2f s not under accrued read $readPre%.2f s")
-        require(readAfter < readPre,
-          "post-compaction appends re-inflated the read cost")
-        spark.emptyDataFrame
+        val root = java.nio.file.Files.createTempDirectory("graft_bench_cmp")
+        val dir = s"$root/s"
+        try {
+          val batches = 1000
+          def batch(b: Int): DataFrame = spark.range(8).select(
+            (col("id") + b.toLong * 8L).as("doc_id"),
+            concat(lit("common alpha beta. shared gamma delta. tail "),
+              ((col("id") + b) % 13).cast("string"), lit(" words.")).as("text"))
+          def append(b: Int): Unit = operators.SentenceDedup.appendCounts(
+            batch(b), "text", "doc_id", dir, f"b$b%05d")
+          def read(): (Double, Long) = {
+            val t0 = System.nanoTime()
+            operators.SentenceDedup.storedCounts(spark, dir)
+              .write.format("noop").mode("overwrite").save()
+            ((System.nanoTime() - t0) / 1e9,
+              operators.StoreCompaction.stats(spark, dir)._1)
+          }
+          operators.SentenceDedup.writeCounts(batch(0), "text", "doc_id", dir, "b00000")
+          (1 until batches).foreach(append)
+          val (readPre, filesPre) = read()
+          operators.SentenceDedup.compactCounts(spark, dir)
+          val (readPost, filesPost) = read()
+          (batches until batches + 5).foreach(append)
+          val (readAfter, filesAfter) = read()
+          System.err.println(f"[bench] scale_store_compaction: read $readPre%.2f s / " +
+            f"$filesPre files after $batches appends, $readPost%.2f s / $filesPost " +
+            f"compacted, $readAfter%.2f s / $filesAfter after 5 more appends")
+          require(filesPost * 50 <= filesPre,
+            s"compaction left $filesPost of $filesPre files")
+          require(readPost < readPre,
+            f"compacted read $readPost%.2f s not under accrued read $readPre%.2f s")
+          require(readAfter < readPre,
+            "post-compaction appends re-inflated the read cost")
+          spark.emptyDataFrame
+        } finally JavaUtils.deleteRecursively(root.toFile)
       },
       // temperature sampling where one domain holds half of all docs
       "scale_temperature_sample_hot" -> { (spark, sfDir) =>
@@ -354,7 +358,16 @@ object Bench {
       case "0E-7" => "0"; case s => s
     }
 
+  /** Runs the bench with every scratch directory under one temp dir,
+    * deleted when the run ends. */
   def main(args: Array[String]): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bench")
+    try run(tmp) finally JavaUtils.deleteRecursively(tmp.toFile)
+  }
+
+  private def run(tmp: java.nio.file.Path): Unit = {
+    def tmpDir(prefix: String): String =
+      java.nio.file.Files.createTempDirectory(tmp, prefix).toString
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // calibration BEFORE any Spark work: the cleanest read of what CPU
     // this instance is giving a single thread right now
@@ -400,7 +413,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       // parquet writer/committer init (x_dump_parquet would otherwise
       // pay ~2s of one-time Hadoop committer + codec setup)
-      val wuDir = java.nio.file.Files.createTempDirectory("graft_warm").toString
+      val wuDir = tmpDir("warm")
       li.limit(1000).write.mode("overwrite").parquet(wuDir)
       spark.read.parquet(wuDir).write.format("noop").mode("overwrite").save()
       li.unpersist()
@@ -439,21 +452,17 @@ object Bench {
     // the reference's own workload: dump the fact table to SQL-INSERT
     // files, then load them back (parse + coerce) — single-node
     // throughput directly comparable to mydumper/myloader
-    val dumpDir = java.nio.file.Files.createTempDirectory("graft_bench").toString
+    val dumpDir = tmpDir("dump")
     val li = Tables.lineitem(spark, sfDir)
-    val csvDir = java.nio.file.Files.createTempDirectory("graft_bench_csv").toString
+    val csvDir = tmpDir("csv")
     // shared by x_stream_land (cold: checkpoint + startup) and
     // x_stream_steady (marginal batch through the same checkpoint)
-    val streamLanding = java.nio.file.Files
-      .createTempDirectory("graft_bench_land").toString
-    val streamCkpt = java.nio.file.Files
-      .createTempDirectory("graft_bench_ckpt").toString
+    val streamLanding = tmpDir("land")
+    val streamCkpt = tmpDir("ckpt")
     // shared by x_follow_shards' passes: pass 1 pays checkpoint
     // creation, later passes price the marginal announce→drain cycle
-    val shardEvDir = java.nio.file.Files
-      .createTempDirectory("graft_bench_shev").toString
-    val shardCkpt = java.nio.file.Files
-      .createTempDirectory("graft_bench_shck").toString
+    val shardEvDir = tmpDir("shev")
+    val shardCkpt = tmpDir("shck")
     val pipeline = Seq[(String, () => Unit)](
       "x_dump_sqlinsert" -> { () =>
         // checksum=false like the CSV leg: mydumper's default dump does

@@ -568,8 +568,9 @@ object Dump {
     * starts on table 1 while table 2 is still dumping): the run announces
     * its artifacts there as [[graft.streaming.LandingStream.announceFile]]
     * events — `dbschema` once the schema-create is written, each table's
-    * `data` and `schema` files then its `end` the moment that table
-    * closes, and `done` with the table count after the manifest. Event
+    * `data` and `schema` files then its `end` (carrying its manifest
+    * entry) the moment that table closes, and `done` with the table
+    * count after the manifest. Event
     * names sort by announce time, so each table's events stay in order
     * on the pool. */
   def run(spark: SparkSession, tables: Seq[(String, DataFrame, Boolean)],
@@ -607,8 +608,9 @@ object Dump {
     manifest
   }
 
-  /** Announce one closed table: its data files in name order, its schema
-    * files, then `end`. Events carry the file stem (surrogate db and
+  /** Announce one closed table: its data in name order (chunk files, a
+    * LOAD_DATA table's `.dat` files, or a lake table's directory), its
+    * schema files, then `end` with its manifest entry. Events carry the file stem (surrogate db and
     * table stems included), which is what the files are named after. */
   private def announceTable(events: String, cfg: Config, r: TableResult): Unit = {
     val stem = s"${cfg.stems.stem(cfg.db)}.${r.stem}"
@@ -617,12 +619,24 @@ object Dump {
     // Load.discover does
     def asData(n: String): String = cfg.execFilter.map(_.ext)
       .filter(n.endsWith).fold(n)(e => n.dropRight(e.length) + ".sql")
-    names.filter(n => n.startsWith(s"$stem.") && Load.classify(asData(n)) == Load.Data)
-      .foreach(announceFile(events, "data", stem, _))
+    val chunks = names.filter(_.startsWith(s"$stem."))
+    // a LOAD_DATA table's rows are in its .dat chunks; its .sql
+    // companions hold only the LOAD DATA statements
+    val dats = chunks.filter(Load.classify(_) == Load.LoadData)
+    val data = if (dats.nonEmpty) dats
+      else chunks.filter(n => Load.classify(asData(n)) == Load.Data)
+    // a lake-format table is the directory named after its stem
+    (names.filter(_ == stem) ++ data).foreach(announceFile(events, "data", stem, _))
     names.filter(_.startsWith(s"$stem-schema"))
       .foreach(announceFile(events, "schema", stem, _))
-    announceFile(events, "end", stem, "-")
+    announceFile(events, "end", stem, sources.Manifest.encodeEntry(manifestEntry(r)))
   }
+
+  /** A table's manifest entry: what `metadata` records for it and what
+    * its stream `end` event carries. */
+  private def manifestEntry(r: TableResult): TableManifest =
+    TableManifest(r.table, r.rows, Some(r.checksum.toString),
+      filename = Some(r.stem).filter(_ != r.table), sparkSchema = r.schemaJson)
 
   /** Build the run's manifest and persist it as the dump dir's `metadata`
     * file (reference mydumper_start_dump.c:1161-1182) so the dump is
@@ -633,10 +647,7 @@ object Dump {
       startedAt = startedAt,
       finishedAt = java.time.Instant.now().toString,
       quoteChar = quoteOf(cfg),
-      tables = results.map(r =>
-        TableManifest(r.table, r.rows, Some(r.checksum.toString),
-          filename = Some(r.stem).filter(_ != r.table),
-          sparkSchema = r.schemaJson)))
+      tables = results.map(manifestEntry))
     sources.Manifest.write(cfg.outDir, manifest)
     manifest
   }

@@ -2,14 +2,15 @@ package graft
 
 import graft.core.TableManifest
 import graft.functions.Checksum
-import graft.load.DependencyScheduler
-import graft.load.DependencyScheduler.TablePlan
-import graft.sources.{CsvDump, LoadDataReader, LoadDataStatement, LoadDataWriter, SqlInsertReader}
+import graft.load.StreamingLoader
+import graft.sources.{CsvDump, LoadDataReader, LoadDataStatement, LoadDataWriter, Manifest, SqlInsertReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, row_number}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import scala.concurrent.ExecutionContext
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** The load pipeline (SURVEY §3.2): discovery → file-type routing (S11)
   * → dependency-ordered restore (L1) → checksum verification (L5).
@@ -18,9 +19,12 @@ import scala.concurrent.ExecutionContext
   * sink (`df.write.jdbc`, S12 semantics) — the scheduler and verification
   * are identical. Discovery classifies files by the dump naming scheme
   * (`db.table.NNNNN[.NNNNN].sql[.gz]`). Lake-format dumps (`--format
-  * parquet|orc|jsonl`) are sources too: a table directory read in its
-  * own format under the manifest's recorded dump-time schema, restored
-  * and verified on the same write as chunk-file tables.
+  * parquet|orc|jsonl|csv`) are sources too: a table directory read in its
+  * own format under the manifest's recorded dump-time schema (csv: its
+  * `-schema.sql` DDL), restored and verified on the same write as
+  * chunk-file tables. A directory restore finds its tables by listing
+  * the dump dir, a streamed one from a `dump --stream`'s events; both
+  * restore each table with the same job ([[run]]).
   */
 object Load {
 
@@ -160,8 +164,10 @@ object Load {
 
   /** Phase rank for [[classify]] output, mirroring the reference restore
     * order (tablespaces → databases → table schemas → data →
-    * triggers-after-their-table → views/sequences → post). Feeds
-    * [[graft.load.DependencyScheduler.RestorePlan]]. */
+    * triggers-after-their-table → views/sequences → post): the order a
+    * live-server replay follows. The lake restore ([[run]]) runs only
+    * the schema and data phases, per table on
+    * [[graft.load.StreamingLoader]]. */
   def phaseOf(t: FileType): Int = t match {
     case SchemaTablespace              => 0 // CREATE TABLESPACE precedes any table
     case SchemaCreate                  => 1
@@ -215,70 +221,95 @@ object Load {
   /** Every table a dump directory restores, with the expected checksum
     * its manifest records — the restore needs NOTHING but the directory,
     * exactly the reference's contract (myloader consumes only dump
-    * files).
-    *  - Chunk-file tables take their schemas from the
-    *    `db.table-schema.sql` files ([[graft.sources.DdlEmitter]]
-    *    inverse); tables without one are skipped. `schemaOf` replaces the
-    *    schema files with a catalog keyed by bare table name, for every
-    *    stem with data chunks (`dataExt` as in [[discover]]).
-    *  - Lake tables are the directories named after a stem with no chunk
-    *    files. The format is sniffed from the leaf data files and the
-    *    schema is the manifest's recorded dump-time `sparkSchema`. */
+    * files). Each stem resolves as [[sourceFor]] says: the stems with a
+    * `db.table-schema.sql` file (or, with `schemaOf`, with data chunks;
+    * `dataExt` as in [[discover]]) and the lake table directories. */
   def sourcesFromDir(dir: String, resumeEnabled: Boolean = false,
       schemaOf: Option[String => StructType] = None,
       dataExt: Option[String] = None): Seq[TableSource] = {
+    val names = listNames(dir)
     val entryOf = manifestEntry(dir)
-    def source(stem: String, schema: StructType): TableSource = {
-      val e = entryOf(stem)
-      TableSource(stem, schema, e.flatMap(_.dataChecksum).map(_.toLong),
-        realTable = e.filter(_.filename.isDefined).map(_.table))
-    }
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-    val lakeDirs = files.filter(d => d.isDirectory && d.getName.contains(".") &&
-      !files.exists(f => f.isFile && f.getName.startsWith(d.getName + ".")))
     val chunked = schemaOf match {
-      case Some(schemaOfTable) => discover(dir, dataExt, resumeEnabled).keys.toSeq
-        .map(stem => source(stem, schemaOfTable(stem.split("\\.", 2).last)))
-      case None =>
-        // a stem with a -schema-view.sql sibling is a VIEW: its -schema.sql
-        // is the dependency placeholder table (mydumper_jobs.c:472-556) and
-        // carries no data chunks — the view phase restores it, not the data
-        // phase (views-as-tables dumps have no sibling and DO load here)
-        val viewStems: Set[String] = files.map(_.getName)
-          .filter(n => classify(n, resumeEnabled = resumeEnabled) == SchemaView)
-          .map(_.replaceFirst("-schema-view\\.sql(\\.gz|\\.zst)?$", "")).toSet
-        files.filter(f =>
-            classify(f.getName, resumeEnabled = resumeEnabled) == Schema).toSeq
-          .map(f => f -> f.getName.replaceFirst("-schema\\.sql(\\.gz|\\.zst)?$", ""))
-          .filterNot { case (_, stem) => viewStems.contains(stem) }
-          .map { case (f, stem) =>
-            val schema = graft.sources.DdlEmitter.toStructType(readSmallText(f.toPath))
-            // an unparseable schema file must stop the restore, not feed an
-            // empty StructType downstream (zero columns reads zero data and
-            // "succeeds")
-            if (schema.isEmpty) throw new IllegalStateException(
-              s"schema file ${f.getName} parsed to zero columns — corrupt or not DDL")
-            source(stem, schema)
-          }
+      case Some(_) => discover(dir, dataExt, resumeEnabled).keys.toSeq
+      case None => names.filter(classify(_, resumeEnabled = resumeEnabled) == Schema).toSeq
+        .map(_.replaceFirst("-schema\\.sql(\\.gz|\\.zst)?$", ""))
     }
-    val lake = lakeDirs.toSeq.flatMap { d =>
+    val lake = names.filter(isLakeDir(dir, names, _))
+    (chunked ++ lake).distinct.sorted
+      .flatMap(stem => sourceFor(dir, names, stem, entryOf(stem), schemaOf, dataExt))
+  }
+
+  private def listNames(dir: String): Array[String] =
+    Option(new java.io.File(dir).list).getOrElse(Array.empty[String])
+
+  /** A directory named after a stem with no chunk files: a lake table. */
+  private def isLakeDir(dir: String, names: Array[String], stem: String): Boolean =
+    stem.contains(".") && new java.io.File(dir, stem).isDirectory &&
+      !names.exists(n => n.startsWith(stem + ".") && new java.io.File(dir, n).isFile)
+
+  /** The table one stem of `dir` (whose file names are `names`)
+    * restores, with `entry` its manifest entry; None when the stem has
+    * nothing to restore.
+    *  - A lake table is read in the format sniffed from its leaf data
+    *    files, under the manifest's recorded dump-time `sparkSchema`; a
+    *    Spark csv table, under its `-schema.sql` DDL.
+    *  - A chunk-file table takes its schema from its
+    *    `db.table-schema.sql` file ([[graft.sources.DdlEmitter]]
+    *    inverse), unless the stem is a view; `schemaOf` replaces the
+    *    schema files with a catalog keyed by bare table name, for a stem
+    *    with data chunks. */
+  private def sourceFor(dir: String, names: Array[String], stem: String,
+      entry: Option[TableManifest], schemaOf: Option[String => StructType],
+      dataExt: Option[String]): Option[TableSource] = {
+    def source(schema: StructType) = TableSource(stem, schema,
+      entry.flatMap(_.dataChecksum).map(_.toLong),
+      realTable = entry.filter(_.filename.isDefined).map(_.table))
+    def named(suffix: String): Option[String] =
+      Seq("", ".gz", ".zst").map(stem + suffix + _).find(names.contains)
+    def ddl(file: String): StructType = {
+      val schema = graft.sources.DdlEmitter.toStructType(
+        readSmallText(java.nio.file.Paths.get(dir, file)))
+      // an unparseable schema file must stop the restore, not feed an
+      // empty StructType downstream (zero columns reads zero data and
+      // "succeeds")
+      if (schema.isEmpty) throw new IllegalStateException(
+        s"schema file $file parsed to zero columns — corrupt or not DDL")
+      schema
+    }
+    if (isLakeDir(dir, names, stem)) {
+      val d = new java.io.File(dir, stem)
       val format = lakeFormatOf(d)
-      if (format.isEmpty) System.err.println(
-        s"[graft] WARN ${d.getName} holds no parquet, orc or json data files; not restored")
-      format.map { fmt =>
-        val recorded = entryOf(d.getName).flatMap(_.sparkSchema)
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
+      val schema = format match {
+        case Some("csv") => named("-schema.sql").map(ddl)
+        case Some(_) => Some(entry.flatMap(_.sparkSchema)
+          .map(DataType.fromJson(_).asInstanceOf[StructType]).getOrElse(new StructType()))
+        case None => None
+      }
+      if (schema.isEmpty) System.err.println(s"[graft] WARN $stem holds no " +
+        "parquet, orc or json data files, nor csv files with a -schema.sql; not restored")
+      schema.map { sch =>
         // JSON and partitioned layouts read back in another shape than
         // they dumped, which only the recorded schema restores: without
         // it (an older dump) their checksum cannot verify
-        val trusted = recorded.isDefined || (fmt != "json" &&
+        val trusted = entry.exists(_.sparkSchema.isDefined) || (!format.contains("json") &&
           !d.listFiles.exists(k => k.isDirectory && k.getName.contains("=")))
-        val s = source(d.getName, recorded.getOrElse(new StructType()))
-        s.copy(expectedChecksum = s.expectedChecksum.filter(_ => trusted),
-          lakeFormat = Some(fmt))
+        val s = source(sch)
+        s.copy(expectedChecksum = s.expectedChecksum.filter(_ => trusted), lakeFormat = format)
       }
+    } else schemaOf match {
+      case Some(schemaOfTable) =>
+        val dataName: String => String = n =>
+          dataExt.filter(n.endsWith).fold(n)(e => n.dropRight(e.length) + ".sql")
+        if (names.exists(n => n.startsWith(stem + ".") && classify(dataName(n)) == Data))
+          Some(source(schemaOfTable(stem.split("\\.", 2).last)))
+        else None
+      // a stem with a -schema-view.sql sibling is a VIEW: its -schema.sql
+      // is the dependency placeholder table (mydumper_jobs.c:472-556) and
+      // carries no data chunks — the view phase restores it, not the data
+      // phase (views-as-tables dumps have no sibling and DO load here)
+      case None if named("-schema-view.sql").isDefined => None
+      case None => named("-schema.sql").map(f => source(ddl(f)))
     }
-    (chunked.filterNot(s => lakeDirs.exists(_.getName == s.table)) ++ lake).sortBy(_.table)
   }
 
   /** The manifest entry a file stem (`db.stem`) restores against, keyed
@@ -298,6 +329,7 @@ object Load {
     val kids = Option(d.listFiles).getOrElse(Array.empty[java.io.File])
     kids.collectFirst {
       case k if k.isFile && k.getName.matches(".*\\.json(\\.[a-z0-9]+)?$") => "json"
+      case k if k.isFile && k.getName.matches(".*\\.csv(\\.[a-z0-9]+)?$") => "csv"
       case k if k.isFile && k.getName.endsWith(".parquet") => "parquet"
       case k if k.isFile && k.getName.endsWith(".orc") => "orc"
     }.orElse(if (depth <= 0) None
@@ -343,6 +375,8 @@ object Load {
     * files read. */
   def read(spark: SparkSession, dumpDir: String, src: TableSource,
       decode: Option[(Seq[String], String)] = None): DataFrame = src.lakeFormat match {
+    case Some("csv") =>
+      CsvDump.reader(spark).schema(src.schema).csv(s"$dumpDir/${src.table}")
     case Some(fmt) if src.schema.isEmpty =>
       spark.read.format(fmt).load(s"$dumpDir/${src.table}")
     case Some(fmt) =>
@@ -407,13 +441,40 @@ object Load {
       }
   }
 
-  /** Restore dumped tables through the dependency scheduler, verifying
-    * checksums against the manifest per [[ChecksumMode]]. Each table is
-    * one pass, one task per chunk file; its row count and CRC32-XOR are
-    * observed on the restore's own write, so verification happens AFTER
-    * the write, as in myloader. `decode = Some((cmd, ext))` restores
-    * exec-per-thread dumps: data files carrying `ext` stream through the
-    * inverse child command ([[graft.sources.SqlInsertReader.readFiltered]]).
+  /** Where a streamed restore (`load --stream`) reads a `dump --stream`'s
+    * events. `follow` runs beside the dump: the events dir must be fresh,
+    * and the restore ends once the producer's `done` event and every
+    * `end` it counted are in, or fails after `followTimeoutMs` (0 =
+    * never) without an event. Without it the restore catches up on the
+    * events already there. `database` gets each announced database
+    * schema-create file. */
+  final case class Events(dir: String, follow: Boolean = false,
+      followTimeoutMs: Long = 600000L,
+      database: java.nio.file.Path => Unit = _ => ())
+
+  /** Restore dumped tables, verifying checksums against the manifest per
+    * [[ChecksumMode]]. Each table is one pass, one task per chunk file;
+    * its row count and CRC32-XOR are observed on the restore's own write,
+    * so verification happens AFTER the write, as in myloader.
+    * `decode = Some((cmd, ext))` restores exec-per-thread dumps: data
+    * files carrying `ext` stream through the inverse child command
+    * ([[graft.sources.SqlInsertReader.readFiltered]]).
+    *
+    * Without `events` the tables are `sources`, all offered at once.
+    * With `events` (myloader's stream mode) the tables are the ones the
+    * dump announces, each restored when its `end` event arrives: the dump
+    * announces a table only after its last file closed, and the event
+    * carries the manifest entry, so the table restores exactly as
+    * [[sourcesFromDir]] would find it (schemas from the dump's own
+    * files). Table N's restore overlaps table N+1's dump. `admit` narrows
+    * or drops each table before it restores (`--source-db`,
+    * `--omit-from-file`, `--resume`). Both modes run on
+    * [[graft.load.StreamingLoader]].
+    *
+    * Manifest guard: a table the manifest lists (streamed: that the dump
+    * announced) but no source restores — a format the loader cannot
+    * read — fails the restore by name under [[ChecksumFail]] and is
+    * logged under [[ChecksumWarn]].
     *
     * `writeTarget` is the restore sink, e.g. `df.write.parquet(...)`.
     * Contract: it runs exactly ONE action, which writes the frame it is
@@ -423,37 +484,130 @@ object Load {
     * would apply it again). One that runs no action fails the restore. */
   def run(spark: SparkSession, dumpDir: String, sources: Seq[TableSource],
       checksumMode: ChecksumMode = ChecksumWarn,
-      decode: Option[(Seq[String], String)] = None)(
+      decode: Option[(Seq[String], String)] = None,
+      events: Option[Events] = None,
+      admit: TableSource => Option[TableSource] = Some(_))(
       writeTarget: (String, DataFrame) => Unit): Seq[Result] = {
     implicit val ec: ExecutionContext = ExecutionContext.global
+    // one job per table: lake targets take their schema from the written
+    // files, so CREATE is a no-op
+    val loader = new StreamingLoader(maxThreadsPerTable = 1)
     val results = new java.util.concurrent.ConcurrentHashMap[String, Result]()
-    val plans = sources.map { src =>
-      TablePlan(
-        name = src.table,
-        createSchema = () => (), // lake targets: schema = parquet metadata
-        dataJobs = Seq(() => {
-          val df = read(spark, dumpDir, src, decode)
-          // rows and checksum ride the write (skip mode observes rows
-          // only): a mismatch surfaces after it, as in myloader.c:684-715
-          val verify = checksumMode != ChecksumSkip
-          val (rows, got) = Checksum.observed(df, verify,
-            s"restore of ${src.table}")(writeTarget(src.table, _))
-          val ok = if (!verify) None else {
-            val matches = src.expectedChecksum.map(_ == got)
-            if (matches.contains(false)) {
-              val msg = s"checksum mismatch for ${src.table}: " +
-                s"expected ${src.expectedChecksum.get}, got $got"
-              if (checksumMode == ChecksumFail)
-                throw new IllegalStateException(msg)
-              else System.err.println(s"[graft] WARN $msg")
-            }
-            matches
+    val restores = scala.collection.mutable.Buffer.empty[(String, Future[Unit])]
+    def restore(src: TableSource): Unit = admit(src).foreach { s =>
+      loader.offerSchema(s.table, () => ())
+      loader.offerData(s.table, () => {
+        val df = read(spark, dumpDir, s, decode)
+        // rows and checksum ride the write (skip mode observes rows
+        // only): a mismatch surfaces after it, as in myloader.c:684-715
+        val verify = checksumMode != ChecksumSkip
+        val (rows, got) = Checksum.observed(df, verify,
+          s"restore of ${s.table}")(writeTarget(s.table, _))
+        val ok = if (!verify) None else {
+          val matches = s.expectedChecksum.map(_ == got)
+          if (matches.contains(false)) {
+            val msg = s"checksum mismatch for ${s.table}: " +
+              s"expected ${s.expectedChecksum.get}, got $got"
+            if (checksumMode == ChecksumFail) throw new IllegalStateException(msg)
+            else System.err.println(s"[graft] WARN $msg")
           }
-          results.put(src.table, Result(src.table, rows, ok))
-        }))
+          matches
+        }
+        results.put(s.table, Result(s.table, rows, ok))
+      })
+      restores.synchronized { restores += s.table -> loader.finish(s.table) }
     }
-    DependencyScheduler.run(plans)
-    sources.map(s => results.get(s.table))
+    val unrestored: Seq[String] = events match {
+      case None =>
+        sources.foreach(restore)
+        val entryOf = manifestEntry(dumpDir)
+        val found = sources.flatMap(s => entryOf(s.table)).toSet
+        Manifest.read(dumpDir).toSeq.flatMap(_.tables).filterNot(found).map(_.table)
+      case Some(ev) =>
+        val missed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        consume(spark, dumpDir, ev,
+          () => restores.synchronized(restores.exists(_._2.value.exists(_.isFailure)))) {
+          (stem, entry) =>
+            val e = Manifest.decodeEntry(entry).orElse(manifestEntry(dumpDir)(stem))
+            sourceFor(dumpDir, listNames(dumpDir), stem, e, None, decode.map(_._2))
+              .fold[Unit](missed.add(stem))(restore)
+        }
+        missed.asScala.toSeq
+    }
+    val restored = restores.synchronized(restores.toSeq).map { case (t, f) =>
+      Await.result(f, Duration.Inf)
+      results.get(t)
+    }
+    if (checksumMode == ChecksumFail && unrestored.nonEmpty) throw new IllegalStateException(
+      s"no source restored manifest table(s) ${unrestored.mkString(", ")}")
+    if (checksumMode == ChecksumWarn) unrestored.foreach(t =>
+      System.err.println(s"[graft] WARN no source restored manifest table $t"))
+    restored
+  }
+
+  /** Consume `ev.dir`'s file events (a `dump --stream`'s announcements),
+    * calling `onEnd(stem, entry)` for each table's `end` event. Catch-up
+    * mode drains the events already there; follow mode polls until the
+    * producer's `done` count of `end`s is in, `failed()` turns true, or
+    * the idle timeout fails it. The checkpoint dir is deleted once the
+    * query stops. */
+  private def consume(spark: SparkSession, dumpDir: String, ev: Events,
+      failed: () => Boolean)(onEnd: (String, String) => Unit): Unit = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    // in --follow mode the loader may start BEFORE the dump created the
+    // events dir; readStream.text refuses a missing path
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ev.dir))
+    // --follow replays EVERY pre-existing event through the fresh
+    // checkpoint: a dir left by a completed run would satisfy the stop
+    // condition before the new dump announces anything, and a dir left
+    // by a CRASHED run (data/end events, no done) would re-apply old
+    // tables and inflate the end count — so follow mode requires a dir
+    // with no ev_* files at all and fails loudly otherwise
+    if (ev.follow) require(!listNames(ev.dir).exists(n => n.startsWith("ev_") &&
+        new java.io.File(ev.dir, n).isFile),
+      s"--follow needs a FRESH events dir: ${ev.dir} already " +
+        "contains ev_* events from a previous run (their replay would " +
+        "re-apply stale data or stop this load before the new dump " +
+        "announces its tables)")
+    val ends = new AtomicInteger(0)
+    val expected = new AtomicInteger(-1)
+    val lastEventAt = new AtomicLong(System.currentTimeMillis())
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_").toFile
+    try {
+      val q = graft.streaming.LandingStream.consumeFileEvents(spark, ev.dir,
+        ckpt.toString, follow = ev.follow) { (kind, stem, path) =>
+        lastEventAt.set(System.currentTimeMillis())
+        kind match {
+          case "end" => onEnd(stem, path); ends.incrementAndGet(); ()
+          case "dbschema" => ev.database(java.nio.file.Paths.get(dumpDir, path))
+          // terminal producer event: path carries the table count; a
+          // malformed line must not kill the stream mid-restore
+          case "done" => path.trim.toIntOption match {
+            case Some(n) => expected.set(n)
+            case None => System.err.println(s"[graft] malformed done event payload: '$path'")
+          }
+          case "data" | "schema" => () // the table restores at its `end`
+          case other => System.err.println(s"[graft] unknown stream event kind: $other")
+        }
+      }
+      if (ev.follow) {
+        // the stream never runs dry on its own: stop once the producer
+        // said how many tables there are AND that many `end` events are
+        // handled (handlers run inside the batch), or a restore failed.
+        // A producer that dies before `done` would spin forever, so an
+        // idle timeout since the last event turns it into a failure.
+        def allIn = expected.get() >= 0 && ends.get() >= expected.get()
+        def idle = ev.followTimeoutMs > 0 &&
+          System.currentTimeMillis() - lastEventAt.get() > ev.followTimeoutMs
+        while (q.isActive && !allIn && !idle && !failed()) Thread.sleep(200)
+        if (q.isActive) q.stop()
+        require(allIn || failed() || !idle,
+          s"--follow saw no events for ${ev.followTimeoutMs / 1000}s and no " +
+            "terminal done event — the producer likely died mid-dump; " +
+            "restored tables may be partial (tune with --follow-timeout SECONDS)")
+      }
+      q.awaitTermination()
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(ckpt)
   }
 
   /** Row-level merge of an incremental dump into a base snapshot (the

@@ -43,14 +43,19 @@ import org.apache.spark.sql.SparkSession
   *   graft.cli.Main load -d /tmp/out --target /tmp/restored [--checksum fail]
   *     [-s/--source-db DB] [-B/--database NEWDB]
   *     [--stream EVENTSDIR [--follow] [--follow-timeout SECONDS]]
-  *      (--follow = run concurrently with `dump --stream`, requires a
-  *      fresh events dir; without it the restore is a catch-up over the
-  *      already-announced events. --follow-timeout: fail if no event
-  *      arrives for this long before the producer's done event —
-  *      default 600, 0 disables)
+  *      (restore each table a `dump --stream` announces when its `end`
+  *      event arrives, with the same per-table job, checksum check and
+  *      `restored` line as a directory restore; --checksum, -s, -B, -O,
+  *      --purge-mode and --exec-per-thread apply unchanged, schemas come
+  *      from the dump's own files. --follow = run concurrently with
+  *      `dump --stream`, requires a fresh events dir; without it the
+  *      restore is a catch-up over the already-announced events.
+  *      --follow-timeout: fail if no event arrives for this long before
+  *      the producer's done event — default 600, 0 disables)
   *     [--exec-per-thread "gzip -dc" --exec-per-thread-extension .sql.gzx]
   *     [--resume]   (process only the files the dump dir's resume file
-  *      lists, appending to the prior partial restore)
+  *      lists, appending to the prior partial restore; refused with
+  *      --stream)
   *     [-O/--omit-from-file F] [--purge-mode FAIL|NONE|DROP|TRUNCATE|DELETE]
   */
 object Main {
@@ -595,7 +600,6 @@ object Main {
         o.getOrElse("exec-per-thread-extension", sys.error(
           "--exec-per-thread-extension must be set with --exec-per-thread")))
     }
-    if (o.contains("stream")) { runStreamLoad(spark, o, dir, target, decode); return }
     // --resume (myloader.c:549-557): the dump dir's `resume` file lists
     // the files a crashed prior run left unprocessed; with the flag we
     // process ONLY those (myloader_directory.c:83-113), appending to
@@ -603,6 +607,21 @@ object Main {
     // flag is fatal in Load.classify, and the flag without the file is
     // fatal here — both exactly the reference's m_critical pair.
     val resumeEnabled = o.contains("resume")
+    // --stream EVENTSDIR: restore each table a `dump --stream` announces
+    // when its `end` event arrives; the database schema-create files it
+    // announces are carried beside the restored tables
+    val events = o.get("stream").map { ev =>
+      require(!resumeEnabled, "--resume does not apply to load --stream: " +
+        "a streamed restore restores each announced table whole")
+      val e = Load.Events(ev, follow = o.contains("follow"), database = { f =>
+        if (java.nio.file.Files.exists(f)) {
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(target))
+          java.nio.file.Files.copy(f, java.nio.file.Paths.get(target, f.getFileName.toString),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+      })
+      o.get("follow-timeout").fold(e)(t => e.copy(followTimeoutMs = t.toLong * 1000L))
+    }
     val resumeList: Option[Set[String]] =
       if (!resumeEnabled) None
       else {
@@ -610,45 +629,47 @@ object Main {
         require(rf.exists, "Resume file not found") // myloader.c:555
         Some(readListFile(rf.getPath).filter(_.length > 2)) // :107 len guard
       }
-    val groups = Load.discover(dir, decode.map(_._2), resumeEnabled)
-    // schemas come from the dump's own db.table-schema.sql files (the
-    // documented default usage) or, with --source-dir, from the source
-    // tables; lake-format tables carry theirs in the manifest
-    val sources = Load.sourcesFromDir(dir, resumeEnabled,
-      schemaOf = o.get("source-dir").map(sd => t => Tables.t(spark, sd, t).schema),
-      dataExt = decode.map(_._2))
-    // silently restoring ZERO tables here was a bug, so data without a
-    // schema fails loudly instead of exiting 0
-    require(sources.nonEmpty || groups.isEmpty,
-      s"dump dir $dir has data files but no schema source — " +
-        "add --source-dir or ensure *-schema.sql files are present")
-    // a lake dump has no chunk files for a resume list to name —
-    // honoring the flag would silently re-restore every table in
-    // full (append mode) against the listed-files-only contract, so
-    // refuse loudly like the reference's m_critical on a bad resume
-    require(!resumeEnabled || sources.forall(_.lakeFormat.isEmpty),
-      "--resume is not applicable to lake-format (parquet/orc/jsonl) dumps" +
-        " — their restores are whole-directory, not chunk-file, units")
+    // a directory restore lists its tables up front: schemas come from
+    // the dump's own db.table-schema.sql files (the documented default
+    // usage) or, with --source-dir, from the source tables; lake-format
+    // tables carry theirs in the manifest
+    val sources = if (events.isDefined) Nil else {
+      val groups = Load.discover(dir, decode.map(_._2), resumeEnabled)
+      val found = Load.sourcesFromDir(dir, resumeEnabled,
+        schemaOf = o.get("source-dir").map(sd => t => Tables.t(spark, sd, t).schema),
+        dataExt = decode.map(_._2))
+      // silently restoring ZERO tables here was a bug, so data without a
+      // schema fails loudly instead of exiting 0
+      require(found.nonEmpty || groups.isEmpty,
+        s"dump dir $dir has data files but no schema source — " +
+          "add --source-dir or ensure *-schema.sql files are present")
+      // a lake dump has no chunk files for a resume list to name —
+      // honoring the flag would silently re-restore every table in
+      // full (append mode) against the listed-files-only contract, so
+      // refuse loudly like the reference's m_critical on a bad resume
+      require(!resumeEnabled || found.forall(_.lakeFormat.isEmpty),
+        "--resume is not applicable to lake-format (parquet/orc/jsonl) dumps" +
+          " — their restores are whole-directory, not chunk-file, units")
+      found
+    }
     // --source-db / -s (myloader_process_filename.c:155): restore only
     // tables whose dump db matches. --omit-from-file applies to the load
     // side too (the reference's common_filter_entries is shared by both
     // binaries, common_options.c:221-228): skip by db.table, bare db, or
-    // bare table, at the filename level like myloader's eval_table
-    val loadSkip: Set[String] = o.get("omit-from-file").map(readListFile)
-      .getOrElse(Set.empty)
-    val admitted1 = sources.filter { s =>
-      val (sdb, bare) = (s.table.split("\\.", 2).head, s.table.split("\\.", 2).last)
-      o.get("source-db").forall(_ == sdb) &&
-        !(loadSkip.contains(sdb) || loadSkip.contains(s.table) || loadSkip.contains(bare))
-    }
+    // bare table, at the filename level like myloader's eval_table.
     // --resume: only stems with at least one LISTED data chunk restore,
     // and each restores exactly its listed subset
-    val admitted = resumeList match {
-      case Some(listed) => admitted1.flatMap { s =>
+    val loadSkip: Set[String] = o.get("omit-from-file").map(readListFile)
+      .getOrElse(Set.empty)
+    val admit: Load.TableSource => Option[Load.TableSource] = { s =>
+      val (sdb, bare) = (s.table.split("\\.", 2).head, s.table.split("\\.", 2).last)
+      val admitted = o.get("source-db").forall(_ == sdb) &&
+        !(loadSkip.contains(sdb) || loadSkip.contains(s.table) || loadSkip.contains(bare))
+      if (!admitted) None
+      else resumeList.fold(Option(s)) { listed =>
         val mine = listed.filter(_.startsWith(s.table + ".")).toSeq.sorted
         if (mine.isEmpty) None else Some(s.copy(onlyFiles = Some(mine)))
       }
-      case None => admitted1
     }
     // --database / -B on load: restore INTO this db name (the
     // reference's db-remap) — target paths swap the stem's db prefix
@@ -671,8 +692,8 @@ object Main {
         case Some(other) => throw new IllegalArgumentException(
           s"--purge-mode accepts FAIL, NONE, DROP, TRUNCATE, DELETE — got '$other'")
       }
-    val results = Load.run(spark, dir, admitted,
-      if (resumeEnabled) Load.ChecksumSkip else checksumMode, decode) {
+    val results = Load.run(spark, dir, sources,
+      if (resumeEnabled) Load.ChecksumSkip else checksumMode, decode, events, admit) {
       (stem, df) =>
         df.write.mode(writeMode).parquet(s"$target/${remap(stem)}")
     }
@@ -682,7 +703,7 @@ object Main {
     // same shape as the reference's post-load server-side CHECKSUM
     val postVerified: Map[String, Boolean] =
       if (!resumeEnabled || checksumMode == Load.ChecksumSkip) Map.empty
-      else admitted.flatMap { s =>
+      else sources.flatMap(admit).flatMap { s =>
         s.expectedChecksum.map { c =>
           val back = spark.read.parquet(s"$target/${remap(s.table)}")
           val ok = graft.functions.Checksum.rowsAndChecksum(back)._2 == c
@@ -694,135 +715,6 @@ object Main {
     results.foreach { r =>
       val ok = postVerified.get(r.table).orElse(r.checksumOk)
       log(o, s"[graft] restored ${r.table}: ${r.rows} rows, checksum ${ok.map(if (_) "ok" else "MISMATCH").getOrElse("unverified")}")
-    }
-  }
-
-  /** `load --stream EVENTSDIR`: consume the dump's file-announce events
-    * and restore each table INCREMENTALLY through the StreamingLoader —
-    * data events may precede their schema event (the loader queues them
-    * on the schema promise, myloader's per-table state machine), per-file
-    * data jobs append to the table's parquet target, `end` seals the
-    * table. Default trigger is AvailableNow — a CATCH-UP restore after
-    * the dump finished (events announced later are invisible to a
-    * latched file listing). For a restore running CONCURRENTLY with
-    * `dump --stream`, pass `--follow`: the consumer polls on a
-    * ProcessingTime cadence and stops itself once the producer's
-    * terminal `done` event arrives and every announced `end` is in. */
-  private def runStreamLoad(spark: SparkSession, o: Map[String, String],
-      dir: String, target: String, decode: Option[(Seq[String], String)]): Unit = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val evDir = o("stream")
-    // in --follow mode the loader may start BEFORE the dump created the
-    // events dir; readStream.text refuses a missing path
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(evDir))
-    val follow = o.contains("follow")
-    // --follow replays EVERY pre-existing event through the fresh
-    // checkpoint: a dir left by a completed run would satisfy the stop
-    // condition before the new dump announces anything, and a dir left
-    // by a CRASHED run (data/end events, no done) would re-append old
-    // tables' data and inflate endsSeen — so follow mode requires a dir
-    // with no ev_* files at all and fails loudly otherwise
-    if (follow) {
-      val stale = Option(new java.io.File(evDir).listFiles).getOrElse(Array.empty)
-        .exists(f => f.isFile && f.getName.startsWith("ev_"))
-      require(!stale, s"--follow needs a FRESH events dir: $evDir already " +
-        "contains ev_* events from a previous run (their replay would " +
-        "re-apply stale data or stop this load before the new dump " +
-        "announces its tables)")
-    }
-    val endsSeen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val expectedTables = new java.util.concurrent.atomic.AtomicInteger(-1)
-    // liveness: --follow polls until done; if the producer DIES before
-    // announcing it (any dumpTable throw aborts the dump), the loop
-    // would spin forever — an idle timeout since the last handled event
-    // turns a dead producer into a loud failure. 0 disables.
-    val followTimeoutMs = o.get("follow-timeout")
-      .map(_.toLong * 1000L).getOrElse(600_000L)
-    val lastEventAt = new java.util.concurrent.atomic.AtomicLong(
-      System.currentTimeMillis())
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_").toString
-    // per-table cap 1: concurrent append jobs into ONE parquet dir would
-    // race the output committer; cross-TABLE parallelism still applies
-    val loader = new graft.load.StreamingLoader(maxThreadsPerTable = 1)
-    // schema file -> StructType, completed by the schema event; data
-    // jobs run strictly after (StreamingLoader gates them), so the
-    // lookup inside a data job always hits
-    val schemas = new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-    val rows = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-    val finished = scala.collection.mutable.Buffer
-      .empty[(String, scala.concurrent.Future[Unit])]
-    val q = graft.streaming.LandingStream.consumeFileEvents(spark, evDir, ckpt,
-      follow = follow) {
-      (kind, table, path) => { lastEventAt.set(System.currentTimeMillis()); kind } match {
-        case "schema" => loader.offerSchema(table, () => {
-          val ddl = Load.readSmallText(java.nio.file.Paths.get(dir, path))
-          val schema = graft.sources.DdlEmitter.toStructType(ddl)
-          if (schema.isEmpty) throw new IllegalStateException(
-            s"schema file $path parsed to zero columns")
-          schemas.put(table, schema)
-        })
-        case "data" => loader.offerData(table, () => {
-          // the batch restore's reader, on exactly the announced file
-          // (exec-filtered events decode through the inverse child)
-          val df = Load.read(spark, dir, Load.TableSource(table, schemas.get(table),
-            onlyFiles = Some(Seq(path))), decode)
-          // rows are counted on the append itself: one read of the file
-          val (n, _) = graft.functions.Checksum.observed(df, checksum = false,
-            s"stream restore of $path")(_.write.mode("append").parquet(s"$target/$table"))
-          rows.computeIfAbsent(table,
-            _ => new java.util.concurrent.atomic.AtomicLong()).addAndGet(n)
-        })
-        case "end" =>
-          finished.synchronized { finished += table -> loader.finish(table) }
-          endsSeen.incrementAndGet(); ()
-        case "dbschema" =>
-          // the db's CREATE-DATABASE artifact: carried alongside the
-          // restored tables so the stream restore stays self-describing
-          // (lake targets need no CREATE DATABASE executed)
-          val src = java.nio.file.Paths.get(dir, path)
-          if (java.nio.file.Files.exists(src)) {
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(target))
-            java.nio.file.Files.copy(src,
-              java.nio.file.Paths.get(target, path),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-          }
-        case "done" =>
-          // terminal producer event: path carries the table count; a
-          // malformed line must not kill the stream mid-restore
-          path.trim.toIntOption match {
-            case Some(n) => expectedTables.set(n)
-            case None => System.err.println(
-              s"[graft] malformed done event payload: '$path'")
-          }
-        case other =>
-          System.err.println(s"[graft] unknown stream event kind: $other")
-      }
-    }
-    if (follow) {
-      // concurrent mode: the stream never runs dry on its own — stop
-      // once the producer said how many tables there are AND that many
-      // `end` events have been handled (handlers run inside the batch,
-      // so at that point every event is consumed)
-      def idleTooLong(): Boolean = followTimeoutMs > 0 &&
-        System.currentTimeMillis() - lastEventAt.get() > followTimeoutMs
-      while (q.isActive && !(expectedTables.get() >= 0 &&
-          endsSeen.get() >= expectedTables.get()) && !idleTooLong())
-        Thread.sleep(200)
-      if (q.isActive) q.stop()
-      require(!idleTooLong() || (expectedTables.get() >= 0 &&
-          endsSeen.get() >= expectedTables.get()),
-        s"--follow saw no events for ${followTimeoutMs / 1000}s and no " +
-          "terminal done event — the producer likely died mid-dump; " +
-          "restored tables may be partial (tune with --follow-timeout SECONDS)")
-    }
-    q.awaitTermination()
-    finished.foreach { case (t, f) =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      log(o, s"[graft] stream-restored $t: ${Option(rows.get(t)).map(_.get).getOrElse(0L)} rows")
     }
   }
 

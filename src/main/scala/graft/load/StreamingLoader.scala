@@ -6,11 +6,14 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.concurrent.{ExecutionContext, Future, Promise}
 
-/** Incremental dependency scheduler for the STREAMED dump→load path
-  * (SURVEY §3.3 + §7 "hard" #3): files arrive one micro-batch at a time
-  * and in any order — a table's data file can land before its schema
-  * file (the reference handles exactly this with its per-table state
-  * machine and pending queues, myloader_worker_loader_main.c:94-237).
+/** The restore's dependency scheduler (SURVEY §2.9 L1, §3.3 + §7
+  * "hard" #3), for a directory restore and a streamed one alike: a
+  * directory restore offers every table at once, a streamed one offers
+  * each table as its files arrive — in any order, so a table's data file
+  * can land before its schema file. It reimplements the reference's
+  * per-table state machine and pending queues
+  * (myloader_worker_loader_main.c:94-338): NOT_CREATED → CREATING →
+  * CREATED → DATA_DONE → ALL_DONE.
   *
   * Model: `offerSchema` / `offerData` are called as files arrive
   * (e.g. from `LandingStream.consume`'s per-batch handler, routed by
@@ -26,7 +29,7 @@ import scala.concurrent.{ExecutionContext, Future, Promise}
   */
 final class StreamingLoader(maxThreadsPerTable: Int = 4)(
     implicit ec: ExecutionContext) {
-  import DependencyScheduler._
+  import StreamingLoader._
 
   private final class Entry {
     val schemaDone: Promise[Unit] = Promise[Unit]()
@@ -61,7 +64,9 @@ final class StreamingLoader(maxThreadsPerTable: Int = 4)(
     val e = entry(table)
     e.synchronized {
       e.dataFutures += e.schemaDone.future.map { _ =>
-        e.sem.acquire()
+        // `blocking` lets a compensating pool (the global one) grow past
+        // jobs parked on the per-table cap
+        scala.concurrent.blocking(e.sem.acquire())
         try job() finally e.sem.release()
       }
     }
@@ -84,4 +89,13 @@ final class StreamingLoader(maxThreadsPerTable: Int = 4)(
 
   def snapshot: Map[String, State] =
     tables.iterator.map { case (k, v) => k -> v.state }.toMap
+}
+
+object StreamingLoader {
+  sealed trait State
+  case object NotCreated extends State
+  case object Creating extends State
+  case object Created extends State
+  case object DataDone extends State
+  case object AllDone extends State
 }

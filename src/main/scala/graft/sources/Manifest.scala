@@ -59,19 +59,37 @@ object Manifest {
     if (m.sourcePosition.isDefined &&
         m.sourcePosition.flatMap(graft.extract.Replica.fromManifestPosition).isEmpty)
       sb ++= s"source-position = ${m.sourcePosition.get}\n"
-    m.tables.foreach { t =>
-      sb ++= s"\n[${t.filename.getOrElse(t.table)}]\n"
-      sb ++= s"real_table_name=${t.table}\n"
-      sb ++= s"rows = ${t.rows}\n"
-      t.dataChecksum.foreach(c => sb ++= s"data_checksum = $c\n")
-      t.schemaChecksum.foreach(c => sb ++= s"schema_checksum = $c\n")
-      if (t.files.nonEmpty) sb ++= s"files = ${t.files.mkString(",")}\n"
-      t.sparkSchema.foreach(s => sb ++= s"spark_schema = $s\n")
-    }
+    m.tables.foreach(t => sb ++= "\n" ++= section(t))
     sb ++= "\n[config]\nmax-statement-size = 1000000\n"
     sb ++= s"\n# Finished dump at: ${m.finishedAt}\n"
     sb.result()
   }
+
+  /** One table's `[stem]` section. */
+  private def section(t: TableManifest): String = {
+    val sb = new StringBuilder
+    sb ++= s"[${t.filename.getOrElse(t.table)}]\n"
+    sb ++= s"real_table_name=${t.table}\n"
+    sb ++= s"rows = ${t.rows}\n"
+    t.dataChecksum.foreach(c => sb ++= s"data_checksum = $c\n")
+    t.schemaChecksum.foreach(c => sb ++= s"schema_checksum = $c\n")
+    if (t.files.nonEmpty) sb ++= s"files = ${t.files.mkString(",")}\n"
+    t.sparkSchema.foreach(s => sb ++= s"spark_schema = $s\n")
+    sb.result()
+  }
+
+  /** One table's section as a single tab- and newline-free token (URL
+    * encoded): the payload of a stream `end` event, so a streamed
+    * restore reads the same entry a directory restore reads from
+    * `metadata`, before `metadata` exists. */
+  def encodeEntry(t: TableManifest): String =
+    java.net.URLEncoder.encode(section(t), StandardCharsets.UTF_8)
+
+  /** The entry [[encodeEntry]] wrote; None for any other payload (an
+    * older producer's `-`). */
+  def decodeEntry(token: String): Option[TableManifest] =
+    scala.util.Try(parse(java.net.URLDecoder.decode(token, StandardCharsets.UTF_8)))
+      .toOption.flatMap(_.tables.headOption)
 
   /** Write `m` as `outDir`'s `metadata`, atomically: the text goes to a
     * hidden sibling temp file that is then renamed over `metadata`, so a

@@ -646,8 +646,10 @@ class CliFlagSurfaceSpec extends SparkTestBase {
 }
 
 /** `dump --stream` + `load --stream`: the reference's flagship streamed
-  * pipe (mydumper_stream.c / myloader stream mode) as CLI glue over
-  * LandingStream events + StreamingLoader. */
+  * pipe (mydumper_stream.c / myloader stream mode). The dump announces
+  * each closed table's files on LandingStream events; the load restores
+  * each table through `Load.run`'s per-table job when its `end` event
+  * arrives (RestoreMatrixSpec covers every format and the batch flags). */
 class CliStreamSpec extends SparkTestBase {
   test("streamed dump -> streamed load restores every announced table") {
     val out = java.nio.file.Files.createTempDirectory("graft_cli_sd_").toString
@@ -681,6 +683,21 @@ class CliStreamSpec extends SparkTestBase {
       assert(back.count() === Tables.t(spark, sf, t).count(),
         s"stream-restored $t lost rows")
     }
+  }
+
+  test("streamed LOAD_DATA dump announces its .dat chunks as data") {
+    val out = java.nio.file.Files.createTempDirectory("graft_cli_sld_").toString
+    val ev = java.nio.file.Files.createTempDirectory("graft_cli_sldev_").toString
+    Main.main(Array("dump", "--source-dir", sf, "-o", out,
+      "--tables-list", "region", "--format", "LOAD_DATA", "--stream", ev))
+    val ordered = new java.io.File(ev).list().filter(_.startsWith("ev_")).sorted.toSeq
+      .map(n => scala.io.Source.fromFile(s"$ev/$n").mkString.stripLineEnd.split("\t").toSeq)
+    val data = ordered.filter(_.head == "data").map(_(2))
+    val dats = new java.io.File(out).list().filter(_.matches("graft\\.region\\.\\d{5}\\.dat")).sorted.toSeq
+    assert(dats.nonEmpty && data === dats, s"data events $data, .dat chunks $dats")
+    // data, then schema, then end
+    assert(ordered.map(_.head).filter(_ != "done").distinct ===
+      Seq("dbschema", "data", "schema", "end"), ordered)
   }
 
   test("load --stream --follow consumes events announced AFTER it starts") {

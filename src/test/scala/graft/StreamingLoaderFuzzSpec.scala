@@ -1,13 +1,15 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import graft.load.{DependencyScheduler, StreamingLoader}
+import graft.load.StreamingLoader
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Interleaving fuzz for the incremental loader: many random arrival
@@ -50,8 +52,42 @@ class StreamingLoaderFuzzSpec extends AnyFunSuite {
       tables.foreach { t =>
         assert(ran(t).get() === nData(t).toLong,
           s"round $round: $t ran ${ran(t).get()} of ${nData(t)} jobs")
-        assert(loader.state(t) === DependencyScheduler.AllDone)
+        assert(loader.state(t) === StreamingLoader.AllDone)
       }
     }
+  }
+
+  test("schema -> data -> index ordering per table") {
+    val log = new ConcurrentLinkedQueue[String]()
+    val loader = new StreamingLoader()
+    val done = Seq("a", "b").map { t =>
+      loader.offerSchema(t, () => log.add(s"$t:schema"))
+      (1 to 3).foreach(i => loader.offerData(t, () => { log.add(s"$t:data$i"); () }))
+      loader.finish(t, post = Seq(() => log.add(s"$t:index")))
+    }
+    Await.result(Future.sequence(done), Duration.Inf)
+    assert(loader.snapshot.values.forall(_ == StreamingLoader.AllDone))
+    Seq("a", "b").foreach { t =>
+      val events = log.asScala.toSeq.filter(_.startsWith(t))
+      assert(events.head === s"$t:schema")
+      assert(events.last === s"$t:index")
+      assert(events.count(_.contains("data")) === 3)
+    }
+  }
+
+  test("per-table parallelism cap holds") {
+    val inFlight = new AtomicInteger(0)
+    val maxSeen = new AtomicInteger(0)
+    val loader = new StreamingLoader(maxThreadsPerTable = 2)
+    loader.offerSchema("t", () => ())
+    (1 to 12).foreach(_ => loader.offerData("t", () => {
+      val n = inFlight.incrementAndGet()
+      maxSeen.updateAndGet(m => math.max(m, n))
+      Thread.sleep(20)
+      inFlight.decrementAndGet()
+      ()
+    }))
+    Await.result(loader.finish("t"), Duration.Inf)
+    assert(maxSeen.get() <= 2, s"cap violated: ${maxSeen.get()}")
   }
 }

@@ -7,7 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-import graft.load.{DependencyScheduler, StreamingLoader}
+import graft.load.StreamingLoader
 import graft.sources.SqlInsertReader
 
 /** SURVEY §7 hard #3 — loader dependency scheduling when dump files
@@ -45,7 +45,7 @@ class StreamingLoaderSpec extends SparkTestBase {
         finally inFlight.decrementAndGet()
       })
     }
-    assert(loader.state("tpch.orders") === DependencyScheduler.NotCreated)
+    assert(loader.state("tpch.orders") === StreamingLoader.NotCreated)
     Thread.sleep(100) // give early jobs every chance to (wrongly) run
     assert(rows.get() === 0, "data ran before CREATE")
 
@@ -61,7 +61,7 @@ class StreamingLoaderSpec extends SparkTestBase {
     assert(rows.get() === o.count(), "streamed load lost rows")
     assert(indexAfterRows.get() === o.count(), "index built before data done")
     assert(maxInFlight.get() <= 2, s"per-table cap exceeded: ${maxInFlight.get()}")
-    assert(loader.state("tpch.orders") === DependencyScheduler.AllDone)
+    assert(loader.state("tpch.orders") === StreamingLoader.AllDone)
   }
 
   test("streamed dump->load end-to-end: file events route into the loader") {
@@ -100,6 +100,6 @@ class StreamingLoaderSpec extends SparkTestBase {
     q.awaitTermination(120000)
     Await.result(finished, Duration.Inf)
     assert(rows.get() === o.count(), "streamed pipeline lost rows")
-    assert(loader.state("tpch.orders") === DependencyScheduler.AllDone)
+    assert(loader.state("tpch.orders") === StreamingLoader.AllDone)
   }
 }
