@@ -244,8 +244,7 @@ object Bench {
             ((System.nanoTime() - t0) / 1e9,
               operators.StoreCompaction.stats(spark, dir)._1)
           }
-          operators.SentenceDedup.writeCounts(batch(0), "text", "doc_id", dir, "b00000")
-          (1 until batches).foreach(append)
+          (0 until batches).foreach(append)
           val (readPre, filesPre) = read()
           operators.SentenceDedup.compactCounts(spark, dir)
           val (readPost, filesPost) = read()

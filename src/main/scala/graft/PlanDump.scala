@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Dev tool: writes the `.explain("formatted")` evidence for the
@@ -205,8 +206,7 @@ object PlanDump {
     // exchange, one sort.
     def storePairs(after: Boolean): DataFrame = {
       import org.apache.spark.sql.expressions.Window
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_plandump_store").toString + "/s"
+      val dir = Scratch.dir("graft_plandump_store") + "/s"
       val embs = (1L to 64L).map(i =>
           (i, Seq.tabulate(8)(j => ((i + j) % 5).toFloat)))
         .toDF("doc_id", "emb")

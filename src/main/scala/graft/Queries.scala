@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{Checksum, Hashing, Masquerade, TextFunctions, VectorFunctions}
 import graft.operators.{AsofJoin, ChunkPlanner, Dedup, DocChunker, NearDupStore, NgramLm, Similarity, Skew}
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1993,8 +1994,8 @@ object Queries {
       |       WHEN 'P' THEN 'g' ELSE '0000' END
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  /** Persisted incremental ANN index (operators.Similarity.writeIndex /
-    * appendIndex / queryIndex): the index is built in two batches (blind
+  /** Persisted incremental ANN index (operators.Similarity.appendIndex
+    * / queryIndex): the index is built in two batches (blind
     * append — cells are data-independent seeded hyperplanes) as a
     * cell-PARTITIONED parquet table, and the probe must return exactly
     * what the direct in-memory IVF returns over the same rows. The
@@ -2010,8 +2011,8 @@ object Queries {
     // consistency check against the same immutable index instead of
     // leaking one full index copy into /tmp per call
     val dir = annIndexCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-      Similarity.writeIndex(e.where(col("vec_id") % 2 === 0), t, "embedding", bits)
+      val t = Scratch.dir("graft_annidx")
+      Similarity.appendIndex(e.where(col("vec_id") % 2 === 0), t, "embedding", bits)
       Similarity.appendIndex(e.where(col("vec_id") % 2 === 1), t, "embedding", bits)
       t
     })
@@ -2622,8 +2623,8 @@ object Queries {
   val qBm25Index: QFn = (s, d) => {
     val docs = documents(s, d)
     val dir = bm25IndexCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_bm25idx").toString
-      graft.operators.Retrieval.writeIndexBm25(
+      val t = Scratch.dir("graft_bm25idx")
+      graft.operators.Retrieval.appendIndexBm25(
         docs.where(col("doc_id") % 2 === 0), "text", "doc_id", t,
         batchId = "even")
       graft.operators.Retrieval.appendIndexBm25(
@@ -2641,8 +2642,8 @@ object Queries {
   }
   val qBm25IndexSql: String = qBm25Sql
 
-  /** Persisted LM count store (operators.NgramLm.writeCounts /
-    * appendCounts / scoreWithStore): n-gram counts are additive, so the
+  /** Persisted LM count store (operators.NgramLm.appendCounts
+    * / scoreWithStore): n-gram counts are additive, so the
     * store blind-appends batch by batch (per-batch rows, deduped by
     * batch_id and summed on read — retry-neutral). Built in two
     * batches; VALUE-gated: store-served per-doc scores must hash-match
@@ -2654,8 +2655,8 @@ object Queries {
     val docs = documents(s, d)
     val train = docs.where(col("doc_id") % 10 < 8)
     val dir = lmStoreCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_lmstore").toString
-      graft.operators.NgramLm.writeCounts(
+      val t = Scratch.dir("graft_lmstore")
+      graft.operators.NgramLm.appendCounts(
         train.where(col("doc_id") % 3 === 0), "text", "doc_id", t,
         batchId = "b0")
       graft.operators.NgramLm.appendCounts(
@@ -2692,8 +2693,8 @@ object Queries {
   val qFreqStore: QFn = (s, d) => {
     val docs = documents(s, d)
     val dir = freqStoreCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_freq").toString + "/s"
-      graft.operators.FreqStore.writeTopK(
+      val t = Scratch.dir("graft_freq") + "/s"
+      graft.operators.FreqStore.appendTopK(
         docs.where(col("doc_id") % 2 === 0)
           .select(col("lang"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok")),
         "tok", "lang", t, k = 50, batchId = "even")
@@ -2741,8 +2742,8 @@ object Queries {
   val qSketchStore: QFn = (s, d) => {
     val docs = documents(s, d)
     val dir = sketchStoreCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_hll").toString + "/s"
-      graft.operators.SketchStore.writeDistinct(
+      val t = Scratch.dir("graft_hll") + "/s"
+      graft.operators.SketchStore.appendDistinct(
         docs.where(col("doc_id") % 2 === 0), "text", "lang", t,
         batchId = "even")
       graft.operators.SketchStore.appendDistinct(
@@ -3237,10 +3238,9 @@ object Queries {
       lit("?utm_source=x"))
     val docs = documents(s, d).select(id, col("source"), col("text"),
       url.as("u"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_curate_store").toString + "/s"
+    val dir = Scratch.dir("graft_curate_store") + "/s"
     Curation.writeStaged(docs.where(id % 2 === 0), "doc_id", "text", "u",
-      dir, "b1", mode = "overwrite")
+      dir, "b1")
     Curation.writeStaged(docs.where(id % 2 =!= 0), "doc_id", "text", "u",
       dir, "b2")
     Curation.writeStaged(docs.where(id % 2 =!= 0), "doc_id", "text", "u",
@@ -3618,8 +3618,7 @@ object Queries {
     // bits sized for the FULL anticipated corpus (store params are
     // fixed at creation; cells only densify as batches land)
     val bits = Similarity.lshBitsFor(nRows)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_media_store").toString + "/s"
+    val dir = Scratch.dir("graft_media_store") + "/s"
     def embedBatch(b: DataFrame): DataFrame =
       graft.operators.Multimodal.embedImageBlocks(
         b.withColumn("media", mediaUdf(col("doc_id"))), "media")
@@ -3948,10 +3947,9 @@ object Queries {
     val docs = documents(s, d).select(id,
       when(id % 2 === 0, lit("big"))
         .otherwise(concat(lit("d"), (id % 64).cast(StringType))).as("dom"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_domcnt_store").toString + "/counts"
+    val dir = Scratch.dir("graft_domcnt_store") + "/counts"
     val sp = graft.operators.Sampling
-    sp.writeDomainCounts(docs.where(id % 3 === 0), "dom", dir, "b1")
+    sp.appendDomainCounts(docs.where(id % 3 === 0), "dom", dir, "b1")
     sp.appendDomainCounts(docs.where(id % 3 =!= 0), "dom", dir, "b2")
     sp.appendDomainCounts(docs.where(id % 3 =!= 0), "dom", dir, "b2") // replay
     sp.temperatureSampleFromStore(docs, "dom", "doc_id", s, dir, scale = 8.0)
@@ -4014,10 +4012,9 @@ object Queries {
       when(id % 3 === 0, concat(col("text"),
         lit(". Subscribe to our newsletter now. Thanks for reading.")))
         .otherwise(col("text")).as("text"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sent_store").toString + "/counts"
+    val dir = Scratch.dir("graft_sent_store") + "/counts"
     val sd = graft.operators.SentenceDedup
-    sd.writeCounts(docs.where(id % 2 === 0), "text", "doc_id", dir, "b1")
+    sd.appendCounts(docs.where(id % 2 === 0), "text", "doc_id", dir, "b1")
     sd.appendCounts(docs.where(id % 2 =!= 0), "text", "doc_id", dir, "b2")
     sd.appendCounts(docs.where(id % 2 =!= 0), "text", "doc_id", dir, "b2") // replay
     sd.dedupSentencesFromStore(docs, "text", "doc_id", s, dir)
@@ -5071,7 +5068,7 @@ object Queries {
   val qPageRankWeightedSql: String = pageRankOracle(weighted = true)
 
   /** PageRank served FROM the persisted link-graph store
-    * (Graphs.writeEdges/appendEdges/rankWithStore): the handoff edges
+    * (Graphs.appendEdges/rankWithStore): the handoff edges
     * are split into two crawl batches (by (src+dst) parity), each batch
     * appends its per-(src,dst) multi-edge COUNTS blind, and the rank is
     * computed from the merged store — which must hash-match the one-shot
@@ -5170,9 +5167,9 @@ object Queries {
     * (q_triangles / q_label_prop) — the output-identity contract. */
   private def storedHandoffDir(s: SparkSession, d: String): String =
     graphStoreCache.computeIfAbsent(d, { _ =>
-      val t = java.nio.file.Files.createTempDirectory("graft_graph").toString + "/edges"
+      val t = Scratch.dir("graft_graph") + "/edges"
       val edges = graft.operators.Graphs.eventHandoffEdges(events(s, d))
-      graft.operators.Graphs.writeEdges(
+      graft.operators.Graphs.appendEdges(
         edges.where(pmod(col("src") + col("dst"), lit(2)) === 0),
         "src", "dst", t, batchId = "even")
       graft.operators.Graphs.appendEdges(

@@ -183,7 +183,7 @@ object Curation {
   // rescanning any previous batch's text. The store persists the per-doc
   // STAGED columns (stage 1-2 results + the URL keys stages 3-4 group
   // on; never the text), blind-append per batch with the
-  // [[Graphs.writeEdges]] retry contract: a replayed batch_id is
+  // [[Graphs.appendEdges]] retry contract: a replayed batch_id is
   // neutralized by (batch_id, doc id) dedup on read, and verdicts served
   // from the store are identical to one-shot [[curate]] over the union
   // of every appended batch (they run the same loser/assemble core).
@@ -197,15 +197,10 @@ object Curation {
     * bp_only) + (canon_url, reg_dom). */
   def writeStaged(docs: DataFrame, idCol: String, textCol: String,
       urlCol: String, path: String, batchId: String,
-      bpMinWords: Int = 4, mode: String = "append"): Unit = {
-    val rows = staged(docs, idCol, textCol, urlCol, bpMinWords)
+      bpMinWords: Int = 4): Unit =
+    StoreCompaction.append(staged(docs, idCol, textCol, urlCol, bpMinWords)
       .drop(textCol, "clean_text")
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(docs.sparkSession, path, rows.schema)
-  }
+      .withColumn("batch_id", lit(batchId)), path)
 
   /** Verdicts for EVERY doc across all appended batches, served from the
     * store — identical to [[curate]] over the union of the raw batches

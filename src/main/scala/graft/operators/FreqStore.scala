@@ -54,29 +54,18 @@ object FreqStore {
       ranked.where(col("rn") === k).select(col("grp"), col("cnt").as("thresh")))
   }
 
-  /** Write one batch's truncated per-group top-k: exact counts under
-    * `path/items`, the truncation threshold under `path/stats` (groups
-    * with fewer than k items carry no stats row — threshold 0). */
-  def writeTopK(df: DataFrame, itemCol: String, groupCol: String,
-      path: String, k: Int, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
-    val (items, stats) = truncated(df, itemCol, groupCol, k)
-    val itemRows = items.withColumn("batch_id", lit(batchId))
-    itemRows.write.mode(mode).parquet(s"$path/items")
-    val statRows = stats.withColumn("batch_id", lit(batchId))
-    statRows.write.mode(mode).parquet(s"$path/stats")
-    // pin both tables' read schemas: snapshot reads skip the footer-
-    // inference job (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, s"$path/items",
-      itemRows.schema)
-    StoreCompaction.writeSchemaHint(df.sparkSession, s"$path/stats",
-      statRows.schema)
-  }
-
-  /** Blind-append another batch (replay-neutral via read-side dedup). */
+  /** Blind-append one batch's truncated per-group top-k: exact counts
+    * under `path/items`, the truncation threshold under `path/stats`
+    * (groups with fewer than k items carry no stats row — threshold 0).
+    * Replay-neutral via read-side dedup. */
   def appendTopK(df: DataFrame, itemCol: String, groupCol: String,
-      path: String, k: Int, batchId: String): Unit =
-    writeTopK(df, itemCol, groupCol, path, k, batchId, mode = "append")
+      path: String, k: Int, batchId: String): Unit = {
+    val (items, stats) = truncated(df, itemCol, groupCol, k)
+    StoreCompaction.append(items.withColumn("batch_id", lit(batchId)),
+      s"$path/items")
+    StoreCompaction.append(stats.withColumn("batch_id", lit(batchId)),
+      s"$path/stats")
+  }
 
   /** Merged per-item frequency intervals from the store:
     * (grp, item, lo, hi) with true count ∈ [lo, hi] (see object doc).

@@ -179,27 +179,15 @@ object Graphs {
     * variants drop them anyway; storing them would only inflate the
     * store). Merge is an integer sum per (src, dst) — associative,
     * partition-order-free, replayable in SQL. */
-  def writeEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      path: String, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
-    val rows = edges
+  def appendEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      path: String, batchId: String): Unit =
+    StoreCompaction.append(edges
       .select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(edges.sparkSession, path, rows.schema)
-  }
-
-  /** Blind-append another crawl batch (replay-neutral, see
-    * [[writeEdges]]). */
-  def appendEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      path: String, batchId: String): Unit =
-    writeEdges(edges, srcCol, dstCol, path, batchId, mode = "append")
+      .withColumn("batch_id", lit(batchId)), path)
 
   /** Merged (src, dst, w) multi-edge counts from the store — identical
     * to what one aggregation over the concatenated raw batches would

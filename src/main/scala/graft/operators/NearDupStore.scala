@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *   - `vecs/`  — (id, vec) once per row (cells duplicate the id
   *     `tables`× at 16 bytes/row; duplicating the VECTOR that much is
   *     the reason for the split);
-  *   - `meta/`  — one row (bits, tables, dim), written once
-  *     (mode=ignore) and REQUIRED to match on every later write: cells
-  *     hashed under different params silently never co-key, so a mixed
-  *     store would "work" with zero recall — fail loudly instead.
+  *   - `_params` — the `(bits,tables,dim)` record, pinned by the first
+  *     write ([[StoreCompaction.pin]]) and REQUIRED to match on every
+  *     later write: cells hashed under different params silently never
+  *     co-key, so a mixed store would "work" with zero recall — fail
+  *     loudly instead.
   *
   * Retried batches (same batch_id written twice) are neutralized on the
   * READ side — `dropDuplicates` over (id, cellkey) / (id) — the same
@@ -48,29 +49,14 @@ import org.apache.spark.sql.functions._
   */
 object NearDupStore {
 
-  private val MetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "bits INT, tables INT, dim INT")
-
-  /** Store params already read-back-verified by THIS JVM, keyed by meta
-    * path. The verify read exists to catch a lost create race / a
-    * params mismatch against an existing store; once one write call has
-    * proven what is on disk, every later write to the same store can
-    * check against the memo instead of re-running a head() job per
-    * batch (guide §5: the store protocol's actions are sequential
-    * driver barriers — JobCount measured them on
-    * q_media_dedup_incremental). Metadata only, never query results;
-    * single-compactor/one-writer is already the store contract. */
-  private val verifiedMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int)]()
-
   /** Embed-once, append-forever: persist `embs`' (id, vec) and its LSH
     * cell index under `path` as batch `batchId`. The caller pays the
     * decode/embed of THIS batch only; every later [[pairs]] call serves
     * from parquet. `bits`/`tables`/`dim` are fixed at store creation
-    * (appends under different params are rejected via `meta/`) — size
+    * (appends under different params are rejected via `_params`) — size
     * `bits` with [[Similarity.lshBitsFor]] for the ANTICIPATED corpus,
     * not the first batch: cells only get denser as batches land, and a
-    * re-bit is a full reindex (same trade as [[Similarity.writeIndex]]). */
+    * re-bit is a full reindex (same trade as [[Similarity.appendIndex]]). */
   def write(embs: DataFrame, vecCol: String, idCol: String, path: String,
       batchId: String, bits: Int, tables: Int = 8, dim: Int = 64): Unit = {
     require(bits > 0 && tables > 0 && dim > 0 && batchId.nonEmpty)
@@ -80,35 +66,15 @@ object NearDupStore {
     require(batchId.matches("[A-Za-z0-9_.-]+"),
       s"batch_id '$batchId' must be [A-Za-z0-9_.-]+")
     val spark = embs.sparkSession
-    import spark.implicits._
-    val metaPath = s"$path/meta"
-    // mode=ignore: the first writer creates the param record, every
-    // later writer no-ops — then ALL writers verify against what's
-    // actually stored, so the second-ever batch can't silently fork the
-    // cell geometry
-    Seq((bits, tables, dim)).toDF("bits", "tables", "dim")
-      .coalesce(1).write.mode("ignore").parquet(metaPath)
-    // verify against what is ACTUALLY stored — read-back with the pinned
-    // meta schema (no footer-inference job) and memoized per JVM (no
-    // head() job after the first write to this store; round 16)
-    // (a memo entry that does NOT match the request falls through to a
-    // fresh disk read: a store deleted and recreated at the same path
-    // must verify against what is stored NOW, not what this JVM saw)
-    val m = Option(verifiedMeta.get(metaPath))
-      .filter(_ == ((bits, tables, dim))).getOrElse {
-        val r = spark.read.schema(MetaSchema).parquet(metaPath)
-          .select("bits", "tables", "dim").head()
-        val t = (r.getInt(0), r.getInt(1), r.getInt(2))
-        verifiedMeta.put(metaPath, t)
-        t
-      }
-    require(m == ((bits, tables, dim)),
+    val requested = s"($bits,$tables,$dim)"
+    val m = StoreCompaction.pin(spark, s"$path/_params", requested)
+    require(m == requested,
       s"store at $path was created with (bits,tables,dim)=$m, " +
-        s"write requested ($bits,$tables,$dim): cells would never co-key; " +
+        s"write requested $requested: cells would never co-key; " +
         "reindex into a fresh store instead")
     val base = embs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("batch_id", lit(batchId))
-    base.write.mode("append").partitionBy("batch_id").parquet(s"$path/vecs")
+    StoreCompaction.append(base, s"$path/vecs", partitionBy = Seq("batch_id"))
     // cell index derives from the JUST-WRITTEN vectors, not from `embs`:
     // the vecs write above already ran the caller's decode+embed
     // pipeline once, and running it a second time for the index pass
@@ -126,12 +92,7 @@ object NearDupStore {
       .select(lit(batchId).as("batch_id"), col("id"),
         explode(Similarity.cellKeyArray(col("vec"), bits, tables, dim))
           .as("cellkey"))
-    cells.write.mode("append").partitionBy("batch_id").parquet(s"$path/cells")
-    // pin both tables' read schemas for every later snapshot read
-    // (driver-side, `_`-hidden, first writer wins; readers fall back to
-    // inference when absent — StoreCompaction.writeSchemaHint)
-    StoreCompaction.writeSchemaHint(spark, s"$path/vecs", base.schema)
-    StoreCompaction.writeSchemaHint(spark, s"$path/cells", cells.schema)
+    StoreCompaction.append(cells, s"$path/cells", partitionBy = Seq("batch_id"))
   }
 
   /** Snapshot read: the store's visible view pinned to the EXPLICIT
@@ -160,7 +121,7 @@ object NearDupStore {
     * (batch-scoped [[pairs]] replays still work); new batches keep
     * appending as root partitions until the next compaction. The two
     * tables compact independently (each step is crash-safe on its own,
-    * [[StoreCompaction]]); `meta/` is a single parameter row and never
+    * [[StoreCompaction]]); `_params` is a single record and never
     * compacts. */
   def compact(spark: SparkSession, path: String,
       targetPartitions: Int = 1): Unit = {

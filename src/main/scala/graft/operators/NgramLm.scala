@@ -119,36 +119,19 @@ object NgramLm {
     * re-reading the training corpus. The tables are vocabulary-bounded
     * (distinct grams, not occurrences), so the store stays small
     * relative to the corpus and needs no partition pruning. */
-  def writeCounts(train: DataFrame, textCol: String, idCol: String,
-      path: String, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
+  def appendCounts(train: DataFrame, textCol: String, idCol: String,
+      path: String, batchId: String): Unit = {
     val toks = train.select(col(idCol),
       split(lower(trim(col(textCol))), "\\s+").as("w"))
     val trainToks = toks.select(explode(col("w")).as("w"))
-    val spark = train.sparkSession
-    val uni = trainToks.groupBy("w").agg(count(lit(1)).as("c1"))
-      .withColumn("batch_id", lit(batchId))
-    uni.write.mode(mode).parquet(s"$path/uni")
-    // pin the three tables' read schemas: scoreWithStore's snapshot
-    // reads skip the footer-inference job per table
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(spark, s"$path/uni", uni.schema)
-    val big = bigramsOf(toks, idCol)
+    StoreCompaction.append(trainToks.groupBy("w").agg(count(lit(1)).as("c1"))
+      .withColumn("batch_id", lit(batchId)), s"$path/uni")
+    StoreCompaction.append(bigramsOf(toks, idCol)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .withColumn("batch_id", lit(batchId))
-    big.write.mode(mode).parquet(s"$path/big")
-    StoreCompaction.writeSchemaHint(spark, s"$path/big", big.schema)
-    val stats = trainToks.agg(count(lit(1)).as("tt"))
-      .withColumn("batch_id", lit(batchId))
-    stats.write.mode(mode).parquet(s"$path/stats")
-    StoreCompaction.writeSchemaHint(spark, s"$path/stats", stats.schema)
+      .withColumn("batch_id", lit(batchId)), s"$path/big")
+    StoreCompaction.append(trainToks.agg(count(lit(1)).as("tt"))
+      .withColumn("batch_id", lit(batchId)), s"$path/stats")
   }
-
-  /** Blind-append a new training batch's counts. Distinct `batchId` per
-    * batch; replaying the same batchId is neutral. */
-  def appendCounts(train: DataFrame, textCol: String, idCol: String,
-      path: String, batchId: String): Unit =
-    writeCounts(train, textCol, idCol, path, batchId, mode = "append")
 
   /** Score documents against a persisted count store — bit-identical to
     * [[score]] with a fresh train over the union of the stored batches

@@ -134,50 +134,38 @@ object Retrieval {
     * `(idCol, term, tf, dl)` written as a lake table PARTITIONED by
     * `bucket = xxhash64(term) mod buckets`, so a query's term set
     * prunes whole directories at file-listing time (the lexical analog
-    * of [[Similarity.writeIndex]]'s cell partitioning). `dl` is
+    * of [[Similarity.appendIndex]]'s cell partitioning). `dl` is
     * denormalized onto every posting (impact-style) so scoring never
     * joins a corpus-wide doc-length table. Corpus constants land in a
     * side `stats` table as ONE ROW PER BATCH `(batch_id, n_docs,
     * tok_total)` — the read side dedups by batch_id then SUMS, which
-    * makes [[appendIndexBm25]] a blind append that is also safe under
-    * at-least-once retries (a replayed batch changes nothing).
+    * makes each batch a blind append that is also safe under
+    * at-least-once retries (a replayed batch changes nothing). Give
+    * each batch a distinct `batchId`.
     *
     * At 100 TB: tokenize+aggregate once at dump time; every later query
     * costs only the pruned buckets of its terms instead of a corpus
     * re-tokenization. */
-  def writeIndexBm25(docs: DataFrame, textCol: String, idCol: String,
-      path: String, buckets: Int = 64, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
+  def appendIndexBm25(docs: DataFrame, textCol: String, idCol: String,
+      path: String, buckets: Int = 64, batchId: String): Unit = {
     val postings = postingsFor(docs, textCol, idCol, buckets)
-    postings.write.mode(mode).partitionBy("bucket")
-      .parquet(s"$path/postings")
-    // pin the read schemas so snapshot reads skip the footer-inference
-    // job (StoreCompaction.writeSchemaHint; absent ⇒ inference).
-    // `bucket` lives only in partition DIR names, where type inference
-    // reads 0..63 as INT — the hint must say INT too, not the writer
-    // column's LONG, or the pinned read would differ from the
-    // historical inferred one.
-    StoreCompaction.writeSchemaHint(docs.sparkSession, s"$path/postings",
-      org.apache.spark.sql.types.StructType(postings.schema.map(f =>
-        if (f.name == "bucket")
-          f.copy(dataType = org.apache.spark.sql.types.IntegerType)
-        else f)))
+    StoreCompaction.append(postings, s"$path/postings",
+      partitionBy = Seq("bucket"))
     // N counts ALL docs (a NULL-text doc has no postings but still
     // deflates idf/avgdl if dropped — same rule as the in-memory path)
-    val stats = docs.agg(count(lit(1)).as("n_docs"))
+    StoreCompaction.append(docs.agg(count(lit(1)).as("n_docs"))
       // Σ tf over all (doc, term) rows = total tokens = Σ per-doc dl
       .crossJoin(postings.agg(coalesce(sum("tf"), lit(0L)).as("tok_total")))
-      .withColumn("batch_id", lit(batchId))
-    stats.write.mode(mode).parquet(s"$path/stats")
-    StoreCompaction.writeSchemaHint(docs.sparkSession, s"$path/stats",
-      stats.schema)
+      .withColumn("batch_id", lit(batchId)), s"$path/stats")
   }
 
   /** The index's posting rows `(idCol, term, tf, dl, bucket)` — the
-    * corpus-scale half of [[writeIndexBm25]], exposed for the scale
+    * corpus-scale half of [[appendIndexBm25]], exposed for the scale
     * probe: one tokenize pass, two doc-keyed aggregations (per-(doc,
     * term) tf; per-doc dl rejoined — both shuffle on the SAME doc key,
-    * so the exchange is reused), one term-hash bucket column. */
+    * so the exchange is reused), one term-hash bucket column. `bucket`
+    * is an INT, the type a read infers from its partition directory
+    * names (as `cell` in [[Similarity.withCell]]). */
   def postingsFor(docs: DataFrame, textCol: String, idCol: String,
       buckets: Int): DataFrame = {
     val tokens = docs.select(col(idCol),
@@ -186,16 +174,9 @@ object Retrieval {
     tokens.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
       .join(dl, Seq(idCol))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+      .withColumn("bucket",
+        pmod(xxhash64(col("term")), lit(buckets.toLong)).cast("int"))
   }
-
-  /** Blind-append a new corpus batch to an existing index. Give each
-    * batch a distinct `batchId`; replaying the SAME batchId is safe
-    * (stats dedup by batch_id; postings dedup at query time). */
-  def appendIndexBm25(newDocs: DataFrame, textCol: String, idCol: String,
-      path: String, buckets: Int = 64, batchId: String): Unit =
-    writeIndexBm25(newDocs, textCol, idCol, path, buckets, batchId,
-      mode = "append")
 
   /** Compact the BM25 index: postings collapse to one row per
     * (doc, term) re-partitioned on `bucket` (the term-pruning

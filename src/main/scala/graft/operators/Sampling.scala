@@ -168,22 +168,13 @@ object Sampling {
   // re-crawl batch samples at rates reflecting ALL history without a
   // rescan, and retried writes are neutral.
 
-  /** Write one batch's per-domain counts (null domains excluded — the
+  /** Blind-append one batch's per-domain counts (null domains excluded — the
     * [[temperatureSample]] contract). */
-  def writeDomainCounts(df: DataFrame, domainCol: String, path: String,
-      batchId: String, mode: String = "overwrite"): Unit = {
-    val rows = df.where(col(domainCol).isNotNull)
-      .groupBy(col(domainCol).as("dom")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
-
   def appendDomainCounts(df: DataFrame, domainCol: String, path: String,
       batchId: String): Unit =
-    writeDomainCounts(df, domainCol, path, batchId, mode = "append")
+    StoreCompaction.append(df.where(col(domainCol).isNotNull)
+      .groupBy(col(domainCol).as("dom")).agg(count(lit(1)).as("cnt"))
+      .withColumn("batch_id", lit(batchId)), path)
 
   /** Merged corpus-wide domain counts: replayed batches collapse first,
     * then counts sum — (dom, n_d). */

@@ -104,22 +104,13 @@ object SentenceDedup {
   // removed by (sh, batch_id) read-side dedup, so writes stay blind
   // appends with no read-modify-write races.
 
-  /** Write one batch's corpus-wide sentence-hash counts. */
-  def writeCounts(df: DataFrame, textCol: String, idCol: String,
-      path: String, batchId: String, mode: String = "overwrite"): Unit = {
-    val rows = sentences(df, textCol, idCol)
-      .groupBy("sh").agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema: snapshot reads skip the footer-inference job
-    // (StoreCompaction.writeSchemaHint; absent ⇒ inference)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
-
-  /** Blind-append another batch (replay-neutral). */
+  /** Blind-append one batch's corpus-wide sentence-hash counts
+    * (replay-neutral). */
   def appendCounts(df: DataFrame, textCol: String, idCol: String,
       path: String, batchId: String): Unit =
-    writeCounts(df, textCol, idCol, path, batchId, mode = "append")
+    StoreCompaction.append(sentences(df, textCol, idCol)
+      .groupBy("sh").agg(count(lit(1)).as("cnt"))
+      .withColumn("batch_id", lit(batchId)), path)
 
   /** Merged corpus-wide counts: replayed batches collapse first, then
     * counts sum — (sh, n_occ). Served from the store's visible view

@@ -130,7 +130,7 @@ object Similarity {
     * property — a retrained quantizer re-partitions the index, exactly
     * the trade a production IVF schedules as periodic reindexing. At
     * 100 TB the `cluster` column is written as the partition key (same
-    * layout as [[writeIndex]]), so the nprobe cells prune at
+    * layout as [[appendIndex]]), so the nprobe cells prune at
     * file-listing time; probe routing is k·dim bytes of driver math. */
   def ivfKmeansTopK(embs: DataFrame, vecCol: String, idCol: String,
       query: Seq[Float], k: Int, cells: Int, nprobe: Int,
@@ -161,24 +161,13 @@ object Similarity {
     * data skipping Spark has. Because cells are data-INDEPENDENT
     * (seeded hyperplanes, not k-means), the index is incrementally
     * appendable: a new batch gets identical cell assignments no matter
-    * what is already stored — [[appendIndex]] is a blind append, the
-    * same contract as the dedup band store. */
-  def writeIndex(embs: DataFrame, path: String, vecCol: String,
-      bits: Int, dim: Int = 64, mode: String = "overwrite"): Unit = {
-    val rows = withCell(embs, vecCol, bits, dim)
-    rows.write.mode(mode).partitionBy("cell").parquet(path)
-    // pin the read schema: index reads skip the per-file footer-
-    // inference job (StoreCompaction.writeSchemaHint; absent ⇒
-    // inference). `cell` is cast to int at creation so the hint's type
-    // matches what partition-dir type inference produced before.
-    StoreCompaction.writeSchemaHint(embs.sparkSession, path, rows.schema)
-  }
-
-  /** Append a new batch to an existing index (no read-modify-write;
-    * batches commit independently). */
+    * what is already stored — each batch is a blind append (no
+    * read-modify-write; batches commit independently), the same
+    * contract as the dedup band store. */
   def appendIndex(newEmbs: DataFrame, path: String, vecCol: String,
       bits: Int, dim: Int = 64): Unit =
-    writeIndex(newEmbs, path, vecCol, bits, dim, mode = "append")
+    StoreCompaction.append(withCell(newEmbs, vecCol, bits, dim), path,
+      partitionBy = Seq("cell"))
 
   /** Query a persisted index: the nprobe hamming ball over the `cell`
     * partition column prunes partitions during listing, so the scan

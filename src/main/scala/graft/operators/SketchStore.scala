@@ -30,27 +30,15 @@ import org.apache.spark.sql.functions._
   */
 object SketchStore {
 
-  /** Write one batch's per-group distinct sketches:
+  /** Blind-append one batch's per-group distinct sketches:
     * `(groupCol, sketch, batch_id)` — one row per group, KBs each
-    * (lgConfigK=12 → ≤4 KiB registers). */
-  def writeDistinct(df: DataFrame, valueCol: String, groupCol: String,
-      path: String, batchId: String = "batch-0",
-      mode: String = "overwrite"): Unit = {
-    val rows = df.groupBy(col(groupCol))
-      .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
-      .withColumn("batch_id", lit(batchId))
-    rows.write.mode(mode).parquet(path)
-    // pin the read schema so snapshot reads skip the footer-inference
-    // job (driver-side, first writer wins, absent ⇒ inference —
-    // StoreCompaction.writeSchemaHint)
-    StoreCompaction.writeSchemaHint(df.sparkSession, path, rows.schema)
-  }
-
-  /** Blind-append another batch's sketches (idempotent under replay —
-    * see object doc). */
+    * (lgConfigK=12 → ≤4 KiB registers); idempotent under replay (see
+    * object doc). */
   def appendDistinct(df: DataFrame, valueCol: String, groupCol: String,
       path: String, batchId: String): Unit =
-    writeDistinct(df, valueCol, groupCol, path, batchId, mode = "append")
+    StoreCompaction.append(df.groupBy(col(groupCol))
+      .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
+      .withColumn("batch_id", lit(batchId)), path)
 
   /** Per-group distinct estimates from the store: one sketch-union over
     * the (groups × batches) rows — row count is independent of corpus

@@ -3,13 +3,24 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import java.nio.charset.StandardCharsets
 
-/** Compaction + bounded-listing kernel for the engine's BLIND-APPEND
-  * stores (sentence counts, link edges, curation stage rows, ANN cells,
-  * BM25 postings/stats, LM counts, heavy-hitter intervals, HLL
-  * sketches, the media near-dup store). Reference analog: the daemon's
-  * periodic-snapshot housekeeping (`src/mydumper/mydumper_daemon_thread
-  * .c:33-140` rotates dump dirs so state stays bounded across runs).
+/** Append, compaction and bounded-listing kernel for the engine's ten
+  * BLIND-APPEND stores (sentence counts, link edges, curation stage
+  * rows, ANN cells, BM25 postings/stats, LM counts, heavy-hitter
+  * intervals, HLL sketches, domain counts, the media near-dup store).
+  * Reference analog: the daemon's periodic-snapshot housekeeping
+  * (`src/mydumper/mydumper_daemon_thread.c:33-140` rotates dump dirs so
+  * state stays bounded across runs).
+  *
+  * APPEND ([[append]]) is the only way rows reach a store root. Each
+  * store table pins its schema in a `_`-hidden record (`_schema.ddl`)
+  * through [[pin]], the pin-or-verify primitive: the first append
+  * creates the record, every later append verifies the incoming schema
+  * against it before writing, and a mismatch throws [[SchemaMismatch]]
+  * — a rejected append writes nothing. [[NearDupStore]] pins its LSH
+  * params through the same primitive.
   *
   * WHY: blind-append-forever is correct but unbounded — at daemon
   * cadence a store accrues one file set per batch, every read lists
@@ -73,50 +84,77 @@ private[graft] object StoreCompaction {
   private val ManifestHeader = "GRAFT-MANIFEST v1"
   private val SchemaHintName = "_schema.ddl"
 
-  /** Persist the store's row schema as a `_`-hidden DDL file so every
-    * later read can PIN it instead of inferring: each un-pinned
-    * `spark.read.parquet` runs a footer-read Spark job before the real
-    * query (mergeSchemasInParallel), and at store-protocol cadence —
-    * q_media_dedup_incremental pays 6 such jobs per run — that is pure
-    * sequential action-barrier latency (guide §5, driver/orchestration).
-    * Driver-side FS write, no job; first writer wins (the store schema
-    * is fixed at creation, same contract as `meta/`); readers fall back
-    * to inference when the file is absent (old stores, crash windows)
-    * or unparsable. */
-  def writeSchemaHint(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val (fs, root) = fsFor(spark, dir)
-    val p = new Path(root, SchemaHintName)
-    try {
-      if (!fs.exists(p)) {
-        val out = fs.create(p, false) // no overwrite: first writer wins
-        try out.write(schema.toDDL.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    } catch { case _: java.io.IOException => () } // lost race / RO fs: hint stays optional
+  /** Thrown by [[append]] when the incoming rows' schema is not the
+    * one the store pinned at creation. Nothing was written. */
+  final class SchemaMismatch(val dir: String, val stored: String,
+      val incoming: String) extends IllegalStateException(
+    s"store at $dir is pinned to schema [$stored] but the append " +
+      s"brings [$incoming]; cast the batch or reindex into a fresh store")
+
+  /** Append `rows` to the store at `dir` (hive-partitioned on
+    * `partitionBy` when given) — the only way rows reach a store root.
+    * Before any row is written the store's schema record
+    * (`_schema.ddl`) is pinned: the first append creates it, every
+    * later one verifies the incoming schema against it (names and
+    * types in order; nullability ignored) and throws [[SchemaMismatch]]
+    * on a difference, so a rejected append writes nothing. The record
+    * lets every [[readVisible]] skip the footer-inference job, so a
+    * partition column must carry the type a read infers from its
+    * directory names (an INT for small integers). */
+  def append(rows: DataFrame, dir: String,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val incoming = rows.schema.toDDL
+    val stored = pin(rows.sparkSession, s"$dir/$SchemaHintName", incoming)
+    if (!sameShape(StructType.fromDDL(stored), rows.schema))
+      throw new SchemaMismatch(dir, stored, incoming)
+    val w = rows.write.mode("append")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+      .parquet(dir)
   }
 
-  /** The pinned schema hint at `dir`, when present and parsable. */
+  /** Pin-or-verify: the `_`-hidden record `file` holds the `content`
+    * of its first writer from then on; returns what it holds, for the
+    * caller to verify. The record is written under a temporary
+    * sibling name and renamed into place, so no reader sees a partial
+    * one. Driver-side filesystem calls, no Spark job. */
+  private[operators] def pin(spark: SparkSession, file: String,
+      content: String): String = {
+    val (fs, p) = fsFor(spark, file)
+    if (!fs.exists(p)) {
+      val tmp = new Path(p.getParent,
+        s"${p.getName}.${java.util.UUID.randomUUID}.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(content.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, p)) fs.delete(tmp, false) // lost a create race
+    }
+    readText(fs, p)
+  }
+
+  private def sameShape(a: DataType, b: DataType): Boolean = (a, b) match {
+    case (x: StructType, y: StructType) =>
+      x.length == y.length && x.zip(y).forall { case (f, g) =>
+        f.name == g.name && sameShape(f.dataType, g.dataType) }
+    case (ArrayType(x, _), ArrayType(y, _)) => sameShape(x, y)
+    case (MapType(k1, v1, _), MapType(k2, v2, _)) =>
+      sameShape(k1, k2) && sameShape(v1, v2)
+    case _ => a == b
+  }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** The pinned schema record at `dir`, when present and parsable;
+    * readers of stores older than the record infer instead. */
   private def readSchemaHint(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : Option[StructType] = {
     val (fs, root) = fsFor(spark, dir)
     val p = new Path(root, SchemaHintName)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8 * 1024)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-          } finally in.close()
-        Some(org.apache.spark.sql.types.StructType.fromDDL(txt))
-      }
-    } catch { case _: Throwable => None }
+    try if (fs.exists(p)) Some(StructType.fromDDL(readText(fs, p))) else None
+    catch { case _: Throwable => None }
   }
 
   private def fsFor(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -158,15 +196,7 @@ private[graft] object StoreCompaction {
   private def readManifest(fs: FileSystem, cmpDir: Path): Option[Set[String]] = {
     val mf = new Path(cmpDir, ManifestName)
     if (!fs.exists(mf)) return None
-    val in = fs.open(mf)
-    val text =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64 * 1024)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+    val text = readText(fs, mf)
     val lines = text.split("\n", -1).toSeq.dropRight(1) // trailing \n
     if (lines.length < 3 || lines.head != ManifestHeader ||
         lines.last != "END") return None
@@ -220,7 +250,7 @@ private[graft] object StoreCompaction {
   }
 
   private def readOf(spark: SparkSession, base: Path, files: Seq[Path],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      schema: Option[StructType]): DataFrame = {
     val r0 = spark.read.option("basePath", base.toString)
     schema.fold(r0)(r0.schema).parquet(files.map(_.toString): _*)
   }
@@ -252,7 +282,7 @@ private[graft] object StoreCompaction {
 
   private def readSnapshot(spark: SparkSession, s: Snapshot, dir: String,
       pinLiveFiles: Boolean,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[StructType] = None)
       : DataFrame = {
     def dirRead(path: String): DataFrame =
       schema.fold(spark.read)(spark.read.schema).parquet(path)
@@ -314,7 +344,7 @@ private[graft] object StoreCompaction {
     val mfBody = (Seq(ManifestHeader, consumed.length.toString) ++
       consumed :+ "END").mkString("", "\n", "\n")
     val out = fs.create(new Path(fin, ManifestName), true)
-    try out.write(mfBody.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(mfBody.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     // GC: consumed files, their emptied parent dirs (non-recursive
     // delete no-ops on non-empty), and every other generation/temp dir

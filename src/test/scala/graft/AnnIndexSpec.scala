@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Similarity, StoreCompaction}
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Persisted incremental ANN index: append equivalence, query identity
@@ -11,9 +12,9 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("two-batch index equals one-shot index (blind append)") {
     val e = Tables.embeddings(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("graft_annidx_").toString
-    Similarity.writeIndex(e, s"$base/oneshot", "embedding", bits)
-    Similarity.writeIndex(e.where(col("vec_id") % 2 === 0), s"$base/twostep", "embedding", bits)
+    val base = Scratch.dir("graft_annidx_")
+    Similarity.appendIndex(e, s"$base/oneshot", "embedding", bits)
+    Similarity.appendIndex(e.where(col("vec_id") % 2 === 0), s"$base/twostep", "embedding", bits)
     Similarity.appendIndex(e.where(col("vec_id") % 2 === 1), s"$base/twostep", "embedding", bits)
     val a = spark.read.parquet(s"$base/oneshot")
     val b = spark.read.parquet(s"$base/twostep")
@@ -25,8 +26,8 @@ class AnnIndexSpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf)
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx_").toString + "/idx"
-    Similarity.writeIndex(e, dir, "embedding", bits)
+    val dir = Scratch.dir("graft_annidx_") + "/idx"
+    Similarity.appendIndex(e, dir, "embedding", bits)
     val viaIndex = Similarity.queryIndex(spark, dir, "embedding", "vec_id",
       qv, k = 10, bits = bits)
     val direct = Similarity.ivfTopK(Similarity.withCell(e, "embedding", bits),
@@ -40,8 +41,8 @@ class AnnIndexSpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf)
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx_").toString + "/idx"
-    Similarity.writeIndex(e, dir, "embedding", bits)
+    val dir = Scratch.dir("graft_annidx_") + "/idx"
+    Similarity.appendIndex(e, dir, "embedding", bits)
     // at-least-once orchestration: the same batch lands twice
     Similarity.appendIndex(e.where(col("vec_id") < 50), dir, "embedding", bits)
     Similarity.appendIndex(e.where(col("vec_id") < 50), dir, "embedding", bits)
@@ -56,8 +57,8 @@ class AnnIndexSpec extends SparkTestBase {
     val e = Tables.embeddings(spark, sf)
     val qv = e.where(col("vec_id") === 7).select("embedding")
       .head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx_").toString + "/idx"
-    Similarity.writeIndex(e, dir, "embedding", bits)
+    val dir = Scratch.dir("graft_annidx_") + "/idx"
+    Similarity.appendIndex(e, dir, "embedding", bits)
     // the pruning stage of queryIndex, isolated: the hamming-ball
     // predicate over the `cell` partition column (queryIndex itself adds
     // a dedup exchange, and AQE's plan wrapper hides scan metrics)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Curation
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Four-stage curation chain: verdict semantics, the stage-ORDER
@@ -111,7 +112,7 @@ class CurationSpec extends SparkTestBase {
 
   test("store: two appended batches + a replayed batch serve the one-shot " +
       "verdicts over the union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_curate_store").toString
+    val dir = Scratch.dir("graft_curate_store")
     val all = (1L to 6L).map(i => (i, prose, s"https://hot.com/$i")) ++ Seq(
       (7L, "the cat is here", "https://a.com/p"), // too_short
       (8L, prose, "https://a.com/p"), // kept (7 was length-rejected)
@@ -119,8 +120,7 @@ class CurationSpec extends SparkTestBase {
       (10L, prose, "not a url")) // skips 3-4
     val (b1, b2) = all.partition(_._1 % 2 == 0)
     def df(rows: Seq[(Long, String, String)]) = rows.toDF("doc_id", "text", "u")
-    Curation.writeStaged(df(b1), "doc_id", "text", "u", dir, "b1",
-      mode = "overwrite")
+    Curation.writeStaged(df(b1), "doc_id", "text", "u", dir, "b1")
     Curation.writeStaged(df(b2), "doc_id", "text", "u", dir, "b2")
     Curation.writeStaged(df(b2), "doc_id", "text", "u", dir, "b2") // retry replay
     val served = Curation.curateFromStore(spark, dir, "doc_id",

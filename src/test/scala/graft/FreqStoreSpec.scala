@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.FreqStore
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Truncated top-k heavy-hitters store: the interval guarantee
@@ -10,7 +11,7 @@ class FreqStoreSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_freq_").toString + "/s"
+    Scratch.dir("graft_freq_") + "/s"
 
   private def batch(rows: (String, String)*) = rows.toDF("grp", "item")
 
@@ -27,7 +28,7 @@ class FreqStoreSpec extends SparkTestBase {
     val truth = Map("a" -> 9L, "b" -> 4L, "c" -> 2L, "d" -> 5L, "e" -> 2L)
     val dir = tmp()
     // k=2 truncates aggressively: b0 keeps a,b (thresh 3); b1 keeps a,d (thresh 4)
-    FreqStore.writeTopK(b0, "item", "grp", dir, k = 2, batchId = "b0")
+    FreqStore.appendTopK(b0, "item", "grp", dir, k = 2, batchId = "b0")
     FreqStore.appendTopK(b1, "item", "grp", dir, k = 2, batchId = "b1")
     val iv = ivMap(dir)
     // every listed item's interval contains the truth
@@ -48,7 +49,7 @@ class FreqStoreSpec extends SparkTestBase {
   test("a replayed batch is a no-op (batch_id dedup on read)") {
     val b = batch(Seq.fill(4)("g" -> "x") ++ Seq.fill(2)("g" -> "y"): _*)
     val dir = tmp()
-    FreqStore.writeTopK(b, "item", "grp", dir, k = 2, batchId = "b0")
+    FreqStore.appendTopK(b, "item", "grp", dir, k = 2, batchId = "b0")
     val before = ivMap(dir)
     FreqStore.appendTopK(b, "item", "grp", dir, k = 2, batchId = "b0")
     assert(ivMap(dir) === before)
@@ -56,7 +57,7 @@ class FreqStoreSpec extends SparkTestBase {
 
   test("groups with fewer than k items carry no threshold (exact merge)") {
     val dir = tmp()
-    FreqStore.writeTopK(batch("g" -> "a", "g" -> "a"), "item", "grp", dir,
+    FreqStore.appendTopK(batch("g" -> "a", "g" -> "a"), "item", "grp", dir,
       k = 10, batchId = "b0")
     FreqStore.appendTopK(batch("g" -> "b"), "item", "grp", dir,
       k = 10, batchId = "b1")
@@ -67,7 +68,7 @@ class FreqStoreSpec extends SparkTestBase {
   test("truncation ties break deterministically (count DESC, item ASC)") {
     val b = batch("g" -> "a", "g" -> "b", "g" -> "c") // all count 1
     val dir = tmp()
-    FreqStore.writeTopK(b, "item", "grp", dir, k = 2, batchId = "b0")
+    FreqStore.appendTopK(b, "item", "grp", dir, k = 2, batchId = "b0")
     val iv = ivMap(dir)
     assert(iv.keySet === Set(("g", "a"), ("g", "b")),
       s"rank-ties must keep the item-ASC prefix, got ${iv.keySet}")

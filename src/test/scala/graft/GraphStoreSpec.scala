@@ -1,9 +1,10 @@
 package graft
 
 import graft.operators.Graphs
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
-/** Persisted link-graph store (Graphs.writeEdges/appendEdges/
+/** Persisted link-graph store (Graphs.appendEdges/
   * rankWithStore): two-batch == one-shot equivalence for both rank
   * variants, retry-replay neutrality, and the scoped release
   * lifecycle — the same contract family as FreqStoreSpec. */
@@ -21,10 +22,10 @@ class GraphStoreSpec extends SparkTestBase {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("two appended batches rank identically to the one-shot graph") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gs").toString + "/e"
+    val dir = Scratch.dir("graft_gs") + "/e"
     val (a, b) = (edgesDf.where(col("src") % 2 === 0),
       edgesDf.where(col("src") % 2 =!= 0))
-    Graphs.writeEdges(a, "src", "dst", dir, batchId = "b0")
+    Graphs.appendEdges(a, "src", "dst", dir, batchId = "b0")
     Graphs.appendEdges(b, "src", "dst", dir, batchId = "b1")
     assert(ranksOf(Graphs.rankWithStore(spark, dir, weighted = false, iters = 4))
       === ranksOf(Graphs.pageRank(edgesDf, "src", "dst", iters = 4)))
@@ -33,8 +34,8 @@ class GraphStoreSpec extends SparkTestBase {
   }
 
   test("a replayed batch (same batch_id appended twice) changes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gs").toString + "/e"
-    Graphs.writeEdges(edgesDf, "src", "dst", dir, batchId = "b0")
+    val dir = Scratch.dir("graft_gs") + "/e"
+    Graphs.appendEdges(edgesDf, "src", "dst", dir, batchId = "b0")
     val before = ranksOf(Graphs.rankWithStore(spark, dir, weighted = true, iters = 3))
     // a retried writer appends the identical batch again
     Graphs.appendEdges(edgesDf, "src", "dst", dir, batchId = "b0")
@@ -49,8 +50,8 @@ class GraphStoreSpec extends SparkTestBase {
   }
 
   test("store-served scoped rank releases its checkpoint blocks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gs").toString + "/e"
-    Graphs.writeEdges(edgesDf, "src", "dst", dir, batchId = "b0")
+    val dir = Scratch.dir("graft_gs") + "/e"
+    Graphs.appendEdges(edgesDf, "src", "dst", dir, batchId = "b0")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val scoped = Graphs.rankWithStoreScoped(spark, dir, iters = 3)
     assert(scoped.df.count() === 4)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.cli.Main
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -45,7 +46,7 @@ class LakeConformSpec extends SparkTestBase {
       "lake layouts (seeded sweep)") {
     val seed = 424242
     val rnd = new scala.util.Random(seed)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lc_src_").toString
+    val srcDir = Scratch.dir("graft_lc_src_")
     for (case_ <- 1 to 4) {
       // random non-empty column subset, random order — plus the
       // mandatory id and partition columns
@@ -69,9 +70,9 @@ class LakeConformSpec extends SparkTestBase {
       } {
         val label = s"case $case_ $fmt partitioned=$partitioned " +
           s"cols=${cols.map(_.field.name).mkString(",")}"
-        val out = java.nio.file.Files.createTempDirectory("graft_lc_out_").toString
-        val target = java.nio.file.Files.createTempDirectory("graft_lc_t_").toString
-        val lf = java.nio.file.Files.createTempFile("graft_lc_log", ".txt").toString
+        val out = Scratch.dir("graft_lc_out_")
+        val target = Scratch.dir("graft_lc_t_")
+        val lf = Scratch.dir("graft_lc_log_") + "/log.txt"
         val dumpArgs = Array("dump", "--source-dir", srcDir, "-o", out,
           "--tables-list", table, "--format", fmt) ++
           (if (partitioned) Array("--partition-by", "p") else Array.empty[String])

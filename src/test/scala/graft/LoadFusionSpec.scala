@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import graft.functions.{Checksum, Masquerade}
 import graft.sources.SqlInsertReader
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, lit}
 
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   * takes the checksum from its write, never from a probe. */
 class LoadFusionSpec extends SparkTestBase {
 
-  private def tmp(): String = Files.createTempDirectory("graft_fusion_").toString
+  private def tmp(): String = Scratch.dir("graft_fusion_")
 
   /** What the restore verified before it fused: count and checksum. */
   private def oldRowsAndChecksum(df: DataFrame): (Long, Long) = {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, NearDupStore, Similarity}
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,7 +50,7 @@ class NearDupStoreSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_nds_$tag").toString + "/s"
+    Scratch.dir(s"graft_nds_$tag") + "/s"
 
   test("UNCAPPED equivalence: pairs(batch1 view) ∪ incremental(batch2) " +
       "equals the one-shot pair set over the union exactly") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.NgramLm
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Persisted LM count store: additive blind-append across batches,
@@ -18,9 +19,9 @@ class NgramLmStoreSpec extends SparkTestBase {
   }
 
   test("two-batch count store scores identically to a one-shot train") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmstore_").toString + "/lm"
+    val dir = Scratch.dir("graft_lmstore_") + "/lm"
     val train = docs.where(trainPred)
-    NgramLm.writeCounts(train.where(col("doc_id") % 3 === 0),
+    NgramLm.appendCounts(train.where(col("doc_id") % 3 === 0),
       "text", "doc_id", dir, batchId = "b0")
     NgramLm.appendCounts(train.where(col("doc_id") % 3 =!= 0),
       "text", "doc_id", dir, batchId = "b1")
@@ -30,8 +31,8 @@ class NgramLmStoreSpec extends SparkTestBase {
   }
 
   test("a replayed batch (same batchId twice) changes no score") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmstore_").toString + "/lm"
-    NgramLm.writeCounts(docs.where(trainPred), "text", "doc_id", dir,
+    val dir = Scratch.dir("graft_lmstore_") + "/lm"
+    NgramLm.appendCounts(docs.where(trainPred), "text", "doc_id", dir,
       batchId = "b0")
     // at-least-once orchestration: the same counts land again — without
     // the (batch_id, gram) dedup every c1/c2/tt would double and every

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Retrieval
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted index: score identity with the in-memory BM25
@@ -20,16 +21,16 @@ class RetrievalIndexSpec extends SparkTestBase {
   }
 
   test("queryIndexBm25 returns exactly the in-memory bm25 result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_").toString + "/idx"
-    Retrieval.writeIndexBm25(docs, "text", "doc_id", dir)
+    val dir = Scratch.dir("graft_bm25idx_") + "/idx"
+    Retrieval.appendIndexBm25(docs, "text", "doc_id", dir, batchId = "b0")
     assertSameScores(
       Retrieval.queryIndexBm25(spark, dir, "doc_id", terms),
       Retrieval.bm25(docs, "text", "doc_id", terms))
   }
 
   test("two-batch append equals the one-shot index (stats sum across batches)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_").toString + "/idx"
-    Retrieval.writeIndexBm25(docs.where(col("doc_id") % 2 === 0),
+    val dir = Scratch.dir("graft_bm25idx_") + "/idx"
+    Retrieval.appendIndexBm25(docs.where(col("doc_id") % 2 === 0),
       "text", "doc_id", dir, batchId = "even")
     Retrieval.appendIndexBm25(docs.where(col("doc_id") % 2 === 1),
       "text", "doc_id", dir, batchId = "odd")
@@ -39,8 +40,8 @@ class RetrievalIndexSpec extends SparkTestBase {
   }
 
   test("a replayed batch (same batchId twice) changes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_").toString + "/idx"
-    Retrieval.writeIndexBm25(docs, "text", "doc_id", dir, batchId = "b0")
+    val dir = Scratch.dir("graft_bm25idx_") + "/idx"
+    Retrieval.appendIndexBm25(docs, "text", "doc_id", dir, batchId = "b0")
     // at-least-once orchestration: the SAME batch lands again — without
     // the dedups this would double every tf, df, N and tok_total
     Retrieval.appendIndexBm25(docs, "text", "doc_id", dir, batchId = "b0")
@@ -50,9 +51,10 @@ class RetrievalIndexSpec extends SparkTestBase {
   }
 
   test("the term set prunes posting partitions at listing time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_").toString + "/idx"
+    val dir = Scratch.dir("graft_bm25idx_") + "/idx"
     val buckets = 64
-    Retrieval.writeIndexBm25(docs, "text", "doc_id", dir, buckets = buckets)
+    Retrieval.appendIndexBm25(docs, "text", "doc_id", dir, buckets = buckets,
+      batchId = "b0")
     // the pruning stage of queryIndexBm25, isolated (the full query
     // adds dedup/agg exchanges that hide scan metrics behind AQE)
     val tBuckets = Seq("spark").map { t =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SentenceDedup
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Corpus-global sentence dedup: known boilerplate across docs is
@@ -46,12 +47,11 @@ class SentenceDedupSpec extends SparkTestBase {
 
   test("count store: two batches + a replayed batch serve verdicts " +
       "identical to the one-shot") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sent_spec").toString + "/c"
+    val dir = Scratch.dir("graft_sent_spec") + "/c"
     val sd = graft.operators.SentenceDedup
     val a = docs.where(col("doc_id") % 2 === 0)
     val b = docs.where(col("doc_id") % 2 =!= 0)
-    sd.writeCounts(a, "text", "doc_id", dir, "b1")
+    sd.appendCounts(a, "text", "doc_id", dir, "b1")
     sd.appendCounts(b, "text", "doc_id", dir, "b2")
     sd.appendCounts(b, "text", "doc_id", dir, "b2") // retried batch
     val served = sd.dedupSentencesFromStore(docs, "text", "doc_id", spark, dir)
@@ -69,11 +69,10 @@ class SentenceDedupSpec extends SparkTestBase {
 
   test("a store lagging the batch degrades unseen sentences to count 1, " +
       "never drops them") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sent_lag").toString + "/c"
+    val dir = Scratch.dir("graft_sent_lag") + "/c"
     val sd = graft.operators.SentenceDedup
     // store only knows docs 1-2; doc 3 has sentences the store never saw
-    sd.writeCounts(docs.where(col("doc_id") <= 2), "text", "doc_id", dir, "b1")
+    sd.appendCounts(docs.where(col("doc_id") <= 2), "text", "doc_id", dir, "b1")
     val r = sd.dedupSentencesFromStore(docs.where(col("doc_id") === 3L),
       "text", "doc_id", spark, dir).collect()(0)
     assert(r.getLong(1) === 4L, "all 4 sentences counted, none dropped")

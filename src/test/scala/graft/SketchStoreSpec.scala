@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SketchStore
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Mergeable HLL sketch store: replay idempotence is EXACT (coupon/
@@ -17,8 +18,8 @@ class SketchStoreSpec extends SparkTestBase {
 
   test("two-batch store estimates agree with the one-shot sketch within " +
       "sketch error (bit-equality is NOT the contract past the coupon mode)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_").toString + "/s"
-    SketchStore.writeDistinct(docs.where(col("doc_id") % 2 === 0),
+    val dir = Scratch.dir("graft_hll_") + "/s"
+    SketchStore.appendDistinct(docs.where(col("doc_id") % 2 === 0),
       "text", "lang", dir, batchId = "even")
     SketchStore.appendDistinct(docs.where(col("doc_id") % 2 === 1),
       "text", "lang", dir, batchId = "odd")
@@ -33,8 +34,8 @@ class SketchStoreSpec extends SparkTestBase {
   }
 
   test("a replayed batch is a no-op (register max is idempotent)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_").toString + "/s"
-    SketchStore.writeDistinct(docs, "text", "lang", dir, batchId = "b0")
+    val dir = Scratch.dir("graft_hll_") + "/s"
+    SketchStore.appendDistinct(docs, "text", "lang", dir, batchId = "b0")
     val before = collectEst(SketchStore.estimateDistinct(spark, dir, "lang"))
     SketchStore.appendDistinct(docs, "text", "lang", dir, batchId = "b0")
     val after = collectEst(SketchStore.estimateDistinct(spark, dir, "lang"))
@@ -42,8 +43,8 @@ class SketchStoreSpec extends SparkTestBase {
   }
 
   test("estimates land within HLL error of the true distinct counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_").toString + "/s"
-    SketchStore.writeDistinct(docs, "text", "lang", dir)
+    val dir = Scratch.dir("graft_hll_") + "/s"
+    SketchStore.appendDistinct(docs, "text", "lang", dir, batchId = "b0")
     val est = collectEst(SketchStore.estimateDistinct(spark, dir, "lang"))
     val truth = docs.groupBy("lang").agg(countDistinct("text").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -2,9 +2,9 @@ package graft
 
 import graft.operators.{Curation, FreqStore, Graphs, NearDupStore, NgramLm,
   Retrieval, SentenceDedup, Similarity, SketchStore, StoreCompaction}
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The compaction contract (VERDICT r14 top-next): for every
   * blind-append store, `compact` rewrites the accrued batches into one
@@ -21,7 +21,7 @@ class StoreCompactionSpec extends SparkTestBase {
     df.collect().map(_.toString).sorted.toSeq
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_cmp_${tag}_").toString + "/store"
+    Scratch.dir(s"graft_cmp_${tag}_") + "/store"
 
   // --------------------------------------------------- sentence counts
   private def sentDocs(ids: Range) = {
@@ -37,11 +37,11 @@ class StoreCompactionSpec extends SparkTestBase {
     val dir = tmpDir("sent")
     val plain = tmpDir("sent_plain")
     val sd = SentenceDedup
-    sd.writeCounts(sentDocs(0 until 20), "text", "doc_id", dir, "b001")
+    sd.appendCounts(sentDocs(0 until 20), "text", "doc_id", dir, "b001")
     sd.appendCounts(sentDocs(20 until 40), "text", "doc_id", dir, "b002")
     sd.appendCounts(sentDocs(20 until 40), "text", "doc_id", dir, "b002") // replay
     sd.appendCounts(sentDocs(40 until 50), "text", "doc_id", dir, "b003")
-    sd.writeCounts(sentDocs(0 until 20), "text", "doc_id", plain, "b001")
+    sd.appendCounts(sentDocs(0 until 20), "text", "doc_id", plain, "b001")
     sd.appendCounts(sentDocs(20 until 40), "text", "doc_id", plain, "b002")
     sd.appendCounts(sentDocs(20 until 40), "text", "doc_id", plain, "b002")
     sd.appendCounts(sentDocs(40 until 50), "text", "doc_id", plain, "b003")
@@ -75,7 +75,7 @@ class StoreCompactionSpec extends SparkTestBase {
       "uncommitted (pre-compaction view)") {
     val dir = tmpDir("crash")
     val sd = SentenceDedup
-    sd.writeCounts(sentDocs(0 until 15), "text", "doc_id", dir, "b001")
+    sd.appendCounts(sentDocs(0 until 15), "text", "doc_id", dir, "b001")
     sd.appendCounts(sentDocs(15 until 30), "text", "doc_id", dir, "b002")
     val pre = rowsOf(sd.storedCounts(spark, dir))
 
@@ -94,7 +94,7 @@ class StoreCompactionSpec extends SparkTestBase {
     // (b) crash AFTER commit, BEFORE GC: stash the to-be-consumed files,
     // compact, restore them — manifest exclusion must keep the view
     // identical, and the NEXT compaction must consume the garbage
-    val stash = Files.createTempDirectory("graft_cmp_stash_")
+    val stash = Scratch.dir("graft_cmp_stash_")
     val dataFiles = fs.listStatus(root).filter(_.isFile)
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
     dataFiles.foreach { f =>
@@ -150,7 +150,7 @@ class StoreCompactionSpec extends SparkTestBase {
     def batch(seed: Int) = (0 until 60).map { i =>
       ((i * 7 + seed) % 20L, (i * 13 + seed * 3) % 20L) }
       .toDF("s", "d")
-    Graphs.writeEdges(batch(1), "s", "d", dir, "b001")
+    Graphs.appendEdges(batch(1), "s", "d", dir, "b001")
     Graphs.appendEdges(batch(2), "s", "d", dir, "b002")
     Graphs.appendEdges(batch(2), "s", "d", dir, "b002") // replay
     val preEdges = rowsOf(Graphs.readEdges(spark, dir))
@@ -187,7 +187,7 @@ class StoreCompactionSpec extends SparkTestBase {
     val dir = tmpDir("ann")
     val half1 = e.where(col("vec_id") % 2 === 0)
     val half2 = e.where(col("vec_id") % 2 === 1)
-    Similarity.writeIndex(half1, dir, "embedding", bits = 6)
+    Similarity.appendIndex(half1, dir, "embedding", bits = 6)
     Similarity.appendIndex(half2, dir, "embedding", bits = 6)
     Similarity.appendIndex(half2, dir, "embedding", bits = 6) // replay
     val q = e.where(col("vec_id") === 1).select("embedding")
@@ -217,7 +217,7 @@ class StoreCompactionSpec extends SparkTestBase {
     def docs(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, s"term${i % 7} term${i % 3} filler words body $i") }
       .toDF("doc_id", "text")
-    Retrieval.writeIndexBm25(docs(0, 40), "text", "doc_id", dir,
+    Retrieval.appendIndexBm25(docs(0, 40), "text", "doc_id", dir,
       buckets = 8, batchId = "b001")
     Retrieval.appendIndexBm25(docs(40, 70), "text", "doc_id", dir,
       buckets = 8, batchId = "b002")
@@ -238,7 +238,7 @@ class StoreCompactionSpec extends SparkTestBase {
     def docs(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, s"the quick fox ${i % 5} jumps over lazy dog ${i % 3}") }
       .toDF("doc_id", "text")
-    NgramLm.writeCounts(docs(0, 30), "text", "doc_id", lmDir, "b001")
+    NgramLm.appendCounts(docs(0, 30), "text", "doc_id", lmDir, "b001")
     NgramLm.appendCounts(docs(30, 50), "text", "doc_id", lmDir, "b002")
     NgramLm.appendCounts(docs(30, 50), "text", "doc_id", lmDir, "b002")
     val probe = docs(0, 10)
@@ -251,7 +251,7 @@ class StoreCompactionSpec extends SparkTestBase {
     val fqDir = tmpDir("freq")
     def events(lo: Int, hi: Int) = (lo until hi).map { i =>
       (s"grp${i % 3}", s"item${i % 11}") }.toDF("g", "it")
-    FreqStore.writeTopK(events(0, 300), "it", "g", fqDir, k = 4,
+    FreqStore.appendTopK(events(0, 300), "it", "g", fqDir, k = 4,
       batchId = "b001")
     FreqStore.appendTopK(events(300, 600), "it", "g", fqDir, k = 4,
       batchId = "b002")
@@ -264,7 +264,7 @@ class StoreCompactionSpec extends SparkTestBase {
     val dcDir = tmpDir("domcnt")
     def doms(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, s"dom${i % 5}") }.toDF("doc_id", "dom")
-    graft.operators.Sampling.writeDomainCounts(doms(0, 200), "dom", dcDir, "b001")
+    graft.operators.Sampling.appendDomainCounts(doms(0, 200), "dom", dcDir, "b001")
     graft.operators.Sampling.appendDomainCounts(doms(200, 350), "dom", dcDir, "b002")
     graft.operators.Sampling.appendDomainCounts(doms(200, 350), "dom", dcDir, "b002")
     val preDc = rowsOf(graft.operators.Sampling.storedDomainCounts(spark, dcDir))
@@ -279,7 +279,7 @@ class StoreCompactionSpec extends SparkTestBase {
     val dir = tmpDir("hll")
     def vals(lo: Int, hi: Int) = (lo until hi).map { i =>
       (s"g${i % 4}", s"v${i % 97}") }.toDF("g", "v")
-    SketchStore.writeDistinct(vals(0, 400), "v", "g", dir, "b001")
+    SketchStore.appendDistinct(vals(0, 400), "v", "g", dir, "b001")
     SketchStore.appendDistinct(vals(400, 900), "v", "g", dir, "b002")
     SketchStore.appendDistinct(vals(400, 900), "v", "g", dir, "b002")
     val pre = rowsOf(SketchStore.estimateDistinct(spark, dir, "g"))
@@ -336,7 +336,7 @@ class StoreCompactionSpec extends SparkTestBase {
     def docs(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, s"term${i % 7} term${i % 3} filler words body $i") }
       .toDF("doc_id", "text")
-    Retrieval.writeIndexBm25(docs(0, 40), "text", "doc_id", dir,
+    Retrieval.appendIndexBm25(docs(0, 40), "text", "doc_id", dir,
       buckets = 8, batchId = "b001")
     for (sub <- Seq("postings", "stats"))
       assert(new java.io.File(s"$dir/$sub/_schema.ddl").isFile,
@@ -359,7 +359,7 @@ class StoreCompactionSpec extends SparkTestBase {
       "hint-less BM25 read must score identically")
     // the non-partitioned stores: hint present + pinned ≡ inferred
     val gDir = tmpDir("hintgraph")
-    Graphs.writeEdges((0L until 30L).map(i => (i, (i + 1) % 30))
+    Graphs.appendEdges((0L until 30L).map(i => (i, (i + 1) % 30))
       .toDF("s", "d"), "s", "d", gDir, "b001")
     assert(new java.io.File(s"$gDir/_schema.ddl").isFile)
     val gPinned = rowsOf(Graphs.readEdges(spark, gDir))
@@ -367,11 +367,11 @@ class StoreCompactionSpec extends SparkTestBase {
     assert(rowsOf(Graphs.readEdges(spark, gDir)) === gPinned)
     // every other store family writes its hint too
     val sDir = tmpDir("hintsent")
-    SentenceDedup.writeCounts(sentDocs(0 until 10), "text", "doc_id",
+    SentenceDedup.appendCounts(sentDocs(0 until 10), "text", "doc_id",
       sDir, "b001")
     assert(new java.io.File(s"$sDir/_schema.ddl").isFile)
     val aDir = tmpDir("hintann")
-    Similarity.writeIndex((0 until 8).map(i => (i.toLong,
+    Similarity.appendIndex((0 until 8).map(i => (i.toLong,
       Array.fill(8)(i.toFloat))).toDF("doc_id", "emb"), aDir, "emb",
       bits = 3, dim = 8)
     assert(new java.io.File(s"$aDir/_schema.ddl").isFile)
@@ -381,22 +381,56 @@ class StoreCompactionSpec extends SparkTestBase {
       "doc_id", "text", "url", cDir, "b001")
     assert(new java.io.File(s"$cDir/_schema.ddl").isFile)
     val fDir = tmpDir("hintfreq")
-    FreqStore.writeTopK((0 until 40).map(i => (s"i${i % 5}", s"g${i % 2}"))
+    FreqStore.appendTopK((0 until 40).map(i => (s"i${i % 5}", s"g${i % 2}"))
       .toDF("item", "grp"), "item", "grp", fDir, k = 3, batchId = "b001")
     for (sub <- Seq("items", "stats"))
       assert(new java.io.File(s"$fDir/$sub/_schema.ddl").isFile)
     val kDir = tmpDir("hintsketch")
-    SketchStore.writeDistinct((0 until 40).map(i => (i % 11, s"g${i % 2}"))
+    SketchStore.appendDistinct((0 until 40).map(i => (i % 11, s"g${i % 2}"))
       .toDF("v", "grp"), "v", "grp", kDir, "b001")
     assert(new java.io.File(s"$kDir/_schema.ddl").isFile)
     val lDir = tmpDir("hintlm")
-    NgramLm.writeCounts(docs(0, 10), "text", "doc_id", lDir, "b001")
+    NgramLm.appendCounts(docs(0, 10), "text", "doc_id", lDir, "b001")
     for (sub <- Seq("uni", "big", "stats"))
       assert(new java.io.File(s"$lDir/$sub/_schema.ddl").isFile)
     val dDir = tmpDir("hintdom")
-    graft.operators.Sampling.writeDomainCounts(
+    graft.operators.Sampling.appendDomainCounts(
       (0 until 20).map(i => s"d${i % 4}.com").toDF("dom0"), "dom0",
       dDir, "b001")
     assert(new java.io.File(s"$dDir/_schema.ddl").isFile)
+  }
+
+  // ------------------------------------------------------ schema drift
+  test("an append whose column types differ from the store's pinned " +
+      "schema throws SchemaMismatch and leaves the store as it was") {
+    import spark.implicits._
+    def rejected(dir: String)(append: => Unit): Unit = {
+      val e = intercept[StoreCompaction.SchemaMismatch](append)
+      assert(e.getMessage.contains(dir) && e.stored != e.incoming)
+    }
+    // sketch store: the group column turns from INT into STRING
+    val kDir = tmpDir("driftsketch")
+    SketchStore.appendDistinct((0 until 40).map(i => (i % 11, i % 3))
+      .toDF("v", "g"), "v", "g", kDir, "b001")
+    def sketches() = rowsOf(StoreCompaction.readVisible(spark, kDir)
+      .select(col("g"), hex(col("sketch")), col("batch_id")))
+    val kPre = sketches()
+    rejected(kDir) {
+      SketchStore.appendDistinct((0 until 40).map(i => (i % 11, s"g${i % 3}"))
+        .toDF("v", "g"), "v", "g", kDir, "b002")
+    }
+    assert(sketches() === kPre)
+    // heavy-hitter store: the item column turns from INT into STRING
+    val fDir = tmpDir("driftfreq")
+    FreqStore.appendTopK((0 until 60).map(i => (i % 7, s"g${i % 2}"))
+      .toDF("item", "grp"), "item", "grp", fDir, k = 3, batchId = "b001")
+    def freq() = Seq("items", "stats").map(t =>
+      rowsOf(StoreCompaction.readVisible(spark, s"$fDir/$t")))
+    val fPre = freq()
+    rejected(s"$fDir/items") {
+      FreqStore.appendTopK((0 until 60).map(i => (s"i${i % 7}", s"g${i % 2}"))
+        .toDF("item", "grp"), "item", "grp", fDir, k = 3, batchId = "b002")
+    }
+    assert(freq() === fPre)
   }
 }

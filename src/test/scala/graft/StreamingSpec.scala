@@ -93,7 +93,7 @@ class StreamingSpec extends SparkTestBase {
     }
     q.awaitTermination(180000)
     assert(batches >= 2, s"want multiple micro-batches, got $batches")
-    operators.Similarity.writeIndex(e, oneshot, "embedding", bits)
+    operators.Similarity.appendIndex(e, oneshot, "embedding", bits)
     val probe = e.orderBy("vec_id").select("embedding").head()
       .getSeq[Float](0)
     def top(path: String) = operators.Similarity.queryIndex(spark, path,

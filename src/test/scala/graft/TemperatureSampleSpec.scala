@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Sampling
+import org.apache.spark.graft.Scratch
 import org.apache.spark.sql.functions._
 
 /** Temperature-flattened domain sampling: tail domains under the cap
@@ -56,11 +57,10 @@ class TemperatureSampleSpec extends SparkTestBase {
 
   test("domain-count store: two batches + a replayed batch sample " +
       "identically to the one-shot, and a batch slice uses CORPUS rates") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_domcnt_spec").toString + "/c"
+    val dir = Scratch.dir("graft_domcnt_spec") + "/c"
     val a = corpus.where(col("doc_id") % 3 === 0)
     val b = corpus.where(col("doc_id") % 3 =!= 0)
-    Sampling.writeDomainCounts(a, "dom", dir, "b1")
+    Sampling.appendDomainCounts(a, "dom", dir, "b1")
     Sampling.appendDomainCounts(b, "dom", dir, "b2")
     Sampling.appendDomainCounts(b, "dom", dir, "b2") // retried batch
     val served = Sampling.temperatureSampleFromStore(corpus, "dom", "doc_id",
